@@ -1597,11 +1597,11 @@ def _q_text_dsir_sample(spark, sf_dir):
 
 
 def _q_text_dsir_xxh(spark, sf_dir):
-    # the DSIR PRODUCTION hash path (hash_impl="xxhash64", struct
-    # grams, no bigram string — 0.43x DuckDB at 100x vs 2.6x for the
-    # md5 portability default, SCALING.md).  DuckDB has no xxhash64
-    # twin, so the driver records a rows-only check here BY DESIGN;
-    # the value-level pin is local and independent instead: a
+    # the DSIR PRODUCTION hash path (hash_impl="xxhash64": vectorized
+    # numpy XXH64 of the (a, b) word-pair grams in the Arrow
+    # bucketizer, chained like Spark's xxhash64(a, b)).  DuckDB has no
+    # xxhash64 twin, so the driver records a rows-only check here BY
+    # DESIGN; the value-level pin is local and independent instead: a
     # pure-Python XXH64 reference (tests/xxh64_ref.py, validated
     # bit-for-bit against Spark's expression incl. struct chaining +
     # NULL-skip) recomputes the exact integer bucket-count table on

@@ -419,3 +419,38 @@ def test_mmr_pair_bound_falls_back(spark):
         M._mmr_driver = orig
     fast = sorted(map(tuple, mmr_rerank(df, q, k=4, pool=25).collect()))
     assert fast == slow and len(fast) == 8
+
+
+def test_mmr_duplicate_ids_bound_pair_collect(spark):
+    """The gate's pair estimate cand x (pool-1) assumes unique corpus
+    ids; duplicated ids fan the pair join out past it.  A corpus whose
+    estimate passes but whose real pair table exceeds the bound must
+    route to the distributed loop — and agree with it."""
+    import numpy as np
+
+    from yardstick_spark.llm import brute_force_knn, mmr_rerank
+    from yardstick_spark.llm import mining as M
+
+    rng = np.random.RandomState(13)
+    X = rng.randn(30, 6).astype(np.float32)
+    # every id twice, with a near-copy vector
+    df = _vecs(spark, X).unionByName(_vecs(spark, X + 1e-3))
+    q = _vecs(spark, X[:2], id_start=1000)
+    pool, bound = 10, 20
+    cand_n = brute_force_knn(df, q, k=pool, round_to=4).count()
+    assert cand_n <= bound and cand_n * (pool - 1) <= 20 * bound, \
+        "the cand-based estimate alone must pass the gate"
+    orig = M._mmr_driver
+
+    def boom(*a, **k):
+        raise AssertionError("driver path must not run")
+
+    M._mmr_driver = boom
+    try:
+        got = sorted(map(tuple, mmr_rerank(
+            df, q, k=4, pool=pool, driver_max_pool_rows=bound).collect()))
+    finally:
+        M._mmr_driver = orig
+    want = sorted(map(tuple, mmr_rerank(
+        df, q, k=4, pool=pool, driver_max_pool_rows=0).collect()))
+    assert got == want and len(got) == 8

@@ -1002,24 +1002,28 @@ def test_fold_fan_out_has_per_task_floor(spark):
     serialized Python-runner handshake — the r11 emb_margin_pairs
     regression: 32 tasks for a 2M-cell fold ran 2.3x slower than 8),
     and must fan out when the work genuinely exceeds it."""
+    import pyarrow.parquet as pq
+
     from yardstick_spark.llm import similarity as S
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     corpus = emb.selectExpr("vec_id AS __nid", "embedding AS __cv") \
         .filter("__nid IS NOT NULL")
-    rows = 500  # sf0.001 embeddings row count (parquet footer)
+    rows = sum(pq.ParquetFile(f.removeprefix("file:")).metadata.num_rows
+               for f in emb.inputFiles())
     floor = S._FOLD_CELLS_PER_PART
+    cores = spark.sparkContext.defaultParallelism
     # work below one floor unit -> unchanged partitioning
     small = S._fan_out_for_queries(corpus, max(floor // rows - 1, 1))
     assert small.rdd.getNumPartitions() == corpus.rdd.getNumPartitions()
     # work worth ~4 floor units -> fans to 1 + work // floor tasks,
-    # NOT to the core count (the per-task floor IS the target)
+    # NOT to the core count (the per-task floor IS the target), capped
+    # at the cores there are
     nq = 4 * floor // rows
     mid = S._fan_out_for_queries(corpus, nq)
-    assert mid.rdd.getNumPartitions() == 1 + rows * nq // floor >= 4
+    assert mid.rdd.getNumPartitions() == min(cores, 1 + rows * nq // floor)
     # huge work saturates at defaultParallelism
     big = S._fan_out_for_queries(corpus, 10_000_000)
-    cores = spark.sparkContext.defaultParallelism
     assert big.rdd.getNumPartitions() == cores
 
 
@@ -1069,13 +1073,25 @@ def test_folded_knn_null_ids_match_join(spark):
     assert all(r[1] is not None for r in fold)
 
 
-def test_dsir_arrow_matches_jvm_chain(spark):
-    """The Arrow gram-hash stages (fit partials + per-doc bucket
-    counts) must reproduce the JVM md5 expression chain exactly —
-    weights, n_grams, AND the raw count table including c_target
-    NULLness — on a corpus covering NULL text, empty text, single
-    words, duplicate grams, non-ASCII, whitespace runs and NULL
-    target flags."""
+def test_dsir_matches_independent_references(spark):
+    """DSIR on a corpus covering NULL text, empty text, single words,
+    duplicate grams, non-ASCII, whitespace runs and NULL target flags
+    equals references that share no code with the Arrow stages: md5
+    weights equal the DuckDB oracle SQL over the same rows, xxhash64
+    weights equal that SQL with its bucket replaced by a
+    tests/xxh64_ref UDF, and the raw (bucket, c_raw, c_target) table
+    equals a Python recount (hashlib md5 / xxh64_ref) of the
+    normalized word arrays — c_target NULLness included."""
+    import hashlib
+    import re
+
+    import duckdb
+    import pytest
+    from duckdb.typing import BIGINT, VARCHAR
+    from pyspark.sql import functions as F
+
+    import __spark_entry__ as entry
+    from xxh64_ref import spark_xxhash64
     from yardstick_spark.llm import dsir_weights
     from yardstick_spark.llm import text as T
 
@@ -1091,26 +1107,54 @@ def test_dsir_arrow_matches_jvm_chain(spark):
     ]
     docs = spark.createDataFrame(
         rows, "doc_id bigint, text string, lang string")
+    nb = 1024  # the oracle SQL's bucket count
 
-    def run(hi):
-        w = sorted(map(tuple, dsir_weights(
-            docs, "lang = 'en'", n_buckets=64, hash_impl=hi).collect()))
-        c = sorted(map(tuple, T._dsir_bucket_counts(
-            docs, "lang = 'en'", 64, "text", hi).collect()))
-        return w, c
+    def md5_bucket(a, b):
+        g = a if b is None else f"{a} {b}"
+        return int(hashlib.md5(g.encode("utf-8")).hexdigest()[:15],
+                   16) % nb
 
-    for hi in ("md5", "xxhash64"):
-        orig = T._DSIR_ARROW
-        try:
-            T._DSIR_ARROW = True
-            fast = run(hi)
-            T._DSIR_ARROW = False
-            slow = run(hi)
-        finally:
-            T._DSIR_ARROW = orig
-        assert fast == slow, hi
+    def xxh_bucket(a, b):
+        return spark_xxhash64(a, b) % nb
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents "
+                "(doc_id BIGINT, text VARCHAR, lang VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?, ?)", rows)
+    con.create_function(
+        "xxh_bucket",
+        lambda g: xxh_bucket(*(g.split(" ") + [None])[:2]),
+        [VARCHAR], BIGINT)
+    md5_sql = entry.oracle_sql()["text_dsir_weights"]
+    xxh_sql, n = re.subn(
+        r"CAST\(CONCAT\('0x', SUBSTRING\(md5\(gram\), 1, 15\)\)\s+"
+        r"AS BIGINT\) % 1024", "xxh_bucket(gram)", md5_sql)
+    assert n == 1
+    words = docs.select(
+        F.expr("CAST((lang = 'en') AS INT)").alias("t"),
+        F.expr(T._dsir_words_expr("text")).alias("ws")).collect()
+
+    for hi, sql, bucket in (("md5", md5_sql, md5_bucket),
+                            ("xxhash64", xxh_sql, xxh_bucket)):
+        got = sorted(map(tuple, dsir_weights(
+            docs, "lang = 'en'", n_buckets=nb, hash_impl=hi).collect()))
+        want = sorted(con.sql(sql).fetchall())
+        assert [r[:2] for r in got] == [r[:2] for r in want], hi
+        assert [r[2] for r in got] == pytest.approx(
+            [r[2] for r in want], abs=1e-9), hi
+        counts: dict = {}
+        for r in words:
+            ws = r["ws"] or []
+            for a, b in [(w, None) for w in ws] + list(zip(ws, ws[1:])):
+                raw, tgt = counts.get(bucket(a, b), (0, None))
+                if r["t"] is not None:
+                    tgt = (tgt or 0) + r["t"]
+                counts[bucket(a, b)] = (raw + 1, tgt)
+        got_c = {r[0]: (r[1], r[2]) for r in T._dsir_bucket_counts(
+            docs, "lang = 'en'", nb, "text", hi).collect()}
+        assert got_c == counts, hi
         # NULL-target docs leave their buckets' c_target NULL, not 0
-        assert any(r[2] is None for r in fast[1]), hi
+        assert any(t is None for _, t in got_c.values()), hi
 
 
 def test_xxh64_vectorized_matches_reference():

@@ -1238,11 +1238,9 @@ def test_dsir_weights_gramless_doc_kept_at_zero(spark):
 def test_dsir_hash_impl_fast_path(spark):
     """xxhash64 is a drop-in bucket hash: identical doc coverage and
     gram counts (hash-independent), a VALID but different bucket
-    assignment (some weight differs from md5's), the same physical
-    plan shape (same exchange/aggregate skeleton — only the hash
-    expression changes), and repartition-stable like the md5 path."""
-    import re
-
+    assignment (some weight differs from md5's), the same Arrow plan
+    contract as md5, and repartition-stable like the md5 path.  An
+    unknown hash name fails on the driver, before any Spark job."""
     import pytest
 
     from yardstick_spark.llm import dsir_weights
@@ -1261,34 +1259,6 @@ def test_dsir_hash_impl_fast_path(spark):
     en = [b[i][1] for i in range(0, 60, 3)]
     rest = [b[i][1] for i in range(60) if i % 3 != 0]
     assert min(en) > max(rest)
-
-    def shape(df):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        return [len(re.findall(p, plan))
-                for p in ("Exchange", "HashAggregate", "BroadcastHashJoin",
-                          "Generate")]
-
-    # skeleton invariance is a JVM-chain property: compare both hashes
-    # on that chain (the default path for BOTH hashes is now the Arrow
-    # gram stage, whose skeleton legitimately drops the Generate —
-    # pinned separately by
-    # test_dsir_scoring_broadcasts_buckets_two_exchanges and
-    # test_dsir_arrow_matches_jvm_chain)
-    from yardstick_spark.llm import text as T
-
-    orig = T._DSIR_ARROW
-    T._DSIR_ARROW = False
-    try:
-        md5_jvm = dsir_weights(docs, "lang = 'en'", n_buckets=256)
-        md5_jvm.collect()  # AQE: toString doubles up once executed —
-        # execute both sides before comparing the printed skeletons
-        xx_jvm = dsir_weights(docs, "lang = 'en'", n_buckets=256,
-                              hash_impl="xxhash64")
-        xx_jvm.collect()
-        assert shape(md5_jvm) == shape(xx_jvm), \
-            "hash swap must not change the JVM plan skeleton"
-    finally:
-        T._DSIR_ARROW = orig
     # the Arrow plans (both hashes) keep the scoring contract: bucket
     # table broadcast, no gram-grain Generate/explode
     for df in (md5_df, xx_df):
@@ -1299,8 +1269,40 @@ def test_dsir_hash_impl_fast_path(spark):
         docs.repartition(7), "lang = 'en'", n_buckets=256,
         hash_impl="xxhash64").collect()))
     assert again == sorted((k, *v) for k, v in b.items())
-    with pytest.raises(ValueError):
-        dsir_weights(docs, "lang = 'en'", hash_impl="sha1").collect()
+    with pytest.raises(ValueError, match="sha1"):
+        dsir_weights(docs, "lang = 'en'", hash_impl="sha1")
+
+
+def test_dsir_store_unknown_hash_fails_before_spark(spark, tmp_path):
+    """A store whose `_dsir_meta.json` names an unknown hash must fail
+    in score and update before any Spark job, instead of bucketing
+    with XXH64 (the bucketizer's non-md5 branch)."""
+    import json
+
+    import pytest
+
+    from yardstick_spark.llm import (dsir_score_with_store,
+                                     save_dsir_store, update_dsir_store)
+
+    docs = _dsir_docs(spark)
+    path = tmp_path / "store_bad"
+    save_dsir_store(docs, "lang = 'en'", str(path), n_buckets=64)
+    meta_p = path / "_dsir_meta.json"
+    meta = json.loads(meta_p.read_text())
+    meta_p.write_text(json.dumps({**meta, "hash_impl": "sha1"}))
+    sc = spark.sparkContext
+    sc.setJobGroup("dsir_bad_hash", "dsir_bad_hash")
+    try:
+        with pytest.raises(ValueError, match="sha1"):
+            dsir_score_with_store(docs, str(path))
+        with pytest.raises(ValueError, match="sha1"):
+            update_dsir_store(docs.filter("doc_id < 3"), str(path))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("dsir_bad_hash")) \
+        == []
+    assert not (path / "_dsir_pending.json").exists()
 
 
 def test_spark_xxhash64_matches_python_reference(spark):
@@ -1325,8 +1327,9 @@ def test_spark_xxhash64_matches_python_reference(spark):
 
 def test_dsir_xxhash64_bucket_counts_match_python_reference(spark):
     """The xxhash64 DSIR fit on the REAL sf0.001 documents equals a
-    Python recomputation: gram structs (shared with the md5-oracled
-    path, so gram extraction is already cross-engine-verified) are
+    Python recomputation: the (a, b) gram structs are built in Python
+    from the normalized word arrays (the same words the md5-oracled
+    path hashes, so gram extraction is already cross-engine-verified),
     re-bucketed with the reference XXH64 and re-counted — the exact
     integer (bucket, c_raw, c_target) table must match row for row.
     This gives the production hash path a true independent oracle
@@ -1335,7 +1338,7 @@ def test_dsir_xxhash64_bucket_counts_match_python_reference(spark):
 
     from xxh64_ref import spark_xxhash64
     from yardstick_spark.llm.text import (_dsir_bucket_counts,
-                                          _dsir_gram_structs)
+                                          _dsir_words_expr)
 
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet")
@@ -1344,15 +1347,15 @@ def test_dsir_xxhash64_bucket_counts_match_python_reference(spark):
            for r in _dsir_bucket_counts(
                docs, "lang = 'en'", n_buckets, "text",
                "xxhash64").collect()}
-    grams = docs.select(
-        F.expr("CAST((lang = 'en') AS INT)").alias("t"),
-        F.explode(F.expr(_dsir_gram_structs("text"))).alias("g"),
-    ).collect()
     want: dict = {}
-    for r in grams:
-        b = spark_xxhash64(r["g"]["a"], r["g"]["b"]) % n_buckets
-        raw, tgt = want.get(b, (0, 0))
-        want[b] = (raw + 1, tgt + int(r["t"]))
+    for r in docs.select(
+            F.expr("CAST((lang = 'en') AS INT)").alias("t"),
+            F.expr(_dsir_words_expr("text")).alias("ws")).collect():
+        ws = r["ws"] or []
+        for a, b in [(w, None) for w in ws] + list(zip(ws, ws[1:])):
+            bk = spark_xxhash64(a, b) % n_buckets
+            raw, tgt = want.get(bk, (0, 0))
+            want[bk] = (raw + 1, tgt + int(r["t"]))
     assert got == want
 
 

@@ -1,8 +1,12 @@
-"""Per-query stage-level measurement probe (guide §1: measure first).
+"""Per-query execution-layer probe.
 
-Runs one or more inventory queries on a bench-identical session with the
-UI enabled, then attributes wall time to Spark jobs/stages via the REST
-API.  Also writes .explain("formatted") for each probed query.
+Runs one or more inventory queries on a bench-identical session and
+reports, per timed repetition, the plan-build and execution wall time,
+the physical plan shape, and the Spark jobs, stages, tasks, executor
+time and bytes of the build and execution phases.  The counters come
+from `perfbench/sparkmetrics.py` (job groups + the application status
+store), so the session runs with the Spark UI off.  Optionally writes
+.explain("formatted") for each probed query.
 
 Usage: python tools/probe_stages.py q1,q2,... [--reps N] [--plans-dir DIR]
 Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS as in bench.py.
@@ -10,15 +14,25 @@ Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS as in bench.py.
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import tempfile
 import time
-import urllib.request
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+
+
+def _line(rec: dict) -> str:
+    return (f"jobs={rec['jobs']:3d} stages={rec['stages']:3d} "
+            f"tasks={rec['tasks']:4d} "
+            f"execRun={rec['executor_run_ms'] / 1000:7.2f}s "
+            f"cpu={rec['executor_cpu_ms'] / 1000:7.2f}s "
+            f"gc={rec['gc_ms'] / 1000:5.2f}s "
+            f"in={rec['input_bytes'] >> 20}MB "
+            f"sh_r={rec['shuffle_read_bytes'] >> 10}KB "
+            f"sh_w={rec['shuffle_write_bytes'] >> 10}KB "
+            f"driver_wait={rec['driver_wait_ms'] / 1000:6.3f}s")
 
 
 def main() -> None:
@@ -36,6 +50,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry
+    from perfbench.sparkmetrics import job_group, plan_shape, read_group
 
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -43,15 +58,14 @@ def main() -> None:
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.driver.memory", "24g")
-        .config("spark.ui.enabled", "true")
+        .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.warehouse.dir", tempfile.mkdtemp(prefix="ys_wh_"))
         .getOrCreate()
     )
-    spark.sparkContext.setLogLevel("ERROR")
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
 
     qs = entry.queries()
     entry._ys(spark, sf_dir)
@@ -71,63 +85,37 @@ def main() -> None:
         except Exception:  # noqa: BLE001
             pass
 
-    def _rest(path: str):
-        with urllib.request.urlopen(f"{ui}/api/v1/applications/{app_id}{path}") as r:
-            return json.load(r)
-
     for name in names:
         fn = qs[name]
         # warm rep (uncounted) then timed reps
         for rep in range(reps + 1):
             _clear()
             try:
-                spark.sparkContext._jvm.System.gc()
+                sc._jvm.System.gc()
             except Exception:  # noqa: BLE001
                 pass
-            jobs_before = {j["jobId"] for j in _rest("/jobs")}
-            spark.sparkContext.setJobDescription(f"{name}#rep{rep}")
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            t_build = time.perf_counter() - t0
-            df.count()
-            took = time.perf_counter() - t0
-            spark.sparkContext.setJobDescription(None)
-            print(f"\n=== {name} rep{rep}: total {took:.3f}s "
-                  f"(plan-build+eager {t_build:.3f}s)")
+            group = f"probe.{name}.{rep}"
+            with job_group(sc, group + ".build"):
+                t0 = time.time()
+                df = fn(spark, sf_dir)
+                t1 = time.time()
+            with job_group(sc, group):
+                df.count()
+                t2 = time.time()
+            print(f"\n=== {name} rep{rep}: total {t2 - t0:.3f}s "
+                  f"(plan-build+eager {t1 - t0:.3f}s)")
             if rep == 0:
                 if plans_dir is not None:
                     plan = df._sc._jvm.PythonSQLUtils.explainString(
                         df._jdf.queryExecution(), "formatted")
                     (plans_dir / f"{name}.txt").write_text(plan)
                 continue
-            jobs = [j for j in _rest("/jobs") if j["jobId"] not in jobs_before]
-            jobs.sort(key=lambda j: j["jobId"])
-            for j in jobs:
-                dur = "?"
-                if j.get("completionTime") and j.get("submissionTime"):
-                    from datetime import datetime
-
-                    fmt = "%Y-%m-%dT%H:%M:%S.%f%Z"
-                    st = datetime.strptime(j["submissionTime"], fmt)
-                    en = datetime.strptime(j["completionTime"], fmt)
-                    dur = f"{(en - st).total_seconds():7.3f}"
-                print(f"  job {j['jobId']:4d} {dur}s tasks={j['numTasks']:4d} "
-                      f"{(j.get('description') or j['name'])[:100]}")
-            # stage-level breakdown for this rep's jobs
-            stage_ids = sorted({s for j in jobs for s in j["stageIds"]})
-            stages = {s["stageId"]: s for s in _rest("/stages")
-                      if s["stageId"] in stage_ids}
-            for sid in stage_ids:
-                s = stages.get(sid)
-                if not s or s["status"] == "SKIPPED":
-                    continue
-                exec_ms = s.get("executorRunTime", 0)
-                print(f"  stage {sid:4d} execRun={exec_ms/1000:7.2f}s "
-                      f"tasks={s['numCompleteTasks']:4d} "
-                      f"in={s.get('inputBytes',0)>>20}MB "
-                      f"sh_r={s.get('shuffleReadBytes',0)>>10}KB "
-                      f"sh_w={s.get('shuffleWriteBytes',0)>>10}KB "
-                      f"{s['name'][:80]}")
+            shape = plan_shape(df)
+            print("  plan  " + " ".join(f"{k}={v}" for k, v in shape.items()))
+            print("  build " + _line(read_group(
+                sc, group + ".build", t0 * 1000.0, t1 * 1000.0)))
+            print("  exec  " + _line(read_group(
+                sc, group, t1 * 1000.0, t2 * 1000.0)))
 
 
 if __name__ == "__main__":

@@ -285,43 +285,64 @@ def _spread(df: DataFrame) -> DataFrame:
     is partition-layout independent either way (the package-wide
     determinism contract), and bigger or non-file inputs keep the
     exact probe (free on scan-only frames)."""
-    import os
-
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    try:
-        files = df.inputFiles()
-        total = 0
-        for f in files:
-            p = f.removeprefix("file:")
-            if not p.startswith("/"):
-                total = -1
-                break
-            total += os.path.getsize(p)
-        if files and total >= 0:
-            try:
-                raw = spark.conf.get(
-                    "spark.sql.files.maxPartitionBytes").lower().rstrip("b")
-                mult = 1
-                if raw and raw[-1] in "kmg":
-                    mult = {"k": 1 << 10, "m": 1 << 20,
-                            "g": 1 << 30}[raw[-1]]
-                    raw = raw[:-1]
-                mpb = int(raw) * mult
-            except Exception:  # noqa: BLE001
-                mpb = 128 << 20
-            est_splits = 1 + total // max(mpb, 1)
-            if est_splits < target:
-                return df.repartition(target)
-            # the scan alone yields >= cores splits (and any upstream
-            # shuffle only adds partitions) — executing the frame just
-            # to read a partition count would double real work at scale
-            return df
-    except Exception:  # noqa: BLE001
-        pass
+    local = _local_input(df)
+    if local is not None:
+        try:
+            raw = spark.conf.get(
+                "spark.sql.files.maxPartitionBytes").lower().rstrip("b")
+            mult = 1
+            if raw and raw[-1] in "kmg":
+                mult = {"k": 1 << 10, "m": 1 << 20,
+                        "g": 1 << 30}[raw[-1]]
+                raw = raw[:-1]
+            mpb = int(raw) * mult
+        except Exception:  # noqa: BLE001
+            mpb = 128 << 20
+        est_splits = 1 + local[1] // max(mpb, 1)
+        if est_splits < target:
+            return df.repartition(target)
+        # the scan alone yields >= cores splits (and any upstream
+        # shuffle only adds partitions) — executing the frame just to
+        # read a partition count would double real work at scale
+        return df
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def _local_input(df: DataFrame) -> tuple[list, int] | None:
+    """(local file paths, total bytes) of `df`'s scan input, read from
+    file metadata on the driver — no Spark job — or None when the
+    frame is not local-file-backed (no file scan, a remote FS, or
+    metadata that cannot be read).  The one input-size probe behind
+    the `_spread`, `_spread_by_bytes` and `_fan_out_for_queries`
+    partition gates."""
+    import os
+
+    try:
+        paths = [f.removeprefix("file:") for f in df.inputFiles()]
+        if not paths or not all(p.startswith("/") for p in paths):
+            return None
+        return paths, sum(os.path.getsize(p) for p in paths)
+    except Exception:  # noqa: BLE001
+        return None
+
+
+def _parquet_rows(paths: list) -> int | None:
+    """Row total from the parquet footers of `paths` (pyarrow metadata
+    on the driver: no Spark job, no data read), or None unless every
+    path is a readable parquet footer — a PARTIAL total would silently
+    under-partition the per-row-cost chains the row floors protect."""
+    try:
+        import pyarrow.parquet as pq
+
+        if not all(p.endswith(".parquet") for p in paths):
+            return None
+        return sum(pq.ParquetFile(p).metadata.num_rows for p in paths)
+    except Exception:  # noqa: BLE001
+        return None
 
 
 def _spread_by_bytes(df: DataFrame, bytes_per_part: int = 8 << 20,
@@ -344,40 +365,17 @@ def _spread_by_bytes(df: DataFrame, bytes_per_part: int = 8 << 20,
     payload regardless of payload size — a 2 MB corpus of 5k tiny
     images wants ~16 tasks, not 1; measured 1.58 s -> 0.59 s).  Row
     counts come from parquet footers on the driver (pyarrow metadata,
-    no Spark job, no data read); non-parquet inputs skip the floor."""
-    import os
-
-    sc = df.sparkSession.sparkContext
-    cores = sc.defaultParallelism
+    no Spark job, no data read); inputs that are not all readable
+    parquet skip the floor."""
+    cores = df.sparkSession.sparkContext.defaultParallelism
     target = cores
-    try:
-        total = 0
-        rows = 0
-        rows_known = True
-        for f in df.inputFiles():
-            p = f.removeprefix("file:")
-            if not p.startswith("/"):
-                total = 0
-                break
-            total += os.path.getsize(p)
-            if rows_per_part and rows_known and p.endswith(".parquet"):
-                try:
-                    import pyarrow.parquet as pq
-
-                    rows += pq.ParquetFile(p).metadata.num_rows
-                except Exception:  # noqa: BLE001
-                    # One unreadable footer poisons the whole count: a
-                    # PARTIAL row total would silently under-partition
-                    # the per-row-cost chain the floor exists to
-                    # protect.  Disable the floor for this input.
-                    rows = 0
-                    rows_known = False
-        if total > 0:
-            target = min(cores, 1 + total // bytes_per_part)
-            if rows_per_part and rows > 0:
-                target = min(cores, max(target, 1 + rows // rows_per_part))
-    except Exception:  # noqa: BLE001
-        pass
+    local = _local_input(df)
+    if local is not None and local[1] > 0:
+        paths, total = local
+        target = min(cores, 1 + total // bytes_per_part)
+        rows = _parquet_rows(paths) if rows_per_part else None
+        if rows:
+            target = min(cores, max(target, 1 + rows // rows_per_part))
     if target < cores:
         n = int(target)
         # repartition, not coalesce: coalesce(n) MERGES scan splits and

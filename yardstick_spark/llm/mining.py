@@ -315,12 +315,17 @@ def mmr_rerank(corpus: DataFrame, queries: DataFrame, k: int = 5,
     # _mmr_driver collects BOTH cand and pair, and pair is cand ×
     # (pool - 1) rows — so the gate bounds the pair collect too (a
     # caller-supplied pool of 500 would otherwise push 50M rows
-    # through one collect() behind a gate that reported "small").
+    # through one collect() behind a gate that reported "small").  That
+    # estimate assumes unique corpus ids — a duplicated id fans the
+    # pair join out past it — so once it passes, the collect is bounded
+    # by the cached pair table's real count (materialized here for the
+    # collect anyway).
     if driver_max_pool_rows:
         cand_n = cand.count()
-        pair_rows = cand_n * max(pool - 1, 0)
+        pair_max = 20 * driver_max_pool_rows
         if (cand_n <= driver_max_pool_rows
-                and pair_rows <= 20 * driver_max_pool_rows):
+                and cand_n * max(pool - 1, 0) <= pair_max
+                and pair.count() <= pair_max):
             return _mmr_driver(cand, pair, k, lam, onemlam)
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("neighbor_id"))

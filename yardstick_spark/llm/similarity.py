@@ -440,36 +440,18 @@ def _fan_out_for_queries(df: DataFrame, nq: int) -> DataFrame:
     precedent), so the target is exactly work // per-task-floor: a
     fold that cannot keep every fanned task busy stays on its few
     tasks instead of paying 32 handshakes to split a 2-second job."""
-    import os
+    from .dedup import _local_input, _parquet_rows
 
-    sc = df.sparkSession.sparkContext
-    cores = sc.defaultParallelism
+    cores = df.sparkSession.sparkContext.defaultParallelism
     cur = df.rdd.getNumPartitions()
     if cur >= cores:
         return df
-    total = 0
-    rows = 0
-    rows_known = True
-    try:
-        for f in df.inputFiles():
-            p = f.removeprefix("file:")
-            if not p.startswith("/"):
-                return df
-            total += os.path.getsize(p)
-            if rows_known and p.endswith(".parquet"):
-                try:
-                    import pyarrow.parquet as pq
-
-                    rows += pq.ParquetFile(p).metadata.num_rows
-                except Exception:  # noqa: BLE001
-                    rows_known = False
-            else:
-                rows_known = False
-    except Exception:  # noqa: BLE001
+    local = _local_input(df)
+    if local is None or local[1] <= 0:
         return df
-    if total <= 0:
-        return df
-    if rows_known and rows > 0:
+    paths, total = local
+    rows = _parquet_rows(paths)
+    if rows:
         target = min(cores,
                      1 + rows * max(nq, 1) // _FOLD_CELLS_PER_PART)
     else:

@@ -1420,47 +1420,28 @@ def zipf_fit(docs: DataFrame, top_n: int = 50,
     )
 
 
-def _dsir_grams(text_col: str) -> str:
-    """Word unigram + bigram multiset (WITH multiplicity — DSIR weights
-    are expectations over gram OCCURRENCES, not the distinct-set used
-    by decontamination) over the normalized text, as a SQL string."""
-    norm = _NORM.format(c=text_col)
-    words = f"filter(split({norm}, ' '), t -> t <> '')"
-    bigrams = (
-        f"CASE WHEN size({words}) >= 2 THEN "
-        f"transform(sequence(1, size({words}) - 1), "
-        f"i -> concat_ws(' ', slice({words}, i, 2))) "
-        f"ELSE CAST(array() AS ARRAY<STRING>) END"
-    )
-    return f"concat({words}, {bigrams})"
-
-
 _DSIR_SCALE = 1_000_000  # 1e-6 quantization grid for log-ratios
-
-# The md5 gram-hash chain runs in one Arrow stage (guide §4.2) instead
-# of per-gram JVM expressions; tests monkeypatch this off to pin the
-# two paths equal (test_dsir_arrow_matches_jvm_chain).
-_DSIR_ARROW = True
 
 
 def _dsir_words_expr(text_col: str) -> str:
-    """The normalized word array both gram representations derive from.
+    """The normalized word array every DSIR gram derives from.
     Normalization and word splitting stay JVM-side: Java and Python
     regex/lower semantics are not interchangeable (the minhash-port
-    rule), while bigram assembly IS portable — `concat_ws(' ', a, b)`
-    over non-NULL strings equals Python `a + ' ' + b` code point for
-    code point."""
+    rule), while bigram assembly IS portable — the Arrow stages' `a +
+    ' ' + b` over non-NULL strings equals the oracle's `concat_ws(' ',
+    a, b)` code point for code point."""
     norm = _NORM.format(c=text_col)
     return f"filter(split({norm}, ' '), t -> t <> '')"
 
 
 def _dsir_gram_buckets(words, n_buckets: int, memo: dict):
     """Bucket-count dict for one document's word array under the md5
-    bucket hash — the Python twin of explode(_dsir_grams) +
-    _dsir_bucket_expr, used by the Arrow fit/score stages.  Buckets
-    reproduce pmod(CAST(conv(substring(md5(g),1,15),16,10) AS BIGINT),
-    n_buckets) exactly: hexdigest()[:15] is the same 15 lowercase hex
-    chars, its integer value < 2^60, both operands non-negative.  The
+    bucket hash: unigram + bigram occurrences (WITH multiplicity — DSIR
+    weights are expectations over gram OCCURRENCES), each bucketed as
+    int(md5(g).hexdigest()[:15], 16) % n_buckets — exactly the portable
+    CAST('0x' || substring(md5(g), 1, 15) AS BIGINT) % n_buckets that
+    DuckDB computes (integer value < 2^60, both operands
+    non-negative), so the md5 DSIR surface is oracle-diffable.  The
     bounded per-task memo hashes each DISTINCT gram once (the minhash
     memo precedent; cleared on overflow so a huge-vocabulary corpus
     degrades to plain hashing, never to unbounded worker memory)."""
@@ -1569,19 +1550,24 @@ def _xxh64_many(bs: list, seeds) -> "object":
 
 def _dsir_xxh_buckets_batch(wss, st: tuple, n_buckets: int) -> list:
     """Per-doc bucket-count dicts for a BATCH of word arrays under the
-    xxhash64 struct-gram hash (unigram = xxh64(w, seed 42), bigram
-    chains the unigram hash as the second word's seed — exactly
-    Spark's `xxhash64(a, b)` field chaining), buckets =
+    xxhash64 gram hash (unigram = xxh64(w, seed 42), bigram chains the
+    unigram hash as the second word's seed — exactly Spark's
+    `xxhash64(a, b)` field chaining, so tests/xxh64_ref's
+    `spark_xxhash64(a, b)` is its independent reference), buckets =
     pmod(signed64, n_buckets).  Empty/None word arrays map to None.
+    Bucket assignments differ from md5's (both are uniform hashes of
+    the same gram multiset), so xxhash64 weights are not comparable
+    with an md5 oracle; everything downstream is identical.
 
     Distinct grams of the batch are memo-probed first and only the
     misses are vector-hashed (`_xxh64_many`), so a repeat-heavy corpus
     degrades to dict probes while a huge-vocabulary batch stays one
-    numpy pass per string length.  The persistent memos (`st`) follow
-    the md5 memo's bound: cleared before a batch whose misses would
-    push them past ~262k entries (never unbounded worker memory); the
-    batch-local lookup is completed BEFORE the clear so chained seeds
-    never miss."""
+    numpy pass per string length.  The persistent memos (`st`) are
+    cleared before a batch whose misses would push them past 262,144
+    entries, and that batch's misses are then stored, so each memo
+    peaks at max(262,144, one batch's distinct misses) entries — never
+    unbounded worker memory.  The batch-local lookup is completed
+    BEFORE the clear so chained seeds never miss."""
     import numpy as np
 
     uh, ub, bb = st  # word -> raw hash, word -> bucket, (a,b) -> bucket
@@ -1649,6 +1635,16 @@ def _dsir_xxh_buckets_batch(wss, st: tuple, n_buckets: int) -> list:
     return out
 
 
+def _dsir_check_hash(hash_impl: str) -> None:
+    """Driver-side guard, run before any Spark job: the bucketizer
+    treats every non-md5 name as xxhash64, so an unknown name — from a
+    caller or from a store's `_dsir_meta.json` — must fail here instead
+    of silently bucketing with XXH64."""
+    if hash_impl not in ("md5", "xxhash64"):
+        raise ValueError(
+            f"hash_impl must be 'md5' or 'xxhash64', got {hash_impl!r}")
+
+
 def _dsir_bucketizer(hash_impl: str, n_buckets: int):
     """Per-batch (word arrays -> bucket-count dicts) callable for the
     Arrow fit/score stages, owning its per-task memo state."""
@@ -1669,134 +1665,64 @@ def _dsir_bucketizer(hash_impl: str, n_buckets: int):
     return run
 
 
-def _dsir_bucket_expr(col: str, n_buckets: int, hash_impl: str) -> str:
-    """Gram -> bucket SQL under the chosen hash.
-
-    "md5" (default): portable — DuckDB computes the identical bucket
-    for the identical string gram, so the whole DSIR surface is
-    oracle-diffable.
-
-    "xxhash64": `col` is a STRUCT<a,b> gram from `_dsir_gram_structs`
-    (unigram = (w, NULL), bigram = (w_i, w_{i+1})) hashed as
-    `xxhash64(a, b)` — the production fast path.  Measured at 10x:
-    the bigram CONCAT_WS STRING MATERIALIZATION, not the hash, is the
-    dominant per-gram cost (grams-as-strings 4.0 s/pass vs
-    grams-as-structs 1.2 s with the identical aggregate), so the fast
-    path changes the gram REPRESENTATION, not just the hash fn.
-    xxhash64 skips NULL args, so the unigram struct hashes exactly as
-    xxhash64(w).  Bucket assignments differ from md5's (both are
-    valid uniform hashes of the same gram multiset), so weights are
-    NOT cross-engine comparable; everything downstream
-    (quantized-integer determinism, store mergeability, plan shape)
-    is identical."""
-    if hash_impl == "xxhash64":
-        # NULL guard: xxhash64(NULL, NULL) returns the SEED's hash,
-        # not NULL (it skips null args), while md5(NULL) is NULL — the
-        # scorer's sentinel gram relies on NULL-in -> NULL-out to
-        # reach the -1 bucket.  Real grams always have a non-NULL `a`.
-        return (f"if({col}.a IS NULL, CAST(NULL AS BIGINT), "
-                f"pmod(xxhash64({col}.a, {col}.b), {n_buckets}))")
-    if hash_impl == "md5":
-        return (f"pmod(CAST(conv(substring(md5({col}), 1, 15), 16, 10) "
-                f"AS BIGINT), {n_buckets})")
-    raise ValueError(
-        f"hash_impl must be 'md5' or 'xxhash64', got {hash_impl!r}")
-
-
-def _dsir_gram_structs(text_col: str) -> str:
-    """`_dsir_grams`' multiset as ARRAY<STRUCT<a,b>> — same grams with
-    the same multiplicity, no bigram string ever built: unigrams are
-    (w, NULL), bigrams zip the word array against its own tail."""
-    norm = _NORM.format(c=text_col)
-    words = f"filter(split({norm}, ' '), t -> t <> '')"
-    uni = (f"transform({words}, "
-           f"w -> named_struct('a', w, 'b', CAST(NULL AS STRING)))")
-    bi = (f"CASE WHEN size({words}) >= 2 THEN "
-          f"zip_with(slice({words}, 1, size({words}) - 1), "
-          f"slice({words}, 2, size({words}) - 1), "
-          f"(a, b) -> named_struct('a', a, 'b', b)) "
-          f"ELSE CAST(array() AS ARRAY<STRUCT<a STRING, b STRING>>) END")
-    return f"concat({uni}, {bi})"
-
-
-def _dsir_gram_src(text_col: str, hash_impl: str) -> str:
-    """The gram-array expression the chosen hash consumes."""
-    return (_dsir_gram_structs(text_col) if hash_impl == "xxhash64"
-            else _dsir_grams(text_col))
-
-
 def _dsir_bucket_counts(docs: DataFrame, target_cond: str,
                         n_buckets: int, text_col: str,
                         hash_impl: str = "md5") -> DataFrame:
     """(bucket, c_raw, c_target) gram-occurrence counts — the DSIR
     sufficient statistic.  Exactly mergeable (integer adds), which is
     what makes the persisted store's incremental update equal a full
-    refit."""
+    refit.
+
+    One Arrow stage hashes the grams: per task it
+    accumulates the complete bucket histogram (<= n_buckets rows) and
+    yields it once, so only bucket-grain partials cross the exchange,
+    and each gram occurrence costs one memoized dict probe (md5:
+    hashlib per distinct gram; xxhash64: vectorized numpy XXH64 per
+    distinct gram — `_dsir_xxh_buckets_batch`)."""
     from .dedup import _spread  # single-file inputs must not pin 1 core
 
-    if _DSIR_ARROW and hash_impl in ("md5", "xxhash64"):
-        # One Arrow stage replaces the per-gram hash expression chain
-        # (guide §4.2): per task it accumulates the complete bucket
-        # histogram (≤ n_buckets rows, the same partial grain the JVM
-        # hash aggregate combined to) and yields it once, so the
-        # bucket-grain exchange carries identical bytes while the
-        # per-gram string/struct materialization + hash chain (the
-        # measured dominant cost, see _dsir_bucket_expr) becomes one
-        # memoized dict probe per gram occurrence (md5: hashlib per
-        # distinct gram; xxhash64: vectorized numpy XXH64 per distinct
-        # gram — `_dsir_xxh_buckets_batch`).
-        src = _spread(docs).select(
-            F.expr(f"CAST(({target_cond}) AS INT)").alias("__t"),
-            F.expr(_dsir_words_expr(text_col)).alias("__w"))
+    _dsir_check_hash(hash_impl)
+    src = _spread(docs).select(
+        F.expr(f"CAST(({target_cond}) AS INT)").alias("__t"),
+        F.expr(_dsir_words_expr(text_col)).alias("__w"))
 
-        def _fit(batches):
-            import pandas as pd
+    def _fit(batches):
+        import pandas as pd
 
-            bucketize = _dsir_bucketizer(hash_impl, n_buckets)
-            c_raw: dict = {}
-            c_tgt: dict = {}
-            t_seen: set = set()  # buckets with ≥1 non-NULL target flag:
-            # F.sum over an all-NULL group is NULL, not 0 — preserved
-            # so the persisted counts store is byte-identical
-            for pdf in batches:
-                locs = bucketize(list(pdf["__w"]))
-                for t, loc in zip(pdf["__t"], locs):
-                    if loc is None:
-                        continue
-                    t_ok = t is not None and t == t
-                    tt = int(t) if t_ok else 0
-                    for b, c in loc.items():
-                        c_raw[b] = c_raw.get(b, 0) + c
-                        if t_ok:
-                            c_tgt[b] = c_tgt.get(b, 0) + c * tt
-                            t_seen.add(b)
-            buckets = sorted(c_raw)
-            yield pd.DataFrame({
-                "bucket": pd.Series(buckets, dtype="object"),
-                "c_raw": pd.Series([c_raw[b] for b in buckets],
-                                   dtype="object"),
-                "c_target": pd.Series(
-                    [c_tgt.get(b, 0) if b in t_seen else None
-                     for b in buckets], dtype="object"),
-            })
+        bucketize = _dsir_bucketizer(hash_impl, n_buckets)
+        c_raw: dict = {}
+        c_tgt: dict = {}
+        t_seen: set = set()  # buckets with ≥1 non-NULL target flag:
+        # F.sum over an all-NULL group is NULL, not 0 — preserved so
+        # the persisted counts store is byte-identical
+        for pdf in batches:
+            locs = bucketize(list(pdf["__w"]))
+            for t, loc in zip(pdf["__t"], locs):
+                if loc is None:
+                    continue
+                t_ok = t is not None and t == t
+                tt = int(t) if t_ok else 0
+                for b, c in loc.items():
+                    c_raw[b] = c_raw.get(b, 0) + c
+                    if t_ok:
+                        c_tgt[b] = c_tgt.get(b, 0) + c * tt
+                        t_seen.add(b)
+        buckets = sorted(c_raw)
+        yield pd.DataFrame({
+            "bucket": pd.Series(buckets, dtype="object"),
+            "c_raw": pd.Series([c_raw[b] for b in buckets],
+                               dtype="object"),
+            "c_target": pd.Series(
+                [c_tgt.get(b, 0) if b in t_seen else None
+                 for b in buckets], dtype="object"),
+        })
 
-        return (
-            src.mapInPandas(
-                _fit, "bucket bigint, c_raw bigint, c_target bigint")
-            .groupBy("bucket")
-            .agg(F.sum("c_raw").alias("c_raw"),
-                 F.sum("c_target").cast("bigint").alias("c_target"))
-        )
-    grams = _dsir_gram_src(text_col, hash_impl)
-    bucket = _dsir_bucket_expr("__g", n_buckets, hash_impl)
     return (
-        _spread(docs)
-        .select(F.expr(f"CAST(({target_cond}) AS INT)").alias("__t"),
-                F.explode(F.expr(grams)).alias("__g"))
-        .select(F.expr(bucket).alias("bucket"), "__t")
+        src.mapInPandas(
+            _fit, "bucket bigint, c_raw bigint, c_target bigint")
         .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("c_raw"),
-             F.sum("__t").cast("bigint").alias("c_target"))
+        .agg(F.sum("c_raw").alias("c_raw"),
+             F.sum("c_target").cast("bigint").alias("c_target"))
     )
 
 
@@ -1846,101 +1772,65 @@ def _dsir_lr(counts: DataFrame, alpha: float,
 def _dsir_score(docs: DataFrame, lrs: DataFrame, n_buckets: int,
                 text_col: str, id_col: str,
                 hash_impl: str = "md5") -> DataFrame:
-    """Score documents against a complete-domain (bucket, lr_q) table:
-    one scan-side explode probing the broadcast bucket relation,
-    reduced at doc grain.  A sentinel gram per document (bucket -1,
-    lr_q 0 via the unioned sentinel row) keeps gram-less (empty/NULL)
-    docs inside the aggregate WITHOUT a join-back; n_grams counts only
-    real buckets.  The join is INNER over a complete key domain, so
-    the result is exact AND no action can prune the fit subplan out of
-    a measured run (a broadcast LEFT join is cardinality-preserving
-    and count() deletes it, fit pass included — the second fake-bench
-    class this operator hit)."""
+    """Score documents against a complete-domain (bucket, lr_q) table.
+    The scan side is one Arrow stage (see _dsir_bucket_counts) that
+    emits per-doc (bucket, cnt) rows — <= distinct-buckets rows per
+    doc — probing the broadcast bucket relation, reduced at doc grain
+    with exact BIGINT sums of cnt*lr_q and IF(bucket>=0, cnt, 0).  A
+    sentinel (-1, 0) row per gram-less (empty/NULL) doc, matched by
+    the unioned sentinel bucket row, keeps it inside the aggregate
+    WITHOUT a join-back; n_grams counts only real buckets.  The join
+    is INNER over a complete key domain, so the result is exact AND
+    no action can prune the fit subplan out of a measured run (a
+    broadcast LEFT join is cardinality-preserving and count() deletes
+    it, fit pass included — the second fake-bench class this operator
+    hit)."""
     from .dedup import _spread
 
     spark = docs.sparkSession
     sentinel = spark.createDataFrame([(-1, 0)], "bucket bigint, lr_q bigint")
     rel = lrs.select("bucket", "lr_q").unionByName(sentinel)
-    if hash_impl == "xxhash64":
-        sent = ("named_struct('a', CAST(NULL AS STRING), "
-                "'b', CAST(NULL AS STRING))")
-        empty = "CAST(array() AS ARRAY<STRUCT<a STRING, b STRING>>)"
-    else:
-        sent = "CAST(NULL AS STRING)"
-        empty = "CAST(array() AS ARRAY<STRING>)"
-    if _DSIR_ARROW and hash_impl in ("md5", "xxhash64"):
-        # Arrow gram hashing (see _dsir_bucket_counts): the scan side
-        # emits per-doc (bucket, cnt) rows — ≤ distinct-buckets rows
-        # per doc instead of one exploded JVM row per gram occurrence,
-        # with no hash expression chain (md5 memo or vectorized numpy
-        # XXH64).  The broadcast INNER join over the complete bucket
-        # domain and the doc-grain aggregate are unchanged (the plan
-        # contract: bucket table broadcasts, ≤2 keyed exchanges, fit
-        # subplan un-prunable by count()); the sentinel (-1, 0) row
-        # keeps gram-less docs in the aggregate exactly as the unioned
-        # sentinel gram did, and cnt*lr_q / IF(bucket>=0, cnt, 0) are
-        # the same exact BIGINT sums.
-        src = _spread(docs).select(
-            F.col(id_col).alias("__id"),
-            F.expr(_dsir_words_expr(text_col)).alias("__w"))
-        id_type = src.schema["__id"].dataType.simpleString()
+    src = _spread(docs).select(
+        F.col(id_col).alias("__id"),
+        F.expr(_dsir_words_expr(text_col)).alias("__w"))
+    id_type = src.schema["__id"].dataType.simpleString()
 
-        def _grams(batches):
-            import pandas as pd
+    def _grams(batches):
+        import pandas as pd
 
-            bucketize = _dsir_bucketizer(hash_impl, n_buckets)
-            for pdf in batches:
-                ids: list = []
-                bks: list = []
-                cns: list = []
-                locs = bucketize(list(pdf["__w"]))
-                for i, loc in zip(pdf["__id"], locs):
-                    if loc is None:
-                        ids.append(i)
-                        bks.append(-1)
-                        cns.append(0)
-                        continue
-                    for b, c in loc.items():
-                        ids.append(i)
-                        bks.append(b)
-                        cns.append(c)
-                # object dtype: an empty batch would otherwise infer
-                # float64 columns Arrow cannot cast to bigint
-                yield pd.DataFrame(
-                    {"__id": pd.Series(ids, dtype="object"),
-                     "bucket": pd.Series(bks, dtype="object"),
-                     "cnt": pd.Series(cns, dtype="object")})
+        bucketize = _dsir_bucketizer(hash_impl, n_buckets)
+        for pdf in batches:
+            ids: list = []
+            bks: list = []
+            cns: list = []
+            locs = bucketize(list(pdf["__w"]))
+            for i, loc in zip(pdf["__id"], locs):
+                if loc is None:
+                    ids.append(i)
+                    bks.append(-1)
+                    cns.append(0)
+                    continue
+                for b, c in loc.items():
+                    ids.append(i)
+                    bks.append(b)
+                    cns.append(c)
+            # object dtype: an empty batch would otherwise infer
+            # float64 columns Arrow cannot cast to bigint
+            yield pd.DataFrame(
+                {"__id": pd.Series(ids, dtype="object"),
+                 "bucket": pd.Series(bks, dtype="object"),
+                 "cnt": pd.Series(cns, dtype="object")})
 
-        return (
-            src.mapInPandas(
-                _grams, f"__id {id_type}, bucket bigint, cnt bigint")
-            .join(F.broadcast(rel), "bucket")
-            .groupBy("__id")
-            .agg(F.sum(F.expr("IF(bucket >= 0, cnt, 0L)"))
-                 .cast("bigint").alias("n_grams"),
-                 F.sum(F.expr("cnt * lr_q")).alias("__wq"))
-            .select(
-                F.col("__id").alias(id_col),
-                F.col("n_grams").alias("n_grams"),
-                F.expr(f"round(__wq / {_DSIR_SCALE}.0D, 6) + 0.0D")
-                .alias("logw"),
-            )
-        )
-    grams = (f"concat(array({sent}), "
-             f"coalesce({_dsir_gram_src(text_col, hash_impl)}, {empty}))")
-    bucket = (f"coalesce({_dsir_bucket_expr('__g', n_buckets, hash_impl)}"
-              f", -1L)")
     return (
-        _spread(docs)
-        .select(F.col(id_col), F.explode(F.expr(grams)).alias("__g"))
-        .select(id_col, F.expr(bucket).alias("bucket"))
+        src.mapInPandas(
+            _grams, f"__id {id_type}, bucket bigint, cnt bigint")
         .join(F.broadcast(rel), "bucket")
-        .groupBy(id_col)
-        .agg(F.sum(F.expr("CAST(bucket >= 0 AS BIGINT)"))
+        .groupBy("__id")
+        .agg(F.sum(F.expr("IF(bucket >= 0, cnt, 0L)"))
              .cast("bigint").alias("n_grams"),
-             F.sum("lr_q").alias("__wq"))
+             F.sum(F.expr("cnt * lr_q")).alias("__wq"))
         .select(
-            F.col(id_col),
+            F.col("__id").alias(id_col),
             F.col("n_grams").alias("n_grams"),
             # + 0.0 canonicalizes -0.0 (round of a tiny negative) to
             # +0.0 on both engines — the emb_covariance signed-zero
@@ -1968,9 +1858,9 @@ def dsir_bucket_logratios(docs: DataFrame, target_cond: str,
     sum lr_q as exact BIGINTs, so they are bit-identical under any
     partitioning (the `covariance_matrix` determinism contract).
 
-    100 TB shape: one corpus scan (scan-side explode with map-side
-    combine collapses to bucket grain before the shuffle — at most
-    #partitions * n_buckets rows move), one `n_buckets`-row aggregate,
+    100 TB shape: one corpus scan (its Arrow stage collapses each task
+    to bucket grain before the shuffle — at most #partitions *
+    n_buckets rows move), one `n_buckets`-row aggregate,
     and a single-partition window over the tiny bucket table.  The
     output is <= n_buckets rows: broadcast material for any
     downstream scorer."""
@@ -1998,16 +1888,17 @@ def dsir_weights(docs: DataFrame, target_cond: str,
     Determinism: logw sums the 1e-6-quantized integer log-ratios
     (exact BIGINT adds, order-independent) and divides once at the
     end.  100 TB shape: the bucket table (<= n_buckets rows) is a
-    broadcast hash relation; the corpus side is one scan-side explode
-    probing it, reduced at document grain with map-side combine.  Two
-    corpus scans total (one to fit buckets, one to score) — the
-    tf-idf two-pass shape.
+    broadcast hash relation; the corpus side is one Arrow scan stage
+    emitting per-doc bucket counts that probe it, reduced at document
+    grain with map-side combine.  Two corpus scans total (one to fit
+    buckets, one to score) — the tf-idf two-pass shape.
 
-    `hash_impl="xxhash64"` swaps the per-gram md5+conv chain (the
-    measured 100x throughput residual, the portability contract) for
-    Spark's codegen'd 64-bit hash — same plan shape, same determinism,
-    different (non-oracle-comparable) bucket assignment; see
-    `_dsir_bucket_expr`."""
+    `hash_impl` is "md5" (portable: DuckDB computes the identical
+    bucket, so the whole DSIR surface is oracle-diffable) or
+    "xxhash64" (Spark's `xxhash64(a, b)` over the gram's two words —
+    same plan shape, same determinism, different bucket assignment;
+    see `_dsir_xxh_buckets_batch`).  Any other name raises ValueError
+    before a Spark job runs."""
     lrs = dsir_bucket_logratios(docs, target_cond, n_buckets=n_buckets,
                                 alpha=alpha, text_col=text_col,
                                 hash_impl=hash_impl)
@@ -2071,6 +1962,7 @@ def update_dsir_store(new_docs: DataFrame, path: str,
     meta_p = Path(path, "_dsir_meta.json")
     pend_p = Path(path, "_dsir_pending.json")
     meta = json.loads(meta_p.read_text())
+    _dsir_check_hash(meta.get("hash_impl", "md5"))
     if pend_p.exists():
         # single-writer contract: refuse to recover over a LIVE writer
         raise_if_live_writer(json.loads(pend_p.read_text()),
@@ -2153,6 +2045,7 @@ def dsir_score_with_store(docs: DataFrame, path: str,
     from pathlib import Path
 
     meta = json.loads(Path(path, "_dsir_meta.json").read_text())
+    _dsir_check_hash(meta.get("hash_impl", "md5"))
     spark = docs.sparkSession
     from .store import heal_dataset
 

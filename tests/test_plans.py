@@ -140,7 +140,7 @@ def test_knn_topk_prunes_map_side(spark):
         assert has_partial_topk(dj), f"{fn.__name__}: join path lost top-k"
 
 
-def test_dedup_verification_join_broadcast_policy(spark):
+def test_dedup_verification_join_broadcast_policy(spark, monkeypatch):
     # the corpus-sized set/signature table must never be the broadcast
     # side unconditionally: by default the static plan is a shuffle
     # join (the shape a billion-doc corpus needs; AQE broadcasts the
@@ -162,7 +162,7 @@ def test_dedup_verification_join_broadcast_policy(spark):
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        D._ALLPAIRS_ARROW = False
+        monkeypatch.setattr(D, "_allpairs_collect", lambda *a, **k: None)
         # default: no static hint — the static plan is a shuffle join
         # (AQE demotes to broadcast at runtime from observed sizes)
         assert "BroadcastHashJoin" not in explain_str(
@@ -177,7 +177,6 @@ def test_dedup_verification_join_broadcast_policy(spark):
             minhash_lsh_pairs(docs, broadcast_sets=True)
         )
     finally:
-        D._ALLPAIRS_ARROW = True
         for k, v in saved.items():
             if v is None:
                 spark.conf.unset(k)

@@ -418,7 +418,7 @@ def test_simhash_bucket_cap_wiring(spark):
     assert simhash_pairs(boiler, max_bucket_size=10).count() == 0
 
 
-def test_verify_arrow_matches_join_verifier(spark):
+def test_verify_arrow_matches_join_verifier(spark, monkeypatch):
     """The gated numpy-popcount verifier and the join-based verifier
     must produce identical pair sets AND identical rounded similarity
     values (same IEEE ratio, same shortest-repr HALF_UP rounding) for
@@ -440,26 +440,27 @@ def test_verify_arrow_matches_join_verifier(spark):
         clear_dedup_caches()
         return out
 
+    # both sides take the prefix-join candidates (the direct
+    # enumeration would otherwise answer before either verifier runs)
+    monkeypatch.setattr(D, "_allpairs_collect", lambda *a, **k: None)
     fast_c = run(ngram_containment_pairs, "containment")
     fast_j = run(ngram_jaccard_pairs, "jaccard")
-    real = D._verify_pairs_arrow
-    D._verify_pairs_arrow = lambda *a, **k: None
-    try:
-        slow_c = run(ngram_containment_pairs, "containment")
-        slow_j = run(ngram_jaccard_pairs, "jaccard")
-    finally:
-        D._verify_pairs_arrow = real
+    monkeypatch.setattr(D, "_verify_pairs_arrow", lambda *a, **k: None)
+    slow_c = run(ngram_containment_pairs, "containment")
+    slow_j = run(ngram_jaccard_pairs, "jaccard")
     assert fast_c == slow_c and len(fast_c) > 0
     assert fast_j == slow_j and len(fast_j) > 0
 
 
-def test_slim_candidates_match_position_filter_path(spark):
+def test_slim_candidates_match_position_filter_path(spark, monkeypatch):
     """The slim candidate path (no ppjoin position bookkeeping, used
     in the Arrow-verify regime) must produce identical final pairs to
     the full position-filter + join-verifier path: verification is
     exact, so the candidate superset may differ but the output cannot.
     The big-vocab path is forced by monkeypatching `_arrow_gate` off,
-    which disables BOTH the slim candidates and the Arrow verifier."""
+    which disables BOTH the slim candidates and the Arrow verifier;
+    `_allpairs_collect` is patched off on both sides so the direct
+    enumeration does not answer first."""
     from yardstick_spark.llm import (clear_dedup_caches,
                                      ngram_containment_pairs,
                                      ngram_jaccard_pairs)
@@ -475,15 +476,12 @@ def test_slim_candidates_match_position_filter_path(spark):
         clear_dedup_caches()
         return out
 
+    monkeypatch.setattr(D, "_allpairs_collect", lambda *a, **k: None)
     slim_c = run(ngram_containment_pairs, "containment")
     slim_j = run(ngram_jaccard_pairs, "jaccard")
-    real = D._arrow_gate
-    D._arrow_gate = lambda *a, **k: False
-    try:
-        full_c = run(ngram_containment_pairs, "containment")
-        full_j = run(ngram_jaccard_pairs, "jaccard")
-    finally:
-        D._arrow_gate = real
+    monkeypatch.setattr(D, "_arrow_gate", lambda *a, **k: False)
+    full_c = run(ngram_containment_pairs, "containment")
+    full_j = run(ngram_jaccard_pairs, "jaccard")
     assert slim_c == full_c and len(slim_c) > 0
     assert slim_j == full_j and len(slim_j) > 0
 
@@ -1199,12 +1197,50 @@ def test_xxh64_vectorized_matches_reference():
             xxh64(t, int(s)) for t, s in zip(tails, h1)]
 
 
-def test_allpairs_matches_prefix_join_path(spark):
+def _multiblock_rows():
+    """A hot-vocab corpus whose representatives span three 64-row
+    enumeration blocks: 52 base texts over a 12-word vocabulary, each
+    with two one-word variants (156 distinct shingle sets), ids sorted
+    so a 4-row duplicate-id run (id 62) sits at rep positions 62..65,
+    across the first block boundary, plus a NULL id copying a base
+    text (a family member that is never a rep)."""
+    import random
+
+    rng = random.Random(11)
+    vocab = ["".join(rng.choice("abcdefghij") for _ in range(rng.choice(
+        (4, 5, 6)))) for _ in range(12)]
+    texts = []
+    for _ in range(52):
+        base = [rng.choice(vocab) for _ in range(12)]
+        texts.append(" ".join(base))
+        for _ in range(2):
+            var = list(base)
+            p = rng.randrange(len(var))
+            var[p] = rng.choice([w for w in vocab if w != var[p]])
+            texts.append(" ".join(var))
+    ids = list(range(62)) + [62] * 4 + list(range(66, len(texts)))
+    return list(zip(ids, texts)) + [(None, texts[3])]
+
+
+def _assert_multiblock_reps(reps):
+    """`reps` (the family-collapse representatives the direct
+    enumeration collects) fill 3 blocks, not a whole number of them,
+    and the id-62 run straddles the block boundary at 64."""
+    ids = sorted(r["id"] for r in reps.select("id").collect())
+    pos = [i for i, x in enumerate(ids) if x == 62]
+    assert len(ids) >= 150 and len(ids) % 64, len(ids)
+    assert pos[0] < 64 <= pos[-1], pos
+
+
+def test_allpairs_matches_prefix_join_path(spark, monkeypatch):
     """The direct rep-pair enumeration (hot-vocab `_allpairs_arrow`)
     must produce identical pairs AND values to the prefix-join +
-    Arrow-verify path for both metrics, including the equal-size
-    orientation edge cases (same-text distinct ids pair; duplicate
-    ids never pair at equal sizes — SQL `<` semantics)."""
+    Arrow-verify path and to the general position-filter + join-verify
+    path for both metrics, including the equal-size orientation edge
+    cases (same-text distinct ids pair; duplicate ids never pair at
+    equal sizes — SQL `<` semantics; each duplicate-id row pairs as
+    its own document, never with itself), on a corpus inside one
+    64-row block and on one split across three."""
     from yardstick_spark.llm import (clear_dedup_caches,
                                      ngram_containment_pairs,
                                      ngram_jaccard_pairs)
@@ -1214,39 +1250,50 @@ def test_allpairs_matches_prefix_join_path(spark):
              + "klmno" * (i % 4)) for i in range(40)]
     rows += [(100, "abcde abcde xyzzy"), (101, "abcde abcde xyzzy"),
              (102, "qqqqq wwwww abcde"), (102, "qqqqq wwwww vwxyz")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    small = spark.createDataFrame(rows, "doc_id long, text string")
+    multi = spark.createDataFrame(_multiblock_rows(),
+                                  "doc_id long, text string")
+    sid_sets, universe = D._sid_sets(
+        D._shingled(multi, "text", "doc_id", 5))
+    assert universe <= 4096
+    _assert_multiblock_reps(D._family_collapse(sid_sets, "sids")[0])
+    clear_dedup_caches()
 
-    def run(fn, col):
+    def run(fn, col, docs):
         out = sorted((r.id_a, r.id_b, r[col])
                      for r in fn(docs, k=5, threshold=0.5).collect())
         clear_dedup_caches()
         return out
 
-    fast_c = run(ngram_containment_pairs, "containment")
-    fast_j = run(ngram_jaccard_pairs, "jaccard")
-    D._ALLPAIRS_ARROW = False
-    try:
-        slow_c = run(ngram_containment_pairs, "containment")
-        slow_j = run(ngram_jaccard_pairs, "jaccard")
-    finally:
-        D._ALLPAIRS_ARROW = True
-    assert fast_c == slow_c and len(fast_c) > 0
-    assert fast_j == slow_j and len(fast_j) > 0
+    for docs in (small, multi):
+        fast_c = run(ngram_containment_pairs, "containment", docs)
+        fast_j = run(ngram_jaccard_pairs, "jaccard", docs)
+        with monkeypatch.context() as m:
+            m.setattr(D, "_allpairs_collect", lambda *a, **k: None)
+            slow_c = run(ngram_containment_pairs, "containment", docs)
+            slow_j = run(ngram_jaccard_pairs, "jaccard", docs)
+            m.setattr(D, "_arrow_gate", lambda *a, **k: False)
+            join_c = run(ngram_containment_pairs, "containment", docs)
+            join_j = run(ngram_jaccard_pairs, "jaccard", docs)
+        assert fast_c == slow_c == join_c and len(fast_c) > 0
+        assert fast_j == slow_j == join_j and len(fast_j) > 0
     # the direct path really engaged: pair generation is driven by a
     # Range scan over row blocks, not a shingle self-join
-    plan = ngram_jaccard_pairs(docs, k=5, threshold=0.5) \
+    plan = ngram_jaccard_pairs(multi, k=5, threshold=0.5) \
         ._jdf.queryExecution().executedPlan().toString()
     clear_dedup_caches()
     assert "Range (0" in plan
 
 
-def test_minhash_allpairs_matches_banded_join(spark):
+def test_minhash_allpairs_matches_banded_join(spark, monkeypatch):
     """The direct signature-pair enumeration must replay the banded
     LSH join exactly: band collision (slice equality), est rounding,
     the rounded >= threshold filter, and `a.id < b.id` orientation
     (NULL text / NULL-signature and duplicate-id rows never pair at
-    the rep level).  Checked across thresholds incl. 0.0, where
-    output still requires a band collision."""
+    the rep level; collision is id-grain, as the join's candidate
+    DISTINCT on ids makes it).  Checked across thresholds incl. 0.0,
+    where output still requires a band collision, on a corpus inside
+    one 64-row block and on one split across three."""
     from yardstick_spark.llm import clear_dedup_caches, minhash_lsh_pairs
     from yardstick_spark.llm import dedup as D
 
@@ -1255,33 +1302,46 @@ def test_minhash_allpairs_matches_banded_join(spark):
     rows += [(100, "abcde abcde xyzzy"), (101, "abcde abcde xyzzy"),
              (102, "qqqqq wwwww abcde"), (102, "qqqqq wwwww vwxyz"),
              (103, None), (104, None), (105, "")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    # id 200's second row shares no band with id 201 but estimates
+    # 0.59375: the join's id-grain candidate still pairs it
+    rows += [(200, "idcd ehfch ibjda efiahd cjjh efiahd ebfe caad ccef "
+                   "efiahd"),
+             (200, "idcd ehfch ebfe efiahd cjjh efiahd ehfch caad ccef "
+                   "efiahd"),
+             (201, "idcd ehfch ibjda efiahd cjjh efiahd ehfch caad ccef "
+                   "efiahd")]
+    small = spark.createDataFrame(rows, "doc_id long, text string")
+    multi = spark.createDataFrame(_multiblock_rows(),
+                                  "doc_id long, text string")
+    _assert_multiblock_reps(D._family_collapse(
+        D.minhash_signatures(multi, k=5), "signature")[0]
+        .filter(F.col("id").isNotNull()))
+    clear_dedup_caches()
 
-    def run(th):
+    def run(th, docs):
         p = sorted((r.id_a, r.id_b, r.est_jaccard)
                    for r in minhash_lsh_pairs(
                        docs, k=5, threshold=th).collect())
         clear_dedup_caches()
         return p
 
-    for th in (0.0, 0.5, 0.9):
-        fast = run(th)
-        D._ALLPAIRS_ARROW = False
-        try:
-            slow = run(th)
-        finally:
-            D._ALLPAIRS_ARROW = True
-        assert fast == slow and (len(fast) > 0 or th == 0.9), th
+    for docs, ths in ((small, (0.0, 0.5, 0.9)), (multi, (0.5, 0.9))):
+        for th in ths:
+            fast = run(th, docs)
+            with monkeypatch.context() as m:
+                m.setattr(D, "_allpairs_collect", lambda *a, **k: None)
+                slow = run(th, docs)
+            assert fast == slow and (len(fast) > 0 or th == 0.9), th
     # a bucket-size cap must route back to the join path (dropped
     # buckets are a property of real buckets)
-    capped = minhash_lsh_pairs(docs, k=5, threshold=0.5,
+    capped = minhash_lsh_pairs(small, k=5, threshold=0.5,
                                max_bucket_size=3)
     plan = capped._jdf.queryExecution().executedPlan().toString()
     clear_dedup_caches()
     assert "Range (0" not in plan
 
 
-def test_fuzzy_collapse_matches_record_grain(spark):
+def test_fuzzy_collapse_matches_record_grain(spark, monkeypatch):
     """The identical-string family collapse in fuzzy_dedup_pairs must
     reproduce the record-grain pair list exactly: same pairs, same
     edit values, including intra-family edit-0 pairs, the weighted
@@ -1310,11 +1370,9 @@ def test_fuzzy_collapse_matches_record_grain(spark):
     for me, mb in ((0, 10_000), (1, 10_000), (2, 10_000),
                    (1, 12), (1, 5)):  # 12/5 straddle the family sizes
         fast = run(me, mb)
-        FZ._FUZZY_COLLAPSE = False
-        try:
+        with monkeypatch.context() as m:
+            m.setattr(FZ, "_collapsed_pairs", lambda *a, **k: None)
             slow = run(me, mb)
-        finally:
-            FZ._FUZZY_COLLAPSE = True
         assert fast == slow, (me, mb)
         assert len(fast) > 0 or mb == 5, (me, mb)
     # duplicate ids: the gate must fall back, outputs still equal
@@ -1323,13 +1381,10 @@ def test_fuzzy_collapse_matches_record_grain(spark):
     fast = sorted(tuple(r) for r in fuzzy_dedup_pairs(
         dup, "rid", "name", max_edit=1).collect())
     clear_dedup_caches()
-    FZ._FUZZY_COLLAPSE = False
-    try:
-        slow = sorted(tuple(r) for r in fuzzy_dedup_pairs(
-            dup, "rid", "name", max_edit=1).collect())
-        clear_dedup_caches()
-    finally:
-        FZ._FUZZY_COLLAPSE = True
+    monkeypatch.setattr(FZ, "_collapsed_pairs", lambda *a, **k: None)
+    slow = sorted(tuple(r) for r in fuzzy_dedup_pairs(
+        dup, "rid", "name", max_edit=1).collect())
+    clear_dedup_caches()
     assert fast == slow
 
 
@@ -1355,7 +1410,7 @@ def test_sid_bitmap_matches_hof(spark):
     assert any(any(w < 0 for w in v) for v in got.values()) or universe < 64
 
 
-def test_incremental_allpairs_matches_probe_join(spark):
+def test_incremental_allpairs_matches_probe_join(spark, monkeypatch):
     """The direct batch-matrix probe must replay the bucket-probe join
     exactly: id-grain candidate collision on BOTH sides (duplicate-id
     rows OR their collisions, output fans back out per signature row),
@@ -1387,11 +1442,9 @@ def test_incremental_allpairs_matches_probe_join(spark):
 
     for th in (0.2, 0.5, 0.9):
         fast = run(th)
-        D._ALLPAIRS_ARROW = False
-        try:
+        with monkeypatch.context() as m:
+            m.setattr(D, "_allpairs_collect", lambda *a, **k: None)
             slow = run(th)
-        finally:
-            D._ALLPAIRS_ARROW = True
         assert fast == slow and (len(fast) > 0 or th == 0.9), th
     # the direct path really engaged: no banded bucket join
     plan = incremental_minhash_pairs(
@@ -1407,7 +1460,7 @@ def test_incremental_allpairs_matches_probe_join(spark):
     assert "bhash" in plan
 
 
-def test_incremental_allpairs_corpus_dup_id_window(spark):
+def test_incremental_allpairs_corpus_dup_id_window(spark, monkeypatch):
     """Surgical pin of the id-grain OR on the CORPUS side: a corpus id
     with one row that collides (but scores below threshold) and one
     row that scores above threshold (but does not collide) must emit
@@ -1435,15 +1488,12 @@ def test_incremental_allpairs_corpus_dup_id_window(spark):
         return out
 
     fast = run()
-    D._ALLPAIRS_ARROW = False
-    try:
-        slow = run()
-    finally:
-        D._ALLPAIRS_ARROW = True
+    monkeypatch.setattr(D, "_allpairs_collect", lambda *a, **k: None)
+    slow = run()
     assert fast == slow == [(1, 10, 0.5)]
 
 
-def test_minhash_allpairs_non_divisible_bands(spark):
+def test_minhash_allpairs_non_divisible_bands(spark, monkeypatch):
     """num_hashes % bands != 0: the bucket join's slice() ignores the
     trailing positions, so the direct enumerations must trim the same
     way instead of crashing on the reshape (ADVICE r11, reproduced:
@@ -1467,11 +1517,9 @@ def test_minhash_allpairs_non_divisible_bands(spark):
         return out
 
     fast = run_lsh()
-    D._ALLPAIRS_ARROW = False
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(D, "_allpairs_collect", lambda *a, **k: None)
         slow = run_lsh()
-    finally:
-        D._ALLPAIRS_ARROW = True
     assert fast == slow and len(fast) > 0
 
     new = spark.createDataFrame(rows[:5], "doc_id long, text string")
@@ -1486,11 +1534,9 @@ def test_minhash_allpairs_non_divisible_bands(spark):
         return out
 
     fast = run_inc()
-    D._ALLPAIRS_ARROW = False
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(D, "_allpairs_collect", lambda *a, **k: None)
         slow = run_inc()
-    finally:
-        D._ALLPAIRS_ARROW = True
     assert fast == slow and len(fast) > 0
 
     # bands > num_hashes is degenerate (every band an empty slice, so

@@ -260,7 +260,7 @@ def test_tfidf_planted_rare_term_ranks_first(spark):
     assert top[(0, 1)] == "zyzzyva"  # df=1 dominates any common term
 
 
-def test_incremental_minhash_finds_cross_corpus_dup(spark):
+def test_incremental_minhash_finds_cross_corpus_dup(spark, monkeypatch):
     from yardstick_spark.llm import clear_dedup_caches, incremental_minhash_pairs
     from yardstick_spark.plans import explain_str
 
@@ -289,14 +289,11 @@ def test_incremental_minhash_finds_cross_corpus_dup(spark):
     # broadcasts, the corpus side must not
     from yardstick_spark.llm import dedup as D
 
-    D._ALLPAIRS_ARROW = False
-    try:
-        jpairs = incremental_minhash_pairs(new, corpus, threshold=0.5)
-        jgot = [(r["new_id"], r["corpus_id"]) for r in jpairs.collect()]
-        assert jgot == got
-        assert "BroadcastHashJoin" in explain_str(jpairs)
-    finally:
-        D._ALLPAIRS_ARROW = True
+    monkeypatch.setattr(D, "_allpairs_collect", lambda *a, **k: None)
+    jpairs = incremental_minhash_pairs(new, corpus, threshold=0.5)
+    jgot = [(r["new_id"], r["corpus_id"]) for r in jpairs.collect()]
+    assert jgot == got
+    assert "BroadcastHashJoin" in explain_str(jpairs)
     clear_dedup_caches()
 
 

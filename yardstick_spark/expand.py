@@ -221,9 +221,6 @@ def rewrite_implicit_measure_refs(
 
 # -- AGGREGATE call-site scanning ----------------------------------------------
 
-_AGG_START_RE = re.compile(r"\bAGGREGATE\s*\(", re.IGNORECASE)
-
-
 def find_aggregate_sites(sql: str) -> list[AggregateSite]:
     sites: list[AggregateSite] = []
     i, n = 0, len(sql)
@@ -1100,7 +1097,7 @@ class QueryExpander:
         if not ctx.grand_total:
             for dim in ctx.corr_dims:
                 inner_keys.append(self._inner_expr_for_dim(dim, resolved))
-                outer_keys.append(self._outer_expr_for_dim(dim, info))
+                outer_keys.append(dim)
             for dim, value in ctx.set_conditions:
                 inner_keys.append(self._inner_expr_for_dim(dim, resolved))
                 outer_keys.append(value)
@@ -1152,9 +1149,6 @@ class QueryExpander:
         if "(" in dim:
             return strip_qualifiers(dim)
         return dim.split(".")[-1].strip()
-
-    def _outer_expr_for_dim(self, dim: str, info: SelectInfo) -> str:
-        return dim
 
     def _apply_dim_exprs(self, expr: str, resolved: ResolvedMeasure) -> str:
         """Replace view dimension aliases with their defining expressions so

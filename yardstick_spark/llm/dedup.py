@@ -16,6 +16,9 @@ signature table via broadcast-able doc pairs per bucket.
 
 from __future__ import annotations
 
+import decimal
+import functools
+
 from pyspark.sql import DataFrame, functions as F
 
 # 60-bit portable hash: int(md5_hex[:15], 16).  Both Spark (conv) and
@@ -246,21 +249,6 @@ def remove_duplicate_lines_incremental(new_docs: DataFrame, spark,
                 F.lit(True).alias("__dup"))
     )
     return _reassemble_clean(lines, combined, id_col, delimiter)
-
-
-def _shingles(text_col: str, k: int) -> str:
-    """Character k-shingle array of the normalized text (SQL expr).
-
-    `sequence(1, greatest(1, len-k+1))` + `transform(substring)` stays
-    inside whole-stage codegen; short docs yield their whole text.
-    NOTE: prefer `_shingled(docs, ...)` in operators — inlining the
-    normalization here would re-run the regexp per shingle inside the
-    lambda (Spark does not CSE across lambda bodies)."""
-    norm = _norm_text(text_col)
-    return (
-        f"transform(sequence(1, greatest(1, length({norm}) - {k - 1})), "
-        f"i -> substring({norm}, i, {k}))"
-    )
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -544,40 +532,20 @@ def _hint_sets(df: DataFrame, force: bool | None) -> DataFrame:
     return F.broadcast(df) if force else df
 
 
-def _rarity_sid_table(sh: DataFrame,
-                      freq0: DataFrame | None = None,
-                      universe: int | None = None) -> tuple[DataFrame, int]:
-    """Dense global rarity ranking of distinct shingles: returns
-    ((sh, sid) mapping, universe size) with sid ordered by (df asc,
-    value asc) — the consistent total order every prefix-filter join
-    here relies on.  Shared by the Jaccard and containment joins.
+def _rarity_sid_table(freq0: DataFrame) -> DataFrame:
+    """Distributed dense rarity ranking of the distinct shingles in
+    the cached `freq0` (sh, df): returns the (sh, sid) mapping with sid ordered by
+    (df asc, value asc) — the consistent total order every
+    prefix-filter join here relies on.  `_sid_sets` calls it only above
+    200k shingles (smaller universes rank on the driver).
 
-    Never a single-partition global window: a ≤200k universe ranks on
-    the driver (one collect, mapping is broadcast anyway — 3 fewer
-    jobs); above that, range-partition by (df, sh) so partitions hold
-    disjoint ordered slices, rank within each, and add per-partition
-    offsets (one row per partition, a driver-side prefix sum)."""
+    Never a single-partition global window: range-partition by (df,
+    sh) so partitions hold disjoint ordered slices, rank within each,
+    and add per-partition offsets (one row per partition, a driver-side
+    prefix sum)."""
     from pyspark.sql import Window
 
-    npart = sh.sparkSession.sparkContext.defaultParallelism
-    # cache BEFORE repartitionByRange: its range-bounds sampling job
-    # re-evaluates the child, which would re-run the explode+groupBy.
-    # NULL shingles can't rank (the driver-side sort would compare
-    # None vs str) and never join back anyway — drop them up front.
-    # (`_sid_sets` passes its already-cached freq0/universe through so
-    # the distinct-shingle aggregation is never built twice.)
-    if freq0 is None:
-        freq0 = _cache(sh.filter(F.col("sh").isNotNull())
-                       .groupBy("sh").agg(F.count("*").alias("df")))
-    if universe is None:
-        universe = freq0.count()
-    if universe <= 200_000:
-        order = sorted((r["df"], r["sh"]) for r in freq0.collect())
-        mapping = [(sh_, i + 1) for i, (_, sh_) in enumerate(order)]
-        freq = sh.sparkSession.createDataFrame(
-            mapping, "sh string, sid bigint"
-        )
-        return freq, universe
+    npart = freq0.sparkSession.sparkContext.defaultParallelism
     ranked = _cache(
         freq0.repartitionByRange(npart, "df", "sh")
         .withColumn("pid", F.spark_partition_id())
@@ -600,29 +568,41 @@ def _rarity_sid_table(sh: DataFrame,
                        for x in (pid, off)]),
         F.col("pid"),
     ) if offsets else F.lit(0)
-    freq = ranked.withColumn(
+    return ranked.withColumn(
         "sid", (F.col("r") + off_expr).cast("long")
     ).select("sh", "sid")
-    return freq, universe
 
 
 def _sid_sets(sets0: DataFrame) -> tuple[DataFrame, int]:
-    """(id, sids, n_sh) per document with the rarity-ordered int sid
-    set, plus the universe size — the shared front half of the
+    """(id, sids, n_sh, rk) per document with the rarity-ordered int
+    sid set, plus the universe size — the shared front half of the
     Jaccard/containment prefix joins.
 
-    Small universes (the `_rarity_sid_table` ≤200k driver-ranked case)
-    skip the explode → broadcast-join → collect_list → sort_array
-    re-aggregation entirely: the ranking was ALREADY built on the
-    driver, so the sh → sid mapping rides an Arrow stage's closure and
+    `rk` hashes the sid set.  (id, sids) is unique among the reps of
+    `_family_collapse` — equal sets are one family — so (id, rk) names
+    one rep even when ids repeat, up to a 64-bit hash collision between
+    same-id rows.  The candidate and verification steps key on it, so
+    duplicate ids neither merge rows' position statistics nor fan a
+    candidate out to every row sharing its id (which paired rows with
+    themselves).
+
+    Small universes (≤200k shingles, ranked on the driver by one
+    collect of the distinct-shingle table) skip the explode →
+    broadcast-join → collect_list → sort_array re-aggregation
+    entirely: the ranking was ALREADY built on the driver, so the
+    sh → sid mapping rides an Arrow stage's closure and
     each document's cached shingle array maps to its sorted sid array
     in one vectorized pass — no second explode of the corpus, no
     ObjectHashAggregate exchange (measured ~20 s of executor time and
     one keyed shuffle per sf0.1 query).  Document rows with an EMPTY
     shingle set emit no row, exactly like the explode they replace.
-    Above 200k shingles the distributed ranked-join path runs
-    unchanged."""
+    Above 200k shingles `_rarity_sid_table` ranks them distributed and
+    the ranked-join path runs."""
     sh = sets0.select("id", F.explode("shs").alias("sh"))
+    # NULL shingles can't rank (the driver-side sort would compare None
+    # vs str) and never join back anyway — drop them up front.  Cached
+    # before any ranking: the distributed path's range-bounds sampling
+    # job would otherwise re-run the explode+groupBy.
     freq0 = _cache(sh.filter(F.col("sh").isNotNull())
                    .groupBy("sh").agg(F.count("*").alias("df")))
     universe = freq0.count()
@@ -647,7 +627,7 @@ def _sid_sets(sets0: DataFrame) -> tuple[DataFrame, int]:
             import pandas as pd
 
             for pdf in batches:
-                ids, sid_col, n_col, vs_col = [], [], [], []
+                ids, sid_col, n_col, rk_col, vs_col = [], [], [], [], []
                 for did, arr in zip(pdf["id"], pdf["shs"]):
                     if arr is None or len(arr) == 0:
                         continue
@@ -655,6 +635,7 @@ def _sid_sets(sets0: DataFrame) -> tuple[DataFrame, int]:
                     ids.append(did)
                     sid_col.append(sids)
                     n_col.append(len(sids))
+                    rk_col.append(hash(tuple(sids)))
                     if nw:
                         s = np.asarray(sids, dtype=np.int64) - 1
                         w = np.zeros(nw, dtype=np.uint64)
@@ -668,21 +649,24 @@ def _sid_sets(sets0: DataFrame) -> tuple[DataFrame, int]:
                 # declared list type
                 out = {"id": pd.Series(ids, dtype="object"),
                        "sids": pd.Series(sid_col, dtype="object"),
-                       "n_sh": pd.Series(n_col, dtype="object")}
+                       "n_sh": pd.Series(n_col, dtype="object"),
+                       "rk": pd.Series(rk_col, dtype="object")}
                 if nw:
                     out["vs"] = pd.Series(vs_col, dtype="object")
                 yield pd.DataFrame(out)
 
         return sets0.mapInPandas(
             _map_batches,
-            f"id {id_type}, sids array<bigint>, n_sh int{vs_schema}"
+            f"id {id_type}, sids array<bigint>, n_sh int, rk bigint"
+            f"{vs_schema}"
         ), universe
-    freq, universe = _rarity_sid_table(sh, freq0, universe)
+    freq = _rarity_sid_table(freq0)
     return (
         sh.join(F.broadcast(freq.select("sh", "sid")), "sh")
         .groupBy("id")
         .agg(F.sort_array(F.collect_list("sid")).alias("sids"))
         .withColumn("n_sh", F.size("sids"))
+        .withColumn("rk", F.xxhash64("sids"))
     ), universe
 
 
@@ -701,23 +685,26 @@ def _intersect_repr(isets: DataFrame, universe: int):
     allocation.  universe was counted once off the cached freq
     table; big-vocab corpora keep the sorted-array path."""
     if universe <= 4096:
-        vsets = isets.select("id", "n_sh", _bits_col(isets, universe))
+        vsets = isets.select("id", "n_sh", "rk",
+                             _bits_col(isets, universe))
         common = F.expr(
             "aggregate(zip_with(vs_a, vs_b, (x, y) -> bit_count(x & y)), "
             "0, (a, x) -> a + x)"
         )
     else:
-        vsets = isets.select("id", "n_sh", F.col("sids").alias("vs"))
+        vsets = isets.select("id", "n_sh", "rk",
+                             F.col("sids").alias("vs"))
         common = F.size(F.array_intersect("vs_a", "vs_b"))
     return vsets, common
 
 
 def _bits_col(isets: DataFrame, universe: int):
     """The dense sid-bitmap column for a small-universe sid-set table:
-    the precomputed `vs` when `_sid_sets` emitted it (the hot-vocab
-    fast path), otherwise the interpreted HOF aggregate rebuilding the
-    same words from `sids` (kept for direct callers in tests and any
-    table built by the distributed ranking path)."""
+    the precomputed `vs` when `_sid_sets` emitted it (every table it
+    builds at universe ≤ 4096, the only regime with bitmap consumers),
+    otherwise the interpreted HOF aggregate rebuilding the same words
+    from `sids` — the reference `test_sid_bitmap_matches_hof` pins the
+    numpy scatter against."""
     if "vs" in isets.columns:
         return F.col("vs")
     nw = (universe + 63) // 64
@@ -733,9 +720,9 @@ def _bits_col(isets: DataFrame, universe: int):
 def _arrow_gate(universe: int, n_reps: int) -> bool:
     """Shared admission test for `_verify_pairs_arrow`: universe fits
     64-word bitmaps AND the dense rep-bitmap matrix stays ≤ 64 MB.
-    Split out so the ppjoin builders can decide the CANDIDATE shape
+    Split out so the ppjoin builder can decide the CANDIDATE shape
     from the same facts before any join is constructed (see the slim
-    candidate path in `ngram_jaccard_pairs`)."""
+    candidate path in `_set_sim_pairs`)."""
     if universe > 4096:
         return False
     # universe == 0 (every doc shingles to empty) -> nw == 0: admit —
@@ -745,13 +732,6 @@ def _arrow_gate(universe: int, n_reps: int) -> bool:
     return n_reps <= (64 << 20) // (nw * 8)
 
 
-# In the hot-vocab regime the prefix join is pure candidate ENUMERATION
-# (measured at sf0.1: 8.8M candidates out of 12.4M possible pairs) —
-# when the rep count is small enough that enumerating every pair
-# directly is cheaper than exploding prefixes through a join + distinct
-# exchange, skip the join entirely.  Tests monkeypatch this off to pin
-# the two paths equal (test_allpairs_matches_prefix_join_path).
-_ALLPAIRS_ARROW = True
 # Work cap for direct enumeration: R*(R-1)/2 pairs x nw bitmap words of
 # vectorized AND+popcount.  2^33 word-ops spread over the cluster is a
 # few seconds at local scale; above it the prefix join's pruning (or
@@ -760,38 +740,128 @@ _ALLPAIRS_ARROW = True
 _ALLPAIRS_WORD_BUDGET = 1 << 33
 
 
-def _allpairs_r_max(universe: int) -> int:
-    """Largest admissible rep count for direct pair enumeration over a
-    `universe`-bit bitmap matrix: the R²/2·nw word budget and the
-    64 MB broadcast-matrix cap, both driver-known before any job."""
-    nw = max((universe + 63) // 64, 1)  # universe == 0 divides by 1
-    return min(int((2 * _ALLPAIRS_WORD_BUDGET / nw) ** 0.5),
-               (64 << 20) // (nw * 8))
+def _allpairs_r_max(words: int) -> int:
+    """Largest admissible row count for direct pair enumeration over a
+    matrix of `words` 64-bit words per row (a sid bitmap or a minhash
+    signature): the R²/2·words word budget and the 64 MB
+    broadcast-matrix cap, both driver-known before any job."""
+    words = max(words, 1)  # an empty universe has zero-word bitmaps
+    return min(int((2 * _ALLPAIRS_WORD_BUDGET / words) ** 0.5),
+               (64 << 20) // (words * 8))
 
 
-def _allpairs_collect(isets: DataFrame,
-                      universe: int) -> tuple[list | None, int | None]:
-    """One bounded limit-collect deciding the direct-enumeration gate
-    AND fetching the rep matrix: returns (rows, n_reps) when the rep
-    count fits `_allpairs_r_max`, else (None, None) — replacing the
-    count-then-collect pair (two driver job rounds) the ppjoin
-    builders previously paid, exactly the `_minhash_allpairs`
-    single-job pattern.  The collect also fills the family-collapse
-    cache, so a fallback `isets.count()` afterwards is a cache read."""
-    r_max = _allpairs_r_max(universe)
-    rows = isets.select("id", "n_sh",
-                        _bits_col(isets, universe)).limit(r_max + 1).collect()
-    if len(rows) > r_max:
-        return None, None
-    return rows, len(rows)
+def _allpairs_collect(df: DataFrame, n_max: int) -> list | None:
+    """The one bounded driver collect behind the direct enumerations:
+    at most `n_max` + 1 rows of `df` in ONE job, returning the rows
+    when they fit `n_max`, else None (the caller builds its join
+    path).  Deciding the gate and fetching the matrix in the same job
+    replaces a count-then-collect pair — a second AQE job round per
+    consumer query is exactly the fixed cost the direct paths exist to
+    remove.  Tests patch this to return None to pin every direct path
+    against its join."""
+    rows = df.limit(n_max + 1).collect()
+    return rows if len(rows) <= n_max else None
 
 
-def _allpairs_arrow(isets: DataFrame, universe: int, threshold: float,
-                    metric: str, n_reps: int | None,
-                    rows: list | None = None) -> DataFrame | None:
+_Q6 = decimal.Decimal("0.000001")
+
+
+def _round6(x) -> float:
+    """Spark's round(x, 6) of a double: HALF_UP on the shortest-repr
+    decimal, so the numpy scorers emit exactly the SQL paths' values."""
+    return float(decimal.Decimal(repr(float(x)))
+                 .quantize(_Q6, rounding=decimal.ROUND_HALF_UP))
+
+
+@functools.lru_cache(maxsize=1)
+def _popcount16():
+    import numpy as np
+
+    return np.array([bin(i).count("1") for i in range(1 << 16)],
+                    dtype=np.uint16)
+
+
+def _common_bits(inter):
+    """|A ∩ B| per row, as float64, from `inter` = A & B: a 2-D uint64
+    sid-bitmap matrix.  One 16-bit popcount table per worker process
+    serves both bitmap scorers."""
+    import numpy as np
+
+    return (_popcount16()[inter.view(np.uint16)].sum(axis=1)
+            .astype(np.float64))
+
+
+def _overlap_ratio(metric: str, common, n_a, n_b, least):
+    """The metric's similarity from |A ∩ B| and the two set sizes: one
+    definition for the SQL verify join (`least` = F.least) and the
+    numpy scorers (`least` = np.minimum), in the same IEEE order."""
+    if metric == "containment":
+        return common / least(n_a, n_b)
+    return common / (n_a + n_b - common)
+
+
+def _rep_pair_blocks(spark, rows: list, id_type: str, value_col: str,
+                     build, score) -> DataFrame:
+    """The direct rep-pair enumeration driver shared by the bitmap
+    (`_allpairs_arrow`) and minhash (`_minhash_allpairs`) scorers —
+    returns (id_a, id_b, <value_col>) for every pair i < j of `rows`
+    (an admitted `_allpairs_collect` result) that `score` keeps.
+
+    The rows are id-sorted (None first) so equal ids form adjacent
+    runs: run_end[i] is the smallest j > i with ids[j] != ids[i], which
+    both scorers need to replay SQL `<` on NULL and duplicate ids.
+    `build(sorted rows)` makes the scorer's arrays, which ride one
+    Spark broadcast with the ids and run_end; a spark.range of row
+    blocks, repartitioned to min(n_blocks, cores), drives the scoring.
+    On the executors `score(i, run_end, data)` returns (t, value) for
+    each kept partner j = i + 1 + t of row i among rows i+1..R-1."""
+    import numpy as np
+
+    rows = sorted(rows, key=lambda r: (r["id"] is not None, r["id"]))
+    R = len(rows)
+    ids = [r["id"] for r in rows]
+    run_end = np.empty(R, dtype=np.int64)
+    j = R
+    for i in range(R - 1, -1, -1):
+        if i + 1 == R or ids[i + 1] != ids[i]:
+            j = i + 1
+        run_end[i] = j
+    bc = spark.sparkContext.broadcast((ids, run_end, build(rows)))
+    blk = 64  # rows per block: blk*R*words word-ops per task unit
+    n_blocks = max(1, (R + blk - 1) // blk)
+    par = spark.sparkContext.defaultParallelism
+    blocks = spark.range(n_blocks).repartition(min(n_blocks, max(par, 1)))
+
+    def _score(batches):
+        import pandas as pd
+
+        ids, run_end, data = bc.value
+        R = len(ids)
+        for pdf in batches:
+            out_a: list = []
+            out_b: list = []
+            out_v: list = []
+            for b0 in pdf["id"]:
+                lo = int(b0) * blk
+                for i in range(lo, min(lo + blk, R - 1)):
+                    for t, v in score(i, run_end, data):
+                        out_a.append(ids[i])
+                        out_b.append(ids[i + 1 + t])
+                        out_v.append(v)
+            yield pd.DataFrame(
+                {"id_a": pd.Series(out_a, dtype="object"),
+                 "id_b": pd.Series(out_b, dtype="object"),
+                 value_col: pd.Series(out_v, dtype="float64")})
+
+    return blocks.mapInPandas(
+        _score, f"id_a {id_type}, id_b {id_type}, {value_col} double")
+
+
+def _allpairs_arrow(isets: DataFrame, rows: list, universe: int,
+                    threshold: float, metric: str) -> DataFrame:
     """Direct rep-pair enumeration + popcount scoring for hot-vocab
-    corpora — returns rep-level (id_a, id_b, <metric>) pairs, or None
-    when the gate does not admit (caller builds the prefix join).
+    corpora — rep-level (id_a, id_b, <metric>) pairs over the admitted
+    (id, n_sh, vs) rows of `_allpairs_collect`.
 
     Replaces prefix-explode -> self-join -> keys-only distinct ->
     Arrow verify with: collect the (already-gated ≤64 MB) rep bitmap
@@ -810,112 +880,49 @@ def _allpairs_arrow(isets: DataFrame, universe: int, threshold: float,
     (max(n)*t <= min(n), same float multiply), and the ratio >=
     threshold keep with the same shortest-repr HALF_UP rounding as
     `_verify_pairs_arrow`.  Pairs sharing no shingle score ratio 0 and
-    are dropped by any threshold > 0 (the gate requires it), so the
-    enumerated superset of the prefix-join candidates changes nothing.
+    are dropped by any threshold > 0 (the caller's gate requires it),
+    so the enumerated superset of the prefix-join candidates changes
+    nothing.
     """
-    if universe > 4096 or threshold <= 0 or not _ALLPAIRS_ARROW:
-        return None
-    nw = (universe + 63) // 64
-    if rows is None:
-        if n_reps is None:
-            n_reps = isets.count()
-        if not _arrow_gate(universe, n_reps):
-            return None
-        if n_reps * (n_reps - 1) // 2 * nw > _ALLPAIRS_WORD_BUDGET:
-            return None
-        rows = isets.select("id", "n_sh",
-                            _bits_col(isets, universe)).collect()
     import numpy as np
 
-    # id-sorted (None first) so equal ids form adjacent runs: the
-    # equal-size orientation check needs "ids comparable and unequal"
-    rows = sorted(rows, key=lambda r: (r["id"] is not None, r["id"]))
-    R = len(rows)
-    ids = [r["id"] for r in rows]
-    none_mask = np.array([i is None for i in ids], dtype=bool)
-    # run_end[i] = smallest j > i with ids[j] != ids[i] (same-id runs
-    # are adjacent after the sort)
-    run_end = np.empty(R, dtype=np.int64)
-    j = R
-    for i in range(R - 1, -1, -1):
-        if i + 1 == R or ids[i + 1] != ids[i]:
-            j = i + 1
-        run_end[i] = j
-    ns = np.array([r["n_sh"] for r in rows], dtype=np.float64)
-    mat = (np.asarray([r["vs"] for r in rows], dtype=np.int64)
-           .view(np.uint64).reshape(R, nw)) if R else np.zeros(
-               (0, nw), dtype=np.uint64)
-    spark = isets.sparkSession
-    bc = spark.sparkContext.broadcast((ids, none_mask, run_end, ns, mat))
-    id_type = isets.schema["id"].dataType.simpleString()
-    blk = 64  # rows per block: blk*R*nw word-ops per task unit
-    n_blocks = max(1, (R + blk - 1) // blk)
-    par = spark.sparkContext.defaultParallelism
-    blocks = spark.range(n_blocks).repartition(min(n_blocks, max(par, 1)))
+    nw = (universe + 63) // 64
 
-    def _score(batches):
-        import decimal
+    def build(rows):
+        mat = (np.asarray([r["vs"] for r in rows], dtype=np.int64)
+               .view(np.uint64).reshape(len(rows), nw)) if rows else (
+                   np.zeros((0, nw), dtype=np.uint64))
+        return (np.array([r["id"] is None for r in rows], dtype=bool),
+                np.array([r["n_sh"] for r in rows], dtype=np.float64), mat)
 
-        import numpy as np
-        import pandas as pd
+    def score(i, run_end, data):
+        none_mask, ns, m = data
+        nj = ns[i + 1:]
+        ratio = _overlap_ratio(metric, _common_bits(m[i] & m[i + 1:]),
+                               ns[i], nj, np.minimum)
+        keep = ratio >= threshold
+        if metric == "jaccard":
+            # ppjoin length filter, same float arithmetic
+            keep &= (np.maximum(ns[i], nj) * threshold
+                     <= np.minimum(ns[i], nj))
+        eq = nj == ns[i]
+        if eq.any():
+            # equal sizes order by id: NULL or duplicate ids cannot
+            # satisfy SQL `<`, so those pairs never existed in the join
+            # path
+            disallowed = (none_mask[i + 1:] | none_mask[i]
+                          | (np.arange(i + 1, len(ns)) < run_end[i]))
+            keep &= ~(eq & disallowed)
+        return [(t, _round6(ratio[t])) for t in np.nonzero(keep)[0]]
 
-        ids, none_mask, run_end, ns, m = bc.value
-        R = len(ids)
-        lut = np.array([bin(i).count("1") for i in range(1 << 16)],
-                       dtype=np.uint16)
-        q6 = decimal.Decimal("0.000001")
-        for pdf in batches:
-            out_a: list = []
-            out_b: list = []
-            out_v: list = []
-            for b0 in pdf["id"]:
-                lo = int(b0) * blk
-                hi = min(lo + blk, R)
-                for i in range(lo, hi):
-                    if i + 1 >= R:
-                        continue
-                    inter = (m[i] & m[i + 1:]).view(np.uint16)
-                    common = lut[inter].reshape(R - i - 1, -1).sum(
-                        axis=1).astype(np.float64)
-                    nj = ns[i + 1:]
-                    if metric == "containment":
-                        denom = np.minimum(ns[i], nj)
-                    else:
-                        denom = ns[i] + nj - common
-                    ratio = common / denom
-                    keep = ratio >= threshold
-                    if metric != "containment":
-                        # ppjoin length filter, same float arithmetic
-                        keep &= (np.maximum(ns[i], nj) * threshold
-                                 <= np.minimum(ns[i], nj))
-                    eq = nj == ns[i]
-                    if eq.any():
-                        # equal sizes order by id: NULL or duplicate
-                        # ids cannot satisfy SQL `<`, so those pairs
-                        # never existed in the join path
-                        disallowed = (none_mask[i + 1:] | none_mask[i]
-                                      | (np.arange(i + 1, R)
-                                         < run_end[i]))
-                        keep &= ~(eq & disallowed)
-                    for t in np.nonzero(keep)[0]:
-                        out_a.append(ids[i])
-                        out_b.append(ids[i + 1 + t])
-                        out_v.append(float(
-                            decimal.Decimal(repr(float(ratio[t])))
-                            .quantize(q6,
-                                      rounding=decimal.ROUND_HALF_UP)))
-            yield pd.DataFrame(
-                {"id_a": pd.Series(out_a, dtype="object"),
-                 "id_b": pd.Series(out_b, dtype="object"),
-                 metric: pd.Series(out_v, dtype="float64")})
-
-    return blocks.mapInPandas(
-        _score, f"id_a {id_type}, id_b {id_type}, {metric} double")
+    return _rep_pair_blocks(isets.sparkSession, rows,
+                            isets.schema["id"].dataType.simpleString(),
+                            metric, build, score)
 
 
 def _verify_pairs_arrow(cand: DataFrame, isets: DataFrame, universe: int,
                         threshold: float, metric: str,
-                        n_reps: int | None = None) -> DataFrame | None:
+                        n_reps: int | None) -> DataFrame | None:
     """Vectorized candidate verification for hot-vocabulary corpora —
     returns rep-level (id_a, id_b, <metric>) pairs, or None when the
     gate does not apply (caller falls back to the join verifiers).
@@ -929,16 +936,17 @@ def _verify_pairs_arrow(cand: DataFrame, isets: DataFrame, universe: int,
     (interpreted per pair — bimodal 47 s / 1100 s depending on C2),
     and an unrolled bit_count sum generates a method HotSpot refuses
     to JIT (stable 540 s).  Here the candidate stream crosses ONE
-    Arrow boundary carrying only (id_a, id_b, n_a, n_b) — never the
+    Arrow boundary carrying only (id, rk, n) per side — never the
     sets — and each batch resolves intersections as numpy popcounts
     against a dense rep-bitmap matrix shipped once per executor as a
     Spark broadcast (the `decontaminate` closure precedent, made
     explicit because the matrix can reach tens of MB).
 
-    Gate: universe ≤ 4096 (bitmaps ≤ 64 words) AND the collapsed rep
-    count keeps the matrix ≤ 64 MB.  Both sides were already driver-
-    known (universe from the freq0 count; the rep count is one cheap
-    job on the family-collapse cache).  Above the gate: None.
+    Gate (`_arrow_gate`): universe ≤ 4096 (bitmaps ≤ 64 words) AND the
+    collapsed rep count keeps the matrix ≤ 64 MB.  Both sides are
+    driver-known before this runs (universe from the freq0 count,
+    `n_reps` — None above 4096 — from the family-collapse cache).
+    Above the gate: None.
 
     Exactness: popcount intersection = |A ∩ B| exactly; the metric
     ratio and ≥-threshold comparison are the same IEEE doubles the
@@ -946,52 +954,36 @@ def _verify_pairs_arrow(cand: DataFrame, isets: DataFrame, universe: int,
     decimals — Spark's round() semantics
     (`test_verify_arrow_matches_join_verifier` pins both metrics'
     pair sets and values against the join verifier)."""
-    if universe > 4096:
-        return None
-    if n_reps is None:
-        n_reps = isets.count()
     if not _arrow_gate(universe, n_reps):
         return None
     nw = (universe + 63) // 64
     import numpy as np
 
-    rows = isets.select("id", _bits_col(isets, universe)).collect()
-    idx = {r["id"]: i for i, r in enumerate(rows)}
+    rows = isets.select("id", "rk", _bits_col(isets, universe)).collect()
+    idx = {(r["id"], r["rk"]): i for i, r in enumerate(rows)}
     mat = np.asarray([r["vs"] for r in rows], dtype=np.int64).view(np.uint64)
     mat = mat.reshape(len(rows), nw)
     bc = cand.sparkSession.sparkContext.broadcast((idx, mat))
     id_type = isets.schema["id"].dataType.simpleString()
 
     def _verify(batches):
-        import decimal
-
         import numpy as np
         import pandas as pd
 
         lookup, m = bc.value
-        lut = np.array([bin(i).count("1") for i in range(1 << 16)],
-                       dtype=np.uint16)
-        q6 = decimal.Decimal("0.000001")
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ia = pdf["id_a"].map(lookup).to_numpy(dtype=np.int64)
-            ib = pdf["id_b"].map(lookup).to_numpy(dtype=np.int64)
-            inter = (m[ia] & m[ib]).view(np.uint16)
-            common = lut[inter].sum(axis=1).astype(np.float64)
-            n_a = pdf["n_a"].to_numpy(dtype=np.float64)
-            n_b = pdf["n_b"].to_numpy(dtype=np.float64)
-            if metric == "containment":
-                denom = np.minimum(n_a, n_b)
-            else:
-                denom = n_a + n_b - common
-            ratio = common / denom
+            ia = np.array([lookup[x] for x in zip(pdf["id_a"], pdf["rk_a"])],
+                          dtype=np.int64)
+            ib = np.array([lookup[x] for x in zip(pdf["id_b"], pdf["rk_b"])],
+                          dtype=np.int64)
+            ratio = _overlap_ratio(
+                metric, _common_bits(m[ia] & m[ib]),
+                pdf["n_a"].to_numpy(dtype=np.float64),
+                pdf["n_b"].to_numpy(dtype=np.float64), np.minimum)
             keep = ratio >= threshold
-            vals = [
-                float(decimal.Decimal(repr(float(r)))
-                      .quantize(q6, rounding=decimal.ROUND_HALF_UP))
-                for r in ratio[keep]
-            ]
+            vals = [_round6(r) for r in ratio[keep]]
             yield pd.DataFrame(
                 {"id_a": pdf["id_a"][keep],
                  "id_b": pdf["id_b"][keep],
@@ -1000,6 +992,196 @@ def _verify_pairs_arrow(cand: DataFrame, isets: DataFrame, universe: int,
 
     return cand.mapInPandas(
         _verify, f"id_a {id_type}, id_b {id_type}, {metric} double")
+
+
+def _set_sim_pairs(docs: DataFrame, text_col: str, id_col: str, k: int,
+                   threshold: float, metric: str,
+                   broadcast_sets: bool | None,
+                   max_broadcast_pairs: int | None) -> DataFrame:
+    """The exact set-similarity join behind `ngram_jaccard_pairs`
+    (metric "jaccard") and `ngram_containment_pairs` ("containment"):
+    prefix filtering (ppjoin, Xiao et al., WWW 2008).  The two metrics
+    differ only in the smaller side's prefix fraction (2t/(1+t) vs t),
+    the larger side's probe (Jaccard prefix t vs the full set), the
+    Jaccard length filter, the overlap bound and the ratio
+    (`_overlap_ratio`); every other step is this one pipeline."""
+    jac = metric == "jaccard"
+    # shingle each doc ONCE; map shingles to dense int ids ordered by
+    # global rarity (df asc, value asc) so (a) the prefix-filter total
+    # order is consistent and (b) verification intersects int arrays,
+    # not strings
+    sets0 = _shingled(docs, text_col, id_col, k)
+    sid_sets, universe = _sid_sets(sets0)
+    # identical shingle SETS collapse to one representative before the
+    # prefix join (see _family_collapse): exact copies and boilerplate
+    # families otherwise inflate every candidate bucket quadratically
+    # (measured: 10x-replicated corpus took the sf0.1 ppjoin from
+    # 6.8 s to 582 s; collapsed it is pair-OUTPUT-bound).  Pairs are
+    # re-expanded by _family_expand with bit-identical values (the
+    # similarity of identical sets is exactly 1.0, and a cross-family
+    # value is a pure function of the representatives' sets).
+    # (no caller-side _cache: _family_collapse reads sid_sets exactly
+    # once to build its cached `tagged` frame — the tagged cache IS
+    # the barrier, a second cache here would only double the
+    # persisted footprint)
+    isets, members = _family_collapse(sid_sets, "sids")
+
+    def expand(rep_pairs):
+        # restore the numeric id_a < id_b output contract (candidate
+        # orientation is by set size, not id)
+        return _family_expand(
+            rep_pairs.select(F.least("id_a", "id_b").alias("id_a"),
+                             F.greatest("id_a", "id_b").alias("id_b"),
+                             metric),
+            members, metric, threshold)
+
+    # hot vocab + small rep count: enumerate rep pairs directly instead
+    # of exploding prefixes through a join + distinct — in the hot-vocab
+    # regime the prefix join is pure candidate ENUMERATION (measured at
+    # sf0.1: 8.8M candidates out of 12.4M possible pairs, worst for
+    # containment, which has no length filter).  threshold > 0 because
+    # pairs sharing no shingle score 0 and never meet in the prefix
+    # join.  The bounded collect decides the gate AND fetches the
+    # matrix; it also fills the family-collapse cache, so the fallback
+    # count is a cache read.
+    n_reps = None
+    if universe <= 4096:
+        rows = None
+        if threshold > 0:
+            rows = _allpairs_collect(
+                isets.select("id", "n_sh", _bits_col(isets, universe)),
+                _allpairs_r_max((universe + 63) // 64))
+        if rows is not None:
+            return expand(_allpairs_arrow(isets, rows, universe,
+                                          threshold, metric))
+        n_reps = isets.count()
+    # In the Arrow-verify regime (hot vocab, `_arrow_gate`) the ppjoin
+    # position filter is pure overhead: the hot vocabulary defeats the
+    # bound (measured at sf0.1: it killed ~0 % of the Jaccard collision
+    # rows, and 2 of 29 M containment collision rows) while its pos
+    # column and max(pos) aggregates dominate the candidate exchange.
+    # Verification is EXACT, so any candidate superset that keeps
+    # pairs distinct is result-identical — the slim path explodes
+    # prefixes without positions and dedups with a keys-only
+    # aggregate.  Big-vocab corpora (the 100 TB shape) keep the
+    # position filter: there it prunes candidates ~20x before
+    # verification.
+    slim = n_reps is not None and _arrow_gate(universe, n_reps)
+
+    def _prefix(frac):
+        # the first |S| - ceil(frac*|S|) + 1 rarest sids (None: the
+        # full set).  The tiny epsilon inside ceil() guards against
+        # float round-up (a too-short prefix would DROP pairs; epsilon
+        # can only lengthen it).
+        sids = F.col("sids")
+        if frac is not None:
+            plen = (F.col("n_sh")
+                    - F.ceil(F.lit(frac) * F.col("n_sh") - F.lit(1e-9))
+                    + 1).cast("int")
+            sids = F.slice("sids", F.lit(1), plen)
+        if slim:
+            return isets.select("id", "n_sh", "rk",
+                                F.explode(sids).alias("sid"))
+        return isets.select("id", "n_sh", "rk",
+                            F.posexplode(sids).alias("pos", "sid"))
+
+    # Candidates pair the SMALLER doc's prefix (side a) with the larger
+    # doc's probe (side b).  Jaccard (asymmetric ppjoin prefixes): for
+    # n_a <= n_b with J >= t the required overlap is
+    # alpha = ceil(t/(1+t)*(n_a+n_b)) >= ceil(2t/(1+t)*n_a) and
+    # >= ceil(t*n_b), so a only needs its midprefix (~0.11|S| at
+    # t=0.8) while b needs the full Jaccard prefix (~0.2|S|) — roughly
+    # halving collision rows and candidates vs the symmetric prefix
+    # join.  Containment: overlap >= ceil(t*n_a), so a's prefix must
+    # hit b's FULL set; no length filter exists (any size ratio is
+    # legal), which is exactly why the prefix side must be the smaller
+    # doc.  Both joins are on rare sid keys: the full-set side's
+    # fan-out per sid is that shingle's df, which the rarity order
+    # keeps minimal.
+    prefix_a = _prefix(2 * threshold / (1 + threshold) if jac
+                       else threshold)
+    prefix_b = _prefix(threshold if jac else None)
+    # epsilon inside ceil can only shrink the bound (safe direction)
+    if jac:
+        need = F.ceil(
+            (F.lit(threshold / (1 + threshold))
+             * (F.col("n_a") + F.col("n_b"))) - F.lit(1e-9)
+        )
+    else:
+        need = F.ceil(F.lit(threshold) * F.col("n_a") - F.lit(1e-9))
+    on = (
+        (F.col("a.sid") == F.col("b.sid"))
+        # size-ordered orientation: a is the smaller-set doc
+        & ((F.col("a.n_sh") < F.col("b.n_sh"))
+           | ((F.col("a.n_sh") == F.col("b.n_sh"))
+              & (F.col("a.id") < F.col("b.id"))))
+    )
+    if jac:
+        # length filter: J >= t requires n_a >= t*n_b
+        on &= F.col("b.n_sh") * F.lit(threshold) <= F.col("a.n_sh")
+    joined = prefix_a.alias("a").join(prefix_b.alias("b"), on)
+    keys = (F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
+            F.col("a.rk").alias("rk_a"), F.col("b.rk").alias("rk_b"),
+            F.col("a.n_sh").alias("n_a"), F.col("b.n_sh").alias("n_b"))
+    if slim:
+        cand = joined.select(*keys).distinct()
+    else:
+        # ppjoin position filter: the true overlap of a pair is at most
+        # (matched prefix collisions) + min(suffix remaining after the
+        # LAST matched position on each side), and the metric forces
+        # overlap >= need.  Aggregating the collision rows per pair
+        # (same shuffle a plain .distinct() pays) lets that bound
+        # discard most collision-only pairs BEFORE the verification
+        # join — on the hot-vocab corpus it cuts surviving candidates
+        # ~20x.
+        cand = (
+            joined
+            .groupBy(*keys)
+            .agg(
+                F.count("*").alias("c"),
+                F.max("a.pos").alias("pmax_a"),
+                F.max("b.pos").alias("pmax_b"),
+            )
+            .filter(
+                F.col("c")
+                + F.least(F.col("n_a") - F.col("pmax_a") - 1,
+                          F.col("n_b") - F.col("pmax_b") - 1)
+                >= need
+            )
+            .select("id_a", "id_b", "rk_a", "rk_b", "n_a", "n_b")
+        )
+    # hot-vocab candidate sets make the per-candidate intersection the
+    # query's cost (measured 8.8M containment candidates at sf0.1 with
+    # array_intersect as ~80% of executor time); see _verify_pairs_arrow
+    ver = _verify_pairs_arrow(cand, isets, universe, threshold, metric,
+                              n_reps)
+    if ver is not None:
+        return expand(ver)
+    # verification: join the candidate pairs back to the per-doc set
+    # table; the measured-small pair list is the broadcast side (see
+    # _pairs_hint), so the set table never shuffles
+    cand = _pairs_hint(cand.select("id_a", "id_b", "rk_a", "rk_b"),
+                       max_broadcast_pairs)
+    vsets, common = _intersect_repr(isets, universe)
+    ratio = _overlap_ratio(metric, F.col("common"), F.col("n_a"),
+                           F.col("n_b"), F.least)
+    return expand(
+        cand.join(_hint_sets(vsets.select(F.col("id").alias("id_a"),
+                                          F.col("rk").alias("rk_a"),
+                                          F.col("vs").alias("vs_a"),
+                                          F.col("n_sh").alias("n_a")),
+                             broadcast_sets),
+                  ["id_a", "rk_a"])
+        .join(_hint_sets(vsets.select(F.col("id").alias("id_b"),
+                                      F.col("rk").alias("rk_b"),
+                                      F.col("vs").alias("vs_b"),
+                                      F.col("n_sh").alias("n_b")),
+                         broadcast_sets),
+              ["id_b", "rk_b"])
+        .withColumn("common", common)
+        .withColumn(metric, F.round(ratio, 6))
+        .filter(ratio >= threshold)
+    )
 
 
 def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text",
@@ -1025,164 +1207,8 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text",
     self-join on rare keys, one broadcast-able join back to the per-doc
     sets for verification.
     """
-    # shingle each doc ONCE; map shingles to dense int ids ordered by
-    # global rarity (df asc, value asc) so (a) the prefix-filter total
-    # order is consistent and (b) verification intersects int arrays,
-    # not strings
-    sets0 = _shingled(docs, text_col, id_col, k)
-    sid_sets, universe = _sid_sets(sets0)
-    # identical shingle SETS collapse to one representative before the
-    # prefix join (see _family_collapse): exact copies and boilerplate
-    # families otherwise inflate every candidate bucket quadratically
-    # (measured: 10x-replicated corpus took the sf0.1 ppjoin from
-    # 6.8 s to 582 s; collapsed it is pair-OUTPUT-bound).  Pairs are
-    # re-expanded by _family_expand with bit-identical jaccard values.
-    # (no caller-side _cache: _family_collapse reads sid_sets exactly
-    # once to build its cached `tagged` frame — the tagged cache IS
-    # the barrier, a second cache here would only double the
-    # persisted footprint)
-    isets, members = _family_collapse(sid_sets, "sids")
-    # ppjoin asymmetric prefixes over the rarity-sorted arrays (no
-    # window over the big exploded table).  For a size-ordered pair
-    # n_a <= n_b with J >= t, the required overlap is
-    # alpha = ceil(t/(1+t)*(n_a+n_b)) >= ceil(2t/(1+t)*n_a) and
-    # >= ceil(t*n_b), so the SMALLER doc only needs its midprefix of
-    # |S| - ceil(2t/(1+t)|S|) + 1 rarest shingles (~0.11|S| at t=0.8)
-    # while the larger needs the full Jaccard prefix (~0.2|S|) — the
-    # asymmetry roughly halves collision rows and candidates vs the
-    # symmetric prefix join.  The tiny epsilon inside ceil() guards
-    # against float round-up (a too-short prefix would DROP pairs;
-    # epsilon can only lengthen it).
-    # In the Arrow-verify regime (hot vocab, `_arrow_gate`) the ppjoin
-    # position filter is pure overhead: the hot vocabulary defeats the
-    # bound (measured at sf0.1: it killed ~0 % of collision rows) while
-    # its pos column and max(pos) aggregates dominate the candidate
-    # exchange.  Verification is EXACT, so any candidate superset that
-    # keeps pairs distinct is result-identical — the slim path explodes
-    # prefixes without positions and dedups with a keys-only aggregate.
-    # Big-vocab corpora (the 100 TB shape) keep the position filter:
-    # there it prunes candidates ~20x before verification.
-    # hot vocab + small rep count: enumerate rep pairs directly
-    # instead of exploding prefixes through a join + distinct — one
-    # bounded limit-collect decides the gate AND fetches the matrix
-    # (`_allpairs_collect`), replacing the count-then-collect pair
-    n_reps = rows = None
-    if universe <= 4096:
-        if _ALLPAIRS_ARROW and threshold > 0:
-            rows, n_reps = _allpairs_collect(isets, universe)
-        if n_reps is None:
-            n_reps = isets.count()  # cache read after the collect
-    slim = n_reps is not None and _arrow_gate(universe, n_reps)
-    if rows is not None:
-        ap = _allpairs_arrow(isets, universe, threshold, "jaccard",
-                             n_reps, rows=rows)
-        if ap is not None:
-            rep_pairs = ap.select(
-                F.least("id_a", "id_b").alias("id_a"),
-                F.greatest("id_a", "id_b").alias("id_b"), "jaccard")
-            return _family_expand(rep_pairs, members, "jaccard",
-                                  threshold)
-
-    def _prefix(frac_expr):
-        plen = (F.col("n_sh") - F.ceil(frac_expr - F.lit(1e-9)) + 1).cast("int")
-        if slim:
-            return isets.select(
-                "id", "n_sh",
-                F.explode(F.slice("sids", F.lit(1), plen)).alias("sid"),
-            )
-        return isets.select(
-            "id", "n_sh",
-            F.posexplode(F.slice("sids", F.lit(1), plen)).alias("pos", "sid"),
-        )
-
-    t2 = 2 * threshold / (1 + threshold)
-    prefix_mid = _prefix(F.lit(t2) * F.col("n_sh"))
-    prefix_full = _prefix(F.lit(threshold) * F.col("n_sh"))
-    # ppjoin position filter: the true overlap of a pair is at most
-    # (matched prefix collisions) + min(suffix remaining after the LAST
-    # matched position on each side), and J >= t forces overlap >=
-    # alpha = ceil(t/(1+t)(n_a+n_b)).  Aggregating the collision rows
-    # per pair (same shuffle the old .distinct() paid) lets that bound
-    # discard most collision-only pairs BEFORE the verification join —
-    # on the hot-vocab corpus it cuts surviving candidates ~20x.
-    # epsilon inside ceil can only shrink alpha (safe direction).
-    alpha = F.ceil(
-        (F.lit(threshold / (1 + threshold))
-         * (F.col("n_a") + F.col("n_b"))) - F.lit(1e-9)
-    )
-    joined = prefix_mid.alias("a").join(
-        prefix_full.alias("b"),
-        (F.col("a.sid") == F.col("b.sid"))
-        # size-ordered orientation: a is the smaller-set doc
-        & ((F.col("a.n_sh") < F.col("b.n_sh"))
-           | ((F.col("a.n_sh") == F.col("b.n_sh"))
-              & (F.col("a.id") < F.col("b.id"))))
-        # length filter: J >= t requires n_a >= t*n_b
-        & (F.col("b.n_sh") * F.lit(threshold) <= F.col("a.n_sh")),
-    )
-    if slim:
-        cand = joined.select(
-            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-            F.col("a.n_sh").alias("n_a"), F.col("b.n_sh").alias("n_b"),
-        ).distinct()
-    else:
-        cand = (
-            joined
-            .groupBy(
-                F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                F.col("a.n_sh").alias("n_a"), F.col("b.n_sh").alias("n_b"),
-            )
-            .agg(
-                F.count("*").alias("c"),
-                F.max("a.pos").alias("pmax_a"),
-                F.max("b.pos").alias("pmax_b"),
-            )
-            .filter(
-                F.col("c")
-                + F.least(F.col("n_a") - F.col("pmax_a") - 1,
-                          F.col("n_b") - F.col("pmax_b") - 1)
-                >= alpha
-            )
-            .select("id_a", "id_b", "n_a", "n_b")
-        )
-    ver = _verify_pairs_arrow(cand, isets, universe, threshold, "jaccard",
-                              n_reps=n_reps)
-    if ver is not None:
-        rep_pairs = ver.select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"), "jaccard")
-        return _family_expand(rep_pairs, members, "jaccard", threshold)
-    # verification: join the candidate pairs back to the per-doc set
-    # table; the measured-small pair list is the broadcast side (see
-    # _pairs_hint), so the set table never shuffles
-    cand = _pairs_hint(cand.select("id_a", "id_b"), max_broadcast_pairs)
-    vsets, common = _intersect_repr(isets, universe)
-    rep_pairs = (
-        cand.join(_hint_sets(vsets.select(F.col("id").alias("id_a"),
-                                          F.col("vs").alias("vs_a"),
-                                          F.col("n_sh").alias("n_a")),
-                             broadcast_sets),
-                  "id_a")
-        .join(_hint_sets(vsets.select(F.col("id").alias("id_b"),
-                                      F.col("vs").alias("vs_b"),
-                                      F.col("n_sh").alias("n_b")),
-                         broadcast_sets),
-              "id_b")
-        .withColumn("common", common)
-        .withColumn(
-            "jaccard",
-            F.round(F.col("common")
-                    / (F.col("n_a") + F.col("n_b") - F.col("common")), 6),
-        )
-        .filter(F.col("common")
-                / (F.col("n_a") + F.col("n_b") - F.col("common"))
-                >= threshold)
-        # restore the numeric id_a < id_b output contract (candidate
-        # orientation above is by set size, not id)
-        .select(F.least("id_a", "id_b").alias("id_a"),
-                F.greatest("id_a", "id_b").alias("id_b"), "jaccard")
-    )
-    return _family_expand(rep_pairs, members, "jaccard", threshold)
+    return _set_sim_pairs(docs, text_col, id_col, k, threshold, "jaccard",
+                          broadcast_sets, max_broadcast_pairs)
 
 
 def ngram_containment_pairs(docs: DataFrame, text_col: str = "text",
@@ -1212,131 +1238,9 @@ def ngram_containment_pairs(docs: DataFrame, text_col: str = "text",
     against the cached int-sid sets.  All joins are on rare sid keys;
     the full-set side's fan-out per sid is that shingle's df, which
     the rarity order keeps minimal."""
-    sets0 = _shingled(docs, text_col, id_col, k)
-    sid_sets, universe = _sid_sets(sets0)
-    # identical shingle sets collapse before the prefix join — same
-    # quadratic-bucket argument and bit-identical re-expansion as
-    # ngram_jaccard_pairs (containment of identical sets is exactly
-    # 1.0, and cross-family containment is a pure function of the
-    # representatives' sets)
-    isets, members = _family_collapse(sid_sets, "sids")
-    plen = (
-        F.col("n_sh")
-        - F.ceil(F.lit(threshold) * F.col("n_sh") - F.lit(1e-9)) + 1
-    ).cast("int")
-    # slim candidates in the Arrow-verify regime — same argument as
-    # ngram_jaccard_pairs, and containment is where it bites hardest:
-    # the position filter measured 2 killed rows out of 29 M collision
-    # rows at sf0.1 while the pos/max(pos)/count bookkeeping dominated
-    # the 8.8 M-group candidate exchange.  Exact verification keeps the
-    # result identical; big vocabularies retain the position filter.
-    # same direct-enumeration gate as ngram_jaccard_pairs — and
-    # containment is where it bites hardest (no length filter, so
-    # the prefix join yielded 8.8M of 12.4M possible pairs); one
-    # bounded limit-collect decides the gate AND fetches the matrix
-    n_reps = rows = None
-    if universe <= 4096:
-        if _ALLPAIRS_ARROW and threshold > 0:
-            rows, n_reps = _allpairs_collect(isets, universe)
-        if n_reps is None:
-            n_reps = isets.count()  # cache read after the collect
-    slim = n_reps is not None and _arrow_gate(universe, n_reps)
-    if rows is not None:
-        ap = _allpairs_arrow(isets, universe, threshold, "containment",
-                             n_reps, rows=rows)
-        if ap is not None:
-            rep_pairs = ap.select(
-                F.least("id_a", "id_b").alias("id_a"),
-                F.greatest("id_a", "id_b").alias("id_b"), "containment")
-            return _family_expand(rep_pairs, members, "containment",
-                                  threshold)
-    if slim:
-        prefix = isets.select(
-            "id", "n_sh",
-            F.explode(F.slice("sids", F.lit(1), plen)).alias("sid"),
-        )
-        full = isets.select(
-            "id", "n_sh", F.explode("sids").alias("sid"))
-    else:
-        prefix = isets.select(
-            "id", "n_sh",
-            F.posexplode(F.slice("sids", F.lit(1), plen)).alias("pos", "sid"),
-        )
-        full = isets.select(
-            "id", "n_sh",
-            F.posexplode("sids").alias("pos", "sid"),
-        )
-    need = F.ceil(F.lit(threshold) * F.col("n_a") - F.lit(1e-9))
-    joined = prefix.alias("a").join(
-        full.alias("b"),
-        (F.col("a.sid") == F.col("b.sid"))
-        # orientation: the prefix side is the SMALLER of the pair
-        & ((F.col("a.n_sh") < F.col("b.n_sh"))
-           | ((F.col("a.n_sh") == F.col("b.n_sh"))
-              & (F.col("a.id") < F.col("b.id")))),
-    )
-    if slim:
-        cand = joined.select(
-            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-            F.col("a.n_sh").alias("n_a"), F.col("b.n_sh").alias("n_b"),
-        ).distinct()
-    else:
-        cand = (
-            joined
-            .groupBy(
-                F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                F.col("a.n_sh").alias("n_a"), F.col("b.n_sh").alias("n_b"),
-            )
-            .agg(
-                F.count("*").alias("c"),
-                F.max("a.pos").alias("pmax_a"),
-                F.max("b.pos").alias("pmax_b"),
-            )
-            .filter(
-                F.col("c")
-                + F.least(F.col("n_a") - F.col("pmax_a") - 1,
-                          F.col("n_b") - F.col("pmax_b") - 1)
-                >= need
-            )
-            .select("id_a", "id_b", "n_a", "n_b")
-        )
-    # the containment candidate set is even larger than Jaccard's on
-    # hot-vocab corpora because no length filter exists, so the
-    # per-candidate intersection cost dominates — measured 8.8M
-    # candidates at sf0.1 with array_intersect as ~80% of the query's
-    # executor time; see _verify_pairs_arrow
-    ver = _verify_pairs_arrow(cand, isets, universe, threshold,
-                              "containment", n_reps=n_reps)
-    if ver is not None:
-        rep_pairs = ver.select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"), "containment")
-        return _family_expand(rep_pairs, members, "containment", threshold)
-    cand = _pairs_hint(cand.select("id_a", "id_b"), max_broadcast_pairs)
-    vsets, common = _intersect_repr(isets, universe)
-    rep_pairs = (
-        cand.join(_hint_sets(vsets.select(F.col("id").alias("id_a"),
-                                          F.col("vs").alias("vs_a"),
-                                          F.col("n_sh").alias("n_a")),
-                             broadcast_sets),
-                  "id_a")
-        .join(_hint_sets(vsets.select(F.col("id").alias("id_b"),
-                                      F.col("vs").alias("vs_b"),
-                                      F.col("n_sh").alias("n_b")),
-                         broadcast_sets),
-              "id_b")
-        .withColumn("common", common)
-        .withColumn(
-            "containment",
-            F.round(F.col("common") / F.least("n_a", "n_b"), 6),
-        )
-        .filter(F.col("common") / F.least("n_a", "n_b") >= threshold)
-        # numeric id_a < id_b output contract (candidate orientation is
-        # by set size, not id)
-        .select(F.least("id_a", "id_b").alias("id_a"),
-                F.greatest("id_a", "id_b").alias("id_b"), "containment")
-    )
-    return _family_expand(rep_pairs, members, "containment", threshold)
+    return _set_sim_pairs(docs, text_col, id_col, k, threshold,
+                          "containment", broadcast_sets,
+                          max_broadcast_pairs)
 
 
 # Mersenne prime 2^31-1 for the universal-hash permutation family
@@ -1469,7 +1373,7 @@ def _minhash_allpairs(sigs: DataFrame, num_hashes: int, bands: int,
     budget, the banded explode -> (band, bhash) self-join -> pair
     distinct -> two signature join-backs -> interpreted zip_with
     estimate all collapse into one vectorized numpy pass driven by a
-    Range scan of row blocks (same scheme as `_allpairs_arrow`; the
+    Range scan of row blocks (the `_rep_pair_blocks` driver; the
     sf0.1 chain this replaces measured ~19 s executor time across two
     exchanges plus ~10 AQE job rounds of driver latency).
 
@@ -1479,97 +1383,81 @@ def _minhash_allpairs(sigs: DataFrame, num_hashes: int, bands: int,
     non-event), est = matches/num_hashes is the same IEEE division
     with the same HALF_UP 6 dp rounding, the rounded value compares
     >= threshold exactly as the SQL filter, and pair orientation is
-    SQL `a.id < b.id` (NULL or duplicate ids never pair).  All-NULL
-    signatures emit no bucket rows in the join path and are excluded
-    from the matrix here.  Above the gate (or with a bucket-size cap,
+    SQL `a.id < b.id` (NULL ids never pair, nor do rows sharing an id).
+    Collision is id-grain, as in the join: its candidate DISTINCT is on
+    ids and its join-backs reach every row of both ids, so a row pairs
+    with a larger id's row when ANY two rows of the two ids share a
+    band (the `_incremental_allpairs` rule).  All-NULL signatures emit
+    no bucket rows in the join path and are excluded from the matrix
+    here.  Above the gate (or with a bucket-size cap,
     whose dropped-bucket semantics need real buckets) the join path
     runs unchanged — the 100 TB shape."""
-    if not _ALLPAIRS_ARROW or num_hashes // bands == 0:
+    if num_hashes // bands == 0:
         # bands > num_hashes is degenerate (every band is an empty
         # slice, so the bucket join collides EVERYTHING); keep the
         # join so those semantics stay in one place
         return None
-    nn = sigs.filter(F.element_at(F.col("signature"), 1).isNotNull()) \
-             .filter(F.col("id").isNotNull())
-    # one driver job, not count-then-collect: collect at most
-    # r_max + 1 rows (bounded: r_max derives from the word budget and
-    # the 64 MB matrix cap, ≤ ~8 MB of signatures) and bail when the
-    # limit is hit — a second AQE job round per consumer query is
-    # exactly the fixed cost this path exists to remove
-    r_max = min(int((2 * _ALLPAIRS_WORD_BUDGET / num_hashes) ** 0.5),
-                (64 << 20) // (num_hashes * 8))
+    # bounded: r_max derives from the word budget and the 64 MB matrix
+    # cap, ≤ ~8 MB of signatures
+    rows = _allpairs_collect(
+        sigs.filter(F.element_at(F.col("signature"), 1).isNotNull())
+        .filter(F.col("id").isNotNull()).select("id", "signature"),
+        _allpairs_r_max(num_hashes))
+    if rows is None:
+        return None
     import numpy as np
 
-    rows = nn.select("id", "signature").limit(r_max + 1).collect()
-    if len(rows) > r_max:
-        return None
-    rows.sort(key=lambda r: r["id"])
-    R = len(rows)
-    ids = [r["id"] for r in rows]
-    run_end = np.empty(R, dtype=np.int64)  # smallest j > i with
-    j = R                                  # ids[j] != ids[i]
-    for i in range(R - 1, -1, -1):
-        if i + 1 == R or ids[i + 1] != ids[i]:
-            j = i + 1
-        run_end[i] = j
-    sig_mat = (np.asarray([r["signature"] for r in rows],
-                          dtype=np.int64).reshape(R, num_hashes)
-               if R else np.zeros((0, num_hashes), dtype=np.int64))
-    spark = sigs.sparkSession
-    bc = spark.sparkContext.broadcast((ids, run_end, sig_mat))
-    id_type = sigs.schema["id"].dataType.simpleString()
     band_rows = num_hashes // bands
-    blk = 64
-    n_blocks = max(1, (R + blk - 1) // blk)
-    par = spark.sparkContext.defaultParallelism
-    blocks = spark.range(n_blocks).repartition(min(n_blocks, max(par, 1)))
 
-    def _score(batches):
-        import decimal
+    def build(rows):
+        ids = [r["id"] for r in rows]
+        S = (np.asarray([r["signature"] for r in rows], dtype=np.int64)
+             .reshape(len(rows), num_hashes) if rows else
+             np.zeros((0, num_hashes), dtype=np.int64))
+        starts = np.array([k for k in range(len(ids))
+                           if k == 0 or ids[k] != ids[k - 1]], dtype=np.int64)
+        return S, starts
 
-        import numpy as np
-        import pandas as pd
+    def collide(eq):
+        # non-divisible bands: the bucket join's slice() ignores the
+        # trailing num_hashes % bands positions
+        return (eq[:, :bands * band_rows]
+                .reshape(-1, bands, band_rows)
+                .all(axis=2).any(axis=1))
 
-        ids, run_end, S = bc.value
-        R = len(ids)
-        q6 = decimal.Decimal("0.000001")
-        for pdf in batches:
-            out_a: list = []
-            out_b: list = []
-            out_v: list = []
-            for b0 in pdf["id"]:
-                lo = int(b0) * blk
-                hi = min(lo + blk, R)
-                for i in range(lo, hi):
-                    if i + 1 >= R:
-                        continue
-                    eq = S[i] == S[i + 1:]
-                    est = eq.sum(axis=1) / float(num_hashes)
-                    # non-divisible bands: the bucket join's slice()
-                    # ignores the trailing num_hashes % bands positions
-                    coll = (eq[:, :bands * band_rows]
-                            .reshape(-1, bands, band_rows)
-                            .all(axis=2).any(axis=1))
-                    # prefilter with margin, then decide on the same
-                    # HALF_UP-rounded value the SQL filter compares
-                    pre = coll & (est >= threshold - 1e-6)
-                    pre[:run_end[i] - i - 1] = False  # duplicate ids
-                    for t in np.nonzero(pre)[0]:
-                        r6 = float(
-                            decimal.Decimal(repr(float(est[t])))
-                            .quantize(q6,
-                                      rounding=decimal.ROUND_HALF_UP))
-                        if r6 >= threshold:
-                            out_a.append(ids[i])
-                            out_b.append(ids[i + 1 + t])
-                            out_v.append(r6)
-            yield pd.DataFrame(
-                {"id_a": pd.Series(out_a, dtype="object"),
-                 "id_b": pd.Series(out_b, dtype="object"),
-                 "est_jaccard": pd.Series(out_v, dtype="float64")})
+    # (run start, collisions) of the last duplicate-id run, per task:
+    # every row of the run shares them
+    memo = [None, None]
 
-    return blocks.mapInPandas(
-        _score, f"id_a {id_type}, id_b {id_type}, est_jaccard double")
+    def score(i, run_end, data):
+        S, starts = data
+        hi = run_end[i]  # partners: rows of larger ids
+        eq = S[i] == S[hi:]
+        lo = starts[np.searchsorted(starts, i, side="right") - 1]
+        if hi - lo == 1:
+            coll = collide(eq)
+        else:
+            if memo[0] != lo:
+                memo[:] = [lo, np.logical_or.reduce(
+                    [collide(S[r] == S[hi:]) for r in range(lo, hi)])]
+            coll = memo[1]
+        seg = starts[np.searchsorted(starts, hi):] - hi
+        if len(seg) < len(coll):  # duplicate partner ids
+            coll = np.repeat(np.logical_or.reduceat(coll, seg),
+                             np.diff(np.append(seg, len(coll))))
+        est = eq.sum(axis=1) / float(num_hashes)
+        # prefilter with margin, then decide on the same HALF_UP-rounded
+        # value the SQL filter compares
+        kept = []
+        for t in np.nonzero(coll & (est >= threshold - 1e-6))[0]:
+            r6 = _round6(est[t])
+            if r6 >= threshold:
+                kept.append((hi - i - 1 + t, r6))
+        return kept
+
+    return _rep_pair_blocks(sigs.sparkSession, rows,
+                            sigs.schema["id"].dataType.simpleString(),
+                            "est_jaccard", build, score)
 
 
 def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
@@ -1842,19 +1730,19 @@ def _incremental_allpairs(new_sigs: DataFrame, corp_sigs: DataFrame,
     belong to real buckets — the caller passes buckets_canonical=False).
     At 100 TB the corpus side stays one shuffle-free scan either way;
     the batch gate routes oversized batches back to the join."""
-    if not _ALLPAIRS_ARROW or threshold <= 0 or num_hashes // bands == 0:
+    if threshold <= 0 or num_hashes // bands == 0:
         return None
     nid_type = new_sigs.schema["id"].dataType.simpleString()
     cid_type = corp_sigs.schema["id"].dataType.simpleString()
     if nid_type != cid_type:
         return None  # the join would resolve a cast; keep it
     b_max = min(4096, (8 << 20) // (num_hashes * 8))
-    rows = (
+    rows = _allpairs_collect(
         new_sigs.filter(F.col("id").isNotNull())
         .filter(F.element_at(F.col("signature"), 1).isNotNull())
         .filter(F.size("signature") == num_hashes)
-        .select("id", "signature").limit(b_max + 1).collect())
-    if len(rows) > b_max:
+        .select("id", "signature"), b_max)
+    if rows is None:
         return None
     import numpy as np
 
@@ -1877,14 +1765,11 @@ def _incremental_allpairs(new_sigs: DataFrame, corp_sigs: DataFrame,
         .select("id", "signature"))
 
     def _score(batches):
-        import decimal
-
         import numpy as np
         import pandas as pd
 
         new_ids, S, starts, counts = bc.value
         B = len(new_ids)
-        q6 = decimal.Decimal("0.000001")
         chunk = max(1, (4 << 20) // max(1, B * num_hashes))
         for pdf in batches:
             out_n: list = []
@@ -1922,9 +1807,7 @@ def _incremental_allpairs(new_sigs: DataFrame, corp_sigs: DataFrame,
                     cid = cids[lo + ci]
                     if new_ids[t] == cid:
                         continue  # SQL c.id != n.id
-                    r6 = float(
-                        decimal.Decimal(repr(float(est[ci, t])))
-                        .quantize(q6, rounding=decimal.ROUND_HALF_UP))
+                    r6 = _round6(est[ci, t])
                     ok = r6 >= threshold
                     if not (ok or coll[ci, t]):
                         continue

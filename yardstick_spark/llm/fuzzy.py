@@ -130,7 +130,7 @@ def fuzzy_dedup_pairs(
     (explain/dry-run tooling) pay that job at build time, not at
     action time.
     """
-    if weight_col is None and _FUZZY_COLLAPSE:
+    if weight_col is None:
         out = _collapsed_pairs(df, id_col, text_col, max_edit,
                                len_bucket, max_block)
         if out is not None:
@@ -139,13 +139,6 @@ def fuzzy_dedup_pairs(
         df, id_col, text_col, len_bucket, max_block, weight_col
     )
     return _verify_pairs(keyed, max_edit)
-
-
-# Identical-string family collapse for the pair operator (the
-# `fuzzy_cluster_edges` discipline extended to emit edit values and
-# intra-family pairs).  Tests monkeypatch this off to pin the two
-# paths equal (test_fuzzy_collapse_matches_record_grain).
-_FUZZY_COLLAPSE = True
 
 
 def _collapsed_pairs(

@@ -624,10 +624,6 @@ class _BitReader:
         return v >> 5
 
 
-def _extend(bits: int, size: int) -> int:
-    return bits if bits >= (1 << (size - 1)) else bits - (1 << size) + 1
-
-
 def parse_jpeg(payload: bytes):
     """-> (width, height, channels, uint8 ndarray — interleaved RGB
     when channels=3) for a baseline sequential JFIF JPEG: marker walk,

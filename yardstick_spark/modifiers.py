@@ -26,9 +26,6 @@ from dataclasses import dataclass, field
 from .sqlutil import (
     find_matching_paren,
     next_nonspace,
-    normalize_dim_key,
-    prev_nonspace,
-    iter_identifiers,
     is_word_boundary,
     skip_code_unit,
 )
@@ -190,13 +187,6 @@ class EvalContext:
     filter_sql: str | None = None
     grand_total: bool = False
 
-    def cache_key(self) -> tuple:
-        return (
-            tuple(normalize_dim_key(d) for d in self.corr_dims),
-            tuple((normalize_dim_key(a), " ".join(b.split()).lower()) for a, b in self.set_conditions),
-            " ".join((self.filter_sql or "").split()).lower(),
-            self.grand_total,
-        )
 
 
 def _dim_matches(col: str, dim: str) -> bool:

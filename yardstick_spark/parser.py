@@ -93,12 +93,6 @@ class SelectInfo:
     def primary_table(self) -> TableRef | None:
         return self.tables[0] if self.tables else None
 
-    def table_for(self, qualifier: str) -> TableRef | None:
-        q = qualifier.lower()
-        for t in self.tables:
-            if t.effective.lower() == q or t.name.lower() == q:
-                return t
-        return None
 
 
 _AGG_RE = re.compile(r"\bAGGREGATE\s*\(", re.IGNORECASE)
@@ -152,13 +146,6 @@ def has_window_over(expr: str) -> bool:
                     return True
         i += 1
     return False
-
-
-def find_top_level_as(expr: str) -> int | None:
-    pos = find_top_level_keyword(expr, "AS", 0)
-    while pos is not None:
-        return pos
-    return None
 
 
 def split_expr_alias(item: str) -> tuple[str, str | None]:

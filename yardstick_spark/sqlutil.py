@@ -221,52 +221,6 @@ def prev_nonspace(sql: str, i: int) -> int:
     return i
 
 
-def strip_outer_parens(expr: str) -> str:
-    e = expr.strip()
-    while e.startswith("(") and e.endswith(")"):
-        if find_matching_paren(e, 0) == len(e) - 1:
-            e = e[1:-1].strip()
-        else:
-            break
-    return e
-
-
-def qualify_columns(expr: str, qualifier: str, skip: set[str] | None = None) -> str:
-    """Prefix bare column identifiers in `expr` with `qualifier.`.
-
-    Mirrors the reference's qualify_where_for_inner
-    (measures.rs: qualify_expression path): skips SQL keywords, function
-    names (identifier followed by '('), already-qualified refs, and
-    anything in `skip` (case-insensitive).
-    """
-    skip_lower = {s.lower() for s in (skip or set())}
-    out: list[str] = []
-    last = 0
-    prev_end_char = ""
-    for start, end, text in iter_identifiers(expr):
-        upper = text.upper()
-        # find next significant char
-        k = next_nonspace(expr, end)
-        is_func = k < len(expr) and expr[k] == "("
-        p = prev_nonspace(expr, start)
-        prev_char = expr[p] if p >= 0 else ""
-        already_qualified = prev_char == "." or (k < len(expr) and expr[k] == ".")
-        if (
-            upper in SQL_KEYWORDS
-            or is_func
-            or already_qualified
-            or text.lower() in skip_lower
-        ):
-            continue
-        out.append(expr[last:start])
-        out.append(f"{qualifier}.{text}")
-        last = end
-        prev_end_char = prev_char
-    _ = prev_end_char
-    out.append(expr[last:])
-    return "".join(out)
-
-
 def strip_qualifiers(expr: str, qualifiers: set[str] | None = None) -> str:
     """Remove `q.` prefixes from qualified column refs.  If `qualifiers`
     given, only strip those (case-insensitive); else strip any single-level

@@ -27,6 +27,25 @@ def spark():
 
 
 @pytest.fixture()
+def call_spy(monkeypatch):
+    """`call_spy(module, name)` wraps `module.name` and returns the list
+    of values its calls returned, so a test can assert which path a
+    gate selected."""
+    def spy(module, name):
+        results = []
+        orig = getattr(module, name)
+
+        def counted(*a, **k):
+            results.append(orig(*a, **k))
+            return results[-1]
+
+        monkeypatch.setattr(module, name, counted)
+        return results
+
+    return spy
+
+
+@pytest.fixture()
 def ys(spark):
     from yardstick_spark import MeasureSession
 

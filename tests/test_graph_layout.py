@@ -60,29 +60,35 @@ def test_pagerank_matches_power_iteration(spark):
         assert got[nm] == pytest.approx(r[idx[nm]], abs=1e-12)
 
 
-def test_pagerank_driver_gate_matches_distributed(spark):
+def test_pagerank_driver_gate_matches_distributed(spark, call_spy):
     """The gated small-graph numpy fast path and the distributed join
     loop must agree to 6-dp rounding (the grain every caller uses) on
     a graph with parallel edges, weights, and a dangling node — and
     the gate must actually select the intended path each way."""
+    from yardstick_spark.operators import graph as G
     from yardstick_spark.operators import pagerank
 
+    calls = call_spy(G, "_pagerank_driver")
     rows = [("a", "b", 2.0), ("a", "c", 1.0), ("b", "c", 1.0),
             ("c", "a", 1.0), ("d", "a", 3.0), ("a", "b", 0.5)]
     e = _edges(spark, rows)
     fast = {r.node: round(r.rank, 6)
             for r in pagerank(e, iterations=8).collect()}
+    assert len(calls) == 1
     slow = {r.node: round(r.rank, 6)
             for r in pagerank(e, iterations=8,
                               driver_max_edges=0).collect()}
+    assert len(calls) == 1
     assert fast == slow
     assert sum(fast.values()) == pytest.approx(1.0, abs=1e-6)
     # symmetrize flows through the gate identically on both paths
     fs = {r.node: round(r.rank, 6)
           for r in pagerank(e, iterations=6, symmetrize=True).collect()}
+    assert len(calls) == 2
     ss = {r.node: round(r.rank, 6)
           for r in pagerank(e, iterations=6, symmetrize=True,
                             driver_max_edges=0).collect()}
+    assert len(calls) == 2
     assert fs == ss
 
 
@@ -577,29 +583,35 @@ def test_lpa_matches_duckdb_unrolled(spark):
     assert got == want
 
 
-def test_lpa_driver_gate_matches_distributed(spark):
+def test_lpa_driver_gate_matches_distributed(spark, call_spy):
     """The gated small-graph dict fast path and the distributed
     superstep loop must agree exactly (both are integer label
     arithmetic with the same (count desc, label asc) tie contract),
     and string node ids flow through the gate's schema handling."""
+    from yardstick_spark.operators import graph as G
     from yardstick_spark.operators import label_propagation
 
+    calls = call_spy(G, "_lpa_driver")
     edges = [(i, (i * 7 + 3) % 23) for i in range(23)] + [(1, 17), (4, 9)]
     edges = [(a, b) for a, b in edges if a != b]
     df = spark.createDataFrame(edges, "src long, dst long")
     fast = {r.node: r.community
             for r in label_propagation(df, iterations=4).collect()}
+    assert len(calls) == 1
     slow = {r.node: r.community
             for r in label_propagation(df, iterations=4,
                                        driver_max_edges=0).collect()}
+    assert len(calls) == 1
     assert fast == slow
     sdf = spark.createDataFrame(
         [(f"n{a}", f"n{b}") for a, b in edges], "src string, dst string")
     sfast = {r.node: r.community
              for r in label_propagation(sdf, iterations=3).collect()}
+    assert len(calls) == 2
     sslow = {r.node: r.community
              for r in label_propagation(sdf, iterations=3,
                                         driver_max_edges=0).collect()}
+    assert len(calls) == 2
     assert sfast == sslow
 
 

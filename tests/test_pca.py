@@ -221,26 +221,32 @@ def test_kmeans_partition_stable_and_null_policy(spark):
         assert got == base, f"assignment changed under repartition({n})"
 
 
-def test_kmeans_driver_gate_matches_distributed(spark):
+def test_kmeans_driver_gate_matches_distributed(spark, call_spy):
     """The gated driver-side numpy fit and the distributed seeding +
     Lloyd collects must produce identical assignments — the centroid
     arithmetic is exact integer sums plus Spark's shortest-decimal
     HALF_UP mean rounding, replayed verbatim in `_fit_driver`.  The
     planted corpus makes centroid means hit non-integral fractions, so
     the rounding path is genuinely exercised."""
+    from yardstick_spark.llm import kmeans as K
     from yardstick_spark.llm import kmeans_assign
 
+    calls = call_spy(K, "_fit_driver")
     vecs = _planted_clusters(spark)
     fast = sorted(map(tuple, kmeans_assign(vecs, k=4, iters=3).collect()))
+    assert len(calls) == 1
     slow = sorted(map(tuple, kmeans_assign(
         vecs, k=4, iters=3, driver_max_vectors=0).collect()))
+    assert len(calls) == 1
     assert fast == slow
     # negative coordinates exercise the away-from-zero rounding branch
     neg = vecs.selectExpr(
         "vec_id", "transform(embedding, x -> -x - 0.0000005) AS embedding")
     nfast = sorted(map(tuple, kmeans_assign(neg, k=3, iters=2).collect()))
+    assert len(calls) == 2
     nslow = sorted(map(tuple, kmeans_assign(
         neg, k=3, iters=2, driver_max_vectors=0).collect()))
+    assert len(calls) == 2
     assert nfast == nslow
 
 

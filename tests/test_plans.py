@@ -162,7 +162,7 @@ def test_dedup_verification_join_broadcast_policy(spark, monkeypatch):
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-        monkeypatch.setattr(D, "_allpairs_collect", lambda *a, **k: None)
+        monkeypatch.setattr(D, "collect_if_small", lambda *a, **k: None)
         # default: no static hint — the static plan is a shuffle join
         # (AQE demotes to broadcast at runtime from observed sizes)
         assert "BroadcastHashJoin" not in explain_str(
@@ -649,6 +649,67 @@ def test_spread_rows_floor_disabled_on_any_footer_failure(spark,
         # count; sf0.001 has ~600 docs, a partial floor would still
         # exceed 1 — the only correct answer is the byte estimate
         assert got == 1
+
+
+def test_collect_if_small_job_counts(spark):
+    """Job counts of both forms of the driver fetch, against count()
+    then collect() on an identical fresh input.  The bounded fetch
+    runs fewer jobs on 4-partition cache() and localCheckpoint inputs,
+    but Spark's take scales up ×4 partitions per job, so on a
+    64-partition checkpoint it runs 4 jobs, more than count plus
+    collect.  `count_first` runs exactly the jobs of count plus
+    collect.  A bound of 0 or less runs no job, and an input over the
+    bound returns None."""
+    import itertools
+
+    from perfbench.sparkmetrics import job_group, read_group
+    from yardstick_spark.sparkutil import collect_if_small
+
+    sc = spark.sparkContext
+    groups = itertools.count()
+
+    def jobs(fn):
+        group = f"test.collect_if_small.{next(groups)}"
+        with job_group(sc, group):
+            out = fn()
+        return read_group(sc, group, 0.0, 0.0)["jobs"], out
+
+    def count_then_collect(df):
+        return df.collect() if df.count() <= 400 else None
+
+    # `i` keeps the three cached plans distinct: cache() of an already
+    # cached plan would share its data
+    inputs = {
+        "cache": lambda i: spark.range(0, 400, 1, 1)
+        .selectExpr("id", f"{i} AS i").repartition(4).cache(),
+        "localCheckpoint": lambda i: spark.range(0, 400, 1, 4)
+        .localCheckpoint(),
+        "localCheckpoint64": lambda i: spark.range(0, 400, 1, 64)
+        .localCheckpoint(),
+    }
+    for kind, fresh in inputs.items():
+        frames = [fresh(i) for i in range(3)]
+        n_old, want = jobs(lambda: count_then_collect(frames[0]))
+        n_new, got = jobs(lambda: collect_if_small(frames[1], 400))
+        n_cf, got_cf = jobs(
+            lambda: collect_if_small(frames[2], 400, count_first=True))
+        assert sorted(r.id for r in got) == sorted(r.id for r in want) \
+            == sorted(r.id for r in got_cf) == list(range(400)), kind
+        assert n_cf == n_old, (kind, n_cf, n_old)
+        if kind == "localCheckpoint64":
+            assert n_new == 4 and n_new > n_old, (kind, n_new, n_old)
+        else:
+            assert n_new < n_old, (kind, n_new, n_old)
+        for df in frames:
+            df.unpersist()
+
+    df = spark.range(0, 400, 1, 4).localCheckpoint()
+    for bound in (0, -1):
+        assert jobs(lambda: collect_if_small(df, bound)) == (0, None)
+        assert jobs(lambda: collect_if_small(df, bound, count_first=True)) \
+            == (0, None)
+    assert collect_if_small(df, 399) is None
+    assert collect_if_small(df, 399, count_first=True) is None
 
 
 def test_shard_assign_cumsum_is_two_phase(spark):

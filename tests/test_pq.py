@@ -346,22 +346,26 @@ def test_mmr_prefers_diversity(spark):
     assert 4 in mmr
 
 
-def test_mmr_driver_gate_matches_distributed(spark):
+def test_mmr_driver_gate_matches_distributed(spark, call_spy):
     """The gated driver-side greedy rounds and the distributed
     checkpointed loop must agree exactly — same double literals, same
     (score desc NULLS LAST, id asc) pick, same pen = MAX over
     selected."""
     import numpy as np
 
+    from yardstick_spark.llm import mining as M
     from yardstick_spark.llm import mmr_rerank
 
+    calls = call_spy(M, "_mmr_driver")
     rng = np.random.RandomState(7)
     X = rng.randn(40, 6).astype(np.float32)
     df = _vecs(spark, X)
     q = df.filter("vec_id < 3")
     fast = sorted(map(tuple, mmr_rerank(df, q, k=5, pool=12).collect()))
+    assert len(calls) == 1
     slow = sorted(map(tuple, mmr_rerank(
         df, q, k=5, pool=12, driver_max_pool_rows=0).collect()))
+    assert len(calls) == 1
     assert fast == slow and len(fast) == 15
 
 

@@ -145,10 +145,11 @@ def test_csv_json_sources_roundtrip(spark, tmp_path):
     ]
 
 
-def test_connected_components_vs_union_find(spark):
+def test_connected_components_vs_union_find(spark, call_spy):
     # chain 0-1-2-3-4 (diameter > 1 forces multiple propagation
     # rounds), a triangle, an isolated pair; verdicts must agree with a
     # driver-side union-find
+    from yardstick_spark.llm import cluster as C
     from yardstick_spark.llm import connected_components, dedup_assign
 
     edges = [(0, 1), (1, 2), (2, 3), (3, 4),
@@ -171,8 +172,12 @@ def test_connected_components_vs_union_find(spark):
             parent[max(ra, rb)] = min(ra, rb)
     want = {n: find(n) for n in parent}
 
+    # the gate's fetch returns the edge rows exactly when the
+    # union-find branch runs
+    fetched = call_spy(C, "collect_if_small")
     got = {r["id"]: r["cluster_id"]
            for r in connected_components(pairs).collect()}
+    assert [r is not None for r in fetched] == [True]
     assert got == want
 
     # distributed label-propagation path must agree with the
@@ -180,6 +185,7 @@ def test_connected_components_vs_union_find(spark):
     got_dist = {r["id"]: r["cluster_id"]
                 for r in connected_components(
                     pairs, local_threshold=0).collect()}
+    assert [r is not None for r in fetched] == [True, False]
     assert got_dist == want
 
     docs = spark.createDataFrame(
@@ -442,7 +448,7 @@ def test_verify_arrow_matches_join_verifier(spark, monkeypatch):
 
     # both sides take the prefix-join candidates (the direct
     # enumeration would otherwise answer before either verifier runs)
-    monkeypatch.setattr(D, "_allpairs_collect", lambda *a, **k: None)
+    monkeypatch.setattr(D, "collect_if_small", lambda *a, **k: None)
     fast_c = run(ngram_containment_pairs, "containment")
     fast_j = run(ngram_jaccard_pairs, "jaccard")
     monkeypatch.setattr(D, "_verify_pairs_arrow", lambda *a, **k: None)
@@ -459,7 +465,7 @@ def test_slim_candidates_match_position_filter_path(spark, monkeypatch):
     exact, so the candidate superset may differ but the output cannot.
     The big-vocab path is forced by monkeypatching `_arrow_gate` off,
     which disables BOTH the slim candidates and the Arrow verifier;
-    `_allpairs_collect` is patched off on both sides so the direct
+    `collect_if_small` is patched off on both sides so the direct
     enumeration does not answer first."""
     from yardstick_spark.llm import (clear_dedup_caches,
                                      ngram_containment_pairs,
@@ -476,7 +482,7 @@ def test_slim_candidates_match_position_filter_path(spark, monkeypatch):
         clear_dedup_caches()
         return out
 
-    monkeypatch.setattr(D, "_allpairs_collect", lambda *a, **k: None)
+    monkeypatch.setattr(D, "collect_if_small", lambda *a, **k: None)
     slim_c = run(ngram_containment_pairs, "containment")
     slim_j = run(ngram_jaccard_pairs, "jaccard")
     monkeypatch.setattr(D, "_arrow_gate", lambda *a, **k: False)
@@ -525,7 +531,7 @@ def test_graph_checkpoints_release_via_shared_registry(spark):
     clear_dedup_caches() drops the references (regression for the
     untracked-localCheckpoint leak)."""
     from yardstick_spark.llm import clear_dedup_caches
-    from yardstick_spark.llm.dedup import _CACHED
+    from yardstick_spark.sparkutil import _CACHED
     from yardstick_spark.operators.graph import (label_propagation,
                                                  pagerank)
 
@@ -1269,7 +1275,7 @@ def test_allpairs_matches_prefix_join_path(spark, monkeypatch):
         fast_c = run(ngram_containment_pairs, "containment", docs)
         fast_j = run(ngram_jaccard_pairs, "jaccard", docs)
         with monkeypatch.context() as m:
-            m.setattr(D, "_allpairs_collect", lambda *a, **k: None)
+            m.setattr(D, "collect_if_small", lambda *a, **k: None)
             slow_c = run(ngram_containment_pairs, "containment", docs)
             slow_j = run(ngram_jaccard_pairs, "jaccard", docs)
             m.setattr(D, "_arrow_gate", lambda *a, **k: False)
@@ -1329,7 +1335,7 @@ def test_minhash_allpairs_matches_banded_join(spark, monkeypatch):
         for th in ths:
             fast = run(th, docs)
             with monkeypatch.context() as m:
-                m.setattr(D, "_allpairs_collect", lambda *a, **k: None)
+                m.setattr(D, "collect_if_small", lambda *a, **k: None)
                 slow = run(th, docs)
             assert fast == slow and (len(fast) > 0 or th == 0.9), th
     # a bucket-size cap must route back to the join path (dropped
@@ -1443,7 +1449,7 @@ def test_incremental_allpairs_matches_probe_join(spark, monkeypatch):
     for th in (0.2, 0.5, 0.9):
         fast = run(th)
         with monkeypatch.context() as m:
-            m.setattr(D, "_allpairs_collect", lambda *a, **k: None)
+            m.setattr(D, "collect_if_small", lambda *a, **k: None)
             slow = run(th)
         assert fast == slow and (len(fast) > 0 or th == 0.9), th
     # the direct path really engaged: no banded bucket join
@@ -1488,7 +1494,7 @@ def test_incremental_allpairs_corpus_dup_id_window(spark, monkeypatch):
         return out
 
     fast = run()
-    monkeypatch.setattr(D, "_allpairs_collect", lambda *a, **k: None)
+    monkeypatch.setattr(D, "collect_if_small", lambda *a, **k: None)
     slow = run()
     assert fast == slow == [(1, 10, 0.5)]
 
@@ -1518,7 +1524,7 @@ def test_minhash_allpairs_non_divisible_bands(spark, monkeypatch):
 
     fast = run_lsh()
     with monkeypatch.context() as m:
-        m.setattr(D, "_allpairs_collect", lambda *a, **k: None)
+        m.setattr(D, "collect_if_small", lambda *a, **k: None)
         slow = run_lsh()
     assert fast == slow and len(fast) > 0
 
@@ -1535,7 +1541,7 @@ def test_minhash_allpairs_non_divisible_bands(spark, monkeypatch):
 
     fast = run_inc()
     with monkeypatch.context() as m:
-        m.setattr(D, "_allpairs_collect", lambda *a, **k: None)
+        m.setattr(D, "collect_if_small", lambda *a, **k: None)
         slow = run_inc()
     assert fast == slow and len(fast) > 0
 

@@ -289,7 +289,7 @@ def test_incremental_minhash_finds_cross_corpus_dup(spark, monkeypatch):
     # broadcasts, the corpus side must not
     from yardstick_spark.llm import dedup as D
 
-    monkeypatch.setattr(D, "_allpairs_collect", lambda *a, **k: None)
+    monkeypatch.setattr(D, "collect_if_small", lambda *a, **k: None)
     jpairs = incremental_minhash_pairs(new, corpus, threshold=0.5)
     jgot = [(r["new_id"], r["corpus_id"]) for r in jpairs.collect()]
     assert jgot == got
@@ -443,8 +443,8 @@ def test_fingerprint_overlap_max_df_caps_hot_prints(spark):
 
 
 def test_pipeline_caches_do_not_accumulate(spark):
-    # operators register cache barriers in dedup._CACHED; a long-lived
-    # session that clears between runs must not grow the JVM's
+    # operators register cache barriers in the sparkutil registry; a
+    # long-lived session that clears between runs must not grow the JVM's
     # persisted-RDD set run over run (the documented lifecycle contract
     # in yardstick_spark.llm.__doc__)
     from yardstick_spark.llm import clear_dedup_caches

@@ -20,7 +20,11 @@ import tempfile
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
+# the Python workers import the package too: give them the checkout
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    filter(None, [str(ROOT), os.environ.get("PYTHONPATH")]))
 
 
 def _line(rec: dict) -> str:

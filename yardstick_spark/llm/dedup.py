@@ -21,47 +21,9 @@ import functools
 
 from pyspark.sql import DataFrame, functions as F
 
-# 60-bit portable hash: int(md5_hex[:15], 16).  Both Spark (conv) and
-# DuckDB (CAST('0x..' AS BIGINT)) produce the same value.
-_H = "CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
-
-
-def _portable_hash(expr: str) -> str:
-    return _H.format(expr=expr)
-
-
-# Every cache() in this module is a materialization barrier (see the
-# per-site comments); they are registered here so long-lived sessions
-# can release them — call clear_dedup_caches() between pipeline runs.
-_CACHED: list[DataFrame] = []
-
-
-def _cache(df: DataFrame) -> DataFrame:
-    df = df.cache()
-    _CACHED.append(df)
-    return df
-
-
-def _register(df: DataFrame) -> DataFrame:
-    """Track an already-materialized frame (eager localCheckpoint) in
-    the shared registry WITHOUT re-caching it.  unpersist() on a
-    checkpointed frame is a no-op; the actual release path is
-    ContextCleaner GC once the Python/JVM references drop — which
-    clear_dedup_caches() triggers by popping the registry entry, the
-    same lifecycle every cache() barrier gets."""
-    _CACHED.append(df)
-    return df
-
-
-def clear_dedup_caches() -> None:
-    """Unpersist every intermediate this module has cached.  Results
-    already materialized stay valid; unmaterialized lazy results will
-    recompute (correct, just slower)."""
-    while _CACHED:
-        try:
-            _CACHED.pop().unpersist()
-        except Exception:
-            pass
+from ..sparkutil import (MH_P, cache, clear_dedup_caches,  # noqa: F401
+                         collect_if_small, local_input, parquet_rows,
+                         portable_hash)
 
 
 def _pairs_hint(cand: DataFrame, max_pairs: int | None) -> DataFrame:
@@ -82,7 +44,7 @@ def _pairs_hint(cand: DataFrame, max_pairs: int | None) -> DataFrame:
     corpora) the hint is dropped and AQE chooses."""
     if not max_pairs or max_pairs <= 0:
         return cand
-    c = _cache(cand)
+    c = cache(cand)
     return F.broadcast(c) if c.count() <= max_pairs else c
 
 
@@ -275,7 +237,7 @@ def _spread(df: DataFrame) -> DataFrame:
     exact probe (free on scan-only frames)."""
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    local = _local_input(df)
+    local = local_input(df)
     if local is not None:
         try:
             raw = spark.conf.get(
@@ -298,39 +260,6 @@ def _spread(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
-
-
-def _local_input(df: DataFrame) -> tuple[list, int] | None:
-    """(local file paths, total bytes) of `df`'s scan input, read from
-    file metadata on the driver — no Spark job — or None when the
-    frame is not local-file-backed (no file scan, a remote FS, or
-    metadata that cannot be read).  The one input-size probe behind
-    the `_spread`, `_spread_by_bytes` and `_fan_out_for_queries`
-    partition gates."""
-    import os
-
-    try:
-        paths = [f.removeprefix("file:") for f in df.inputFiles()]
-        if not paths or not all(p.startswith("/") for p in paths):
-            return None
-        return paths, sum(os.path.getsize(p) for p in paths)
-    except Exception:  # noqa: BLE001
-        return None
-
-
-def _parquet_rows(paths: list) -> int | None:
-    """Row total from the parquet footers of `paths` (pyarrow metadata
-    on the driver: no Spark job, no data read), or None unless every
-    path is a readable parquet footer — a PARTIAL total would silently
-    under-partition the per-row-cost chains the row floors protect."""
-    try:
-        import pyarrow.parquet as pq
-
-        if not all(p.endswith(".parquet") for p in paths):
-            return None
-        return sum(pq.ParquetFile(p).metadata.num_rows for p in paths)
-    except Exception:  # noqa: BLE001
-        return None
 
 
 def _spread_by_bytes(df: DataFrame, bytes_per_part: int = 8 << 20,
@@ -357,11 +286,11 @@ def _spread_by_bytes(df: DataFrame, bytes_per_part: int = 8 << 20,
     parquet skip the floor."""
     cores = df.sparkSession.sparkContext.defaultParallelism
     target = cores
-    local = _local_input(df)
+    local = local_input(df)
     if local is not None and local[1] > 0:
         paths, total = local
         target = min(cores, 1 + total // bytes_per_part)
-        rows = _parquet_rows(paths) if rows_per_part else None
+        rows = parquet_rows(paths) if rows_per_part else None
         if rows:
             target = min(cores, max(target, 1 + rows // rows_per_part))
     if target < cores:
@@ -383,7 +312,7 @@ def _shingled(docs: DataFrame, text_col: str, id_col: str,
     regexp into the shingling lambda (one regexp PER SHINGLE instead of
     per document — measured 36s -> 4s for the downstream consumer at
     sf0.1).  The cached set is one short array row per document."""
-    return _cache(
+    return cache(
         _spread(docs.select(
             F.col(id_col).alias("id"),
             F.col(text_col).alias("__t"),
@@ -457,7 +386,7 @@ def _family_collapse(rows: DataFrame, key_col: str):
         # per-element constant.  element_at also returns NULL for an
         # empty array, which correctly degrades to a singleton family.
         null_key = null_key | F.element_at(F.col(key_col), 1).isNull()
-    tagged = _cache(rows.withColumn(
+    tagged = cache(rows.withColumn(
         "__rep",
         F.when(null_key, F.col("id")).otherwise(F.min("id").over(w))))
     reps = tagged.filter(F.col("id") == F.col("__rep")).drop("__rep")
@@ -546,7 +475,7 @@ def _rarity_sid_table(freq0: DataFrame) -> DataFrame:
     from pyspark.sql import Window
 
     npart = freq0.sparkSession.sparkContext.defaultParallelism
-    ranked = _cache(
+    ranked = cache(
         freq0.repartitionByRange(npart, "df", "sh")
         .withColumn("pid", F.spark_partition_id())
         .withColumn(
@@ -603,8 +532,8 @@ def _sid_sets(sets0: DataFrame) -> tuple[DataFrame, int]:
     # vs str) and never join back anyway — drop them up front.  Cached
     # before any ranking: the distributed path's range-bounds sampling
     # job would otherwise re-run the explode+groupBy.
-    freq0 = _cache(sh.filter(F.col("sh").isNotNull())
-                   .groupBy("sh").agg(F.count("*").alias("df")))
+    freq0 = cache(sh.filter(F.col("sh").isNotNull())
+                  .groupBy("sh").agg(F.count("*").alias("df")))
     universe = freq0.count()
     if universe <= 200_000:
         order = sorted((r["df"], r["sh"]) for r in freq0.collect())
@@ -750,19 +679,6 @@ def _allpairs_r_max(words: int) -> int:
                (64 << 20) // (words * 8))
 
 
-def _allpairs_collect(df: DataFrame, n_max: int) -> list | None:
-    """The one bounded driver collect behind the direct enumerations:
-    at most `n_max` + 1 rows of `df` in ONE job, returning the rows
-    when they fit `n_max`, else None (the caller builds its join
-    path).  Deciding the gate and fetching the matrix in the same job
-    replaces a count-then-collect pair — a second AQE job round per
-    consumer query is exactly the fixed cost the direct paths exist to
-    remove.  Tests patch this to return None to pin every direct path
-    against its join."""
-    rows = df.limit(n_max + 1).collect()
-    return rows if len(rows) <= n_max else None
-
-
 _Q6 = decimal.Decimal("0.000001")
 
 
@@ -805,7 +721,7 @@ def _rep_pair_blocks(spark, rows: list, id_type: str, value_col: str,
     """The direct rep-pair enumeration driver shared by the bitmap
     (`_allpairs_arrow`) and minhash (`_minhash_allpairs`) scorers —
     returns (id_a, id_b, <value_col>) for every pair i < j of `rows`
-    (an admitted `_allpairs_collect` result) that `score` keeps.
+    (an admitted `collect_if_small` result) that `score` keeps.
 
     The rows are id-sorted (None first) so equal ids form adjacent
     runs: run_end[i] is the smallest j > i with ids[j] != ids[i], which
@@ -861,7 +777,7 @@ def _allpairs_arrow(isets: DataFrame, rows: list, universe: int,
                     threshold: float, metric: str) -> DataFrame:
     """Direct rep-pair enumeration + popcount scoring for hot-vocab
     corpora — rep-level (id_a, id_b, <metric>) pairs over the admitted
-    (id, n_sh, vs) rows of `_allpairs_collect`.
+    (id, n_sh, vs) rows of `collect_if_small`.
 
     Replaces prefix-explode -> self-join -> keys-only distinct ->
     Arrow verify with: collect the (already-gated ≤64 MB) rep bitmap
@@ -1020,7 +936,7 @@ def _set_sim_pairs(docs: DataFrame, text_col: str, id_col: str, k: int,
     # re-expanded by _family_expand with bit-identical values (the
     # similarity of identical sets is exactly 1.0, and a cross-family
     # value is a pure function of the representatives' sets).
-    # (no caller-side _cache: _family_collapse reads sid_sets exactly
+    # (no caller-side cache(): _family_collapse reads sid_sets exactly
     # once to build its cached `tagged` frame — the tagged cache IS
     # the barrier, a second cache here would only double the
     # persisted footprint)
@@ -1048,7 +964,7 @@ def _set_sim_pairs(docs: DataFrame, text_col: str, id_col: str, k: int,
     if universe <= 4096:
         rows = None
         if threshold > 0:
-            rows = _allpairs_collect(
+            rows = collect_if_small(
                 isets.select("id", "n_sh", _bits_col(isets, universe)),
                 _allpairs_r_max((universe + 63) // 64))
         if rows is not None:
@@ -1243,10 +1159,6 @@ def ngram_containment_pairs(docs: DataFrame, text_col: str = "text",
                           max_broadcast_pairs)
 
 
-# Mersenne prime 2^31-1 for the universal-hash permutation family
-_MH_P = 2147483647
-
-
 def minhash_signatures(docs: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", k: int = 5,
                        num_hashes: int = 32) -> DataFrame:
@@ -1314,12 +1226,12 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text",
                         if len(memo) >= 262_144:
                             memo.clear()
                         h = int(md5(x.encode("utf-8")).hexdigest()[:15],
-                                16) % _MH_P
+                                16) % MH_P
                         memo[x] = h
                     hs_l.append(h)
                 hs = np.asarray(hs_l, dtype=np.int64)
                 sigs.append(
-                    ((hs[:, None] * mult + add) % _MH_P).min(axis=0)
+                    ((hs[:, None] * mult + add) % MH_P).min(axis=0)
                     .tolist())
             # object dtype so empty batches don't infer a float64
             # column Arrow cannot cast to array<bigint>
@@ -1399,7 +1311,7 @@ def _minhash_allpairs(sigs: DataFrame, num_hashes: int, bands: int,
         return None
     # bounded: r_max derives from the word budget and the 64 MB matrix
     # cap, ≤ ~8 MB of signatures
-    rows = _allpairs_collect(
+    rows = collect_if_small(
         sigs.filter(F.element_at(F.col("signature"), 1).isNotNull())
         .filter(F.col("id").isNotNull()).select("id", "signature"),
         _allpairs_r_max(num_hashes))
@@ -1486,7 +1398,7 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
     # quadratically; same measurement class as the ppjoin collapse)
     sigs, members = _family_collapse(
         # read once into the collapse's own tagged cache — see the
-        # ppjoin site for why no second _cache here
+        # ppjoin site for why no second cache() here
         minhash_signatures(docs, text_col, id_col, k, num_hashes),
         "signature",
     )
@@ -1550,12 +1462,12 @@ def simhash64(docs: DataFrame, text_col: str = "text",
     are identical content and do pair, same as any identical pair."""
     norm = _norm_text(text_col)
     tokens = f"filter(split({norm}, ' '), t -> t <> '')"
-    tok_hash = _portable_hash("t")
+    tok_hash = portable_hash("t")
     # hash each token ONCE into an int64 array; same cache() barrier as
     # minhash_signatures — without it Catalyst collapses the projection
     # and inlines the md5 into all 60 per-bit lambdas (60x the md5 work)
     base = f"transform({tokens}, t -> CAST({tok_hash} AS BIGINT))"
-    hashed = _cache(_spread(docs).select(
+    hashed = cache(_spread(docs).select(
         F.col(id_col).alias("id"), F.expr(base).alias("__ys_th")
     ))
     # votes[i] = sum over tokens of (bit i set ? 1 : -1)
@@ -1737,7 +1649,7 @@ def _incremental_allpairs(new_sigs: DataFrame, corp_sigs: DataFrame,
     if nid_type != cid_type:
         return None  # the join would resolve a cast; keep it
     b_max = min(4096, (8 << 20) // (num_hashes * 8))
-    rows = _allpairs_collect(
+    rows = collect_if_small(
         new_sigs.filter(F.col("id").isNotNull())
         .filter(F.element_at(F.col("signature"), 1).isNotNull())
         .filter(F.size("signature") == num_hashes)
@@ -1925,7 +1837,7 @@ def incremental_minhash_pairs(new_docs: DataFrame, corpus: DataFrame,
     probe gate) — plan-only consumers (explain/dry-run tooling) pay
     that job at build time, not at action time.
     """
-    new_sigs = _cache(
+    new_sigs = cache(
         minhash_signatures(new_docs, text_col, id_col, k, num_hashes)
     )
     corp_sigs = minhash_signatures(corpus, text_col, id_col, k, num_hashes)
@@ -1971,7 +1883,7 @@ def incremental_pairs_against_store(new_docs: DataFrame, spark, path: str,
     never re-read and never re-hashed: cost is O(batch) + a scan of the
     bucket/signature parquet, independent of corpus text size."""
     corp_sigs, corp_buckets = load_dedup_signatures(spark, path)
-    new_sigs = _cache(
+    new_sigs = cache(
         minhash_signatures(new_docs, text_col, id_col, k, num_hashes)
     )
     return _probe_and_verify(new_sigs, corp_sigs, corp_buckets,

@@ -31,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..sparkutil import cache
+
 
 def blocking_keys(
     df: DataFrame,
@@ -183,8 +185,6 @@ def _collapsed_pairs(
     well-formed ER table) keep the record-grain path, unchanged."""
     from pyspark.sql import Window
 
-    from .dedup import _cache
-
     norm = F.lower(F.trim(F.col(text_col)))
     fams = df.select(F.col(id_col).alias("id"), norm.alias("s")).distinct()
     # one aggregate decides the gate: count(*) == count(id) rules out
@@ -195,9 +195,9 @@ def _collapsed_pairs(
     if not (g["n"] == g["nn"] == g["nd"]):
         return None
     w = Window.partitionBy("s")
-    tagged = _cache(fams.withColumn("rid", F.min("id").over(w)))
+    tagged = cache(fams.withColumn("rid", F.min("id").over(w)))
     reps = (tagged.groupBy("s", "rid").agg(F.count("*").alias("fam_n")))
-    keyed = _cache(
+    keyed = cache(
         _capped_blocks(reps, "rid", "s", len_bucket, max_block, "fam_n")
     )
     rep_pairs = _verify_pairs(keyed, max_edit)
@@ -321,21 +321,19 @@ def fuzzy_cluster_edges(
     rows.  Edge count falls from sum of squared family sizes to
     n_members + rep pairs, which is what keeps the downstream
     connected-components' driver union-find gate usable."""
-    from .dedup import _cache
-
     norm = F.lower(F.trim(F.col(text_col)))
     fams = (
         df.select(F.col(id_col).alias("id"), norm.alias("s"))
         .where(F.col("s").isNotNull() & (F.col("s") != ""))
     )
-    reps = _cache(
+    reps = cache(
         fams.groupBy("s").agg(
             F.min("id").alias("rid"), F.count("*").alias("fam_n")
         )
     )
     # member-grain cap: block sizes are summed family sizes, so the
     # surviving-block set matches the record-grain computation exactly
-    keyed = _cache(
+    keyed = cache(
         _capped_blocks(reps, "rid", "s", len_bucket, max_block, "fam_n")
     )
     # families that kept >=1 block — only these have intra-family

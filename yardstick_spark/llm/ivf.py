@@ -18,6 +18,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..sparkutil import cache, portable_hash
+
 
 def _as_vec(col: str) -> str:
     return f"transform({col}, x -> CAST(x AS DOUBLE))"
@@ -41,13 +43,11 @@ def build_ivf_index(corpus: DataFrame, id_col: str = "vec_id",
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    # registered via dedup._cache so clear_dedup_caches() releases the
-    # feature blocks (the returned `assigned` frame still reads them;
+    # registered via sparkutil.cache so clear_dedup_caches() releases
+    # the feature blocks (the returned `assigned` frame still reads them;
     # unmaterialized consumers recompute after a clear — documented
     # lifecycle in llm.__doc__)
-    from .dedup import _cache
-
-    feats = _cache(corpus.select(
+    feats = cache(corpus.select(
         F.col(id_col).alias("id"),
         F.expr(_as_vec(vec_col)).alias("arr"),
     ).withColumn("features", array_to_vector("arr")))
@@ -77,8 +77,7 @@ def seed_centroids(corpus: DataFrame, id_col: str = "vec_id",
     fitted k-means on clustered data (seeds ignore the distribution)
     but the probe structure and cost model are identical.
     """
-    h = (f"CAST(conv(substring(md5(CAST({id_col} AS STRING)), 1, 15), "
-         f"16, 10) AS BIGINT)")
+    h = portable_hash(f"CAST({id_col} AS STRING)")
     # NULL/empty vectors can never seed a cell (a NULL centroid would
     # poison every distance fold downstream); the filter is a no-op on
     # clean corpora, so the SQL oracles — which don't model it — agree

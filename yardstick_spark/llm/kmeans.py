@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..sparkutil import cache, collect_if_small, portable_hash
+
 _QUANT = 1_000_000  # 1e-6 coordinate grid, shared with the oracle SQL
 
 # literal-centroid ceiling: k above this would bloat the generated SQL
@@ -133,55 +135,11 @@ def _fit_driver(rows, k: int, iters: int) -> list[tuple[int, list[int]]]:
     return cents
 
 
-def kmeans_assign(vecs: DataFrame, k: int = 8, iters: int = 3,
-                  vec_col: str = "embedding",
-                  id_col: str = "vec_id",
-                  driver_max_vectors: int = 200_000) -> DataFrame:
-    """Fit k-means with `iters` Lloyd updates and return the final
-    assignment (id_col, cell, dist_q) — dist_q is the exact integer
-    squared distance on the 1e-6 grid (grid units squared).
-
-    Empty cells drop out of later iterations (standard Lloyd empty-
-    cluster handling), so fewer than k cells may appear.  Ragged
-    corpora: vectors shorter than a centroid zip to the shorter
-    length; callers with mixed dims should pre-filter (the testdata
-    corpus is fixed-dim).
-
-    `driver_max_vectors`: corpora at or under this row count fit the
-    centroids driver-side in numpy instead of running k - 1 seeding
-    scans plus one collect per Lloyd round — the same explicit-gate
-    pattern as `pagerank` / `connected_components`.  The fit loop is
-    otherwise ~2k + iters sequential tiny Spark jobs whose scheduling
-    floor dwarfs the arithmetic on a small corpus (measured: 18 jobs
-    summing 0.9 s of job time inside a 2.9 s sf0.1 query), while the
-    gate bound keeps the collect ≤ ~100 MB (200k rows × dim 64 int64).
-    At data scale the gate fails after one count on the cached
-    quantized projection (which the seeding scan materializes anyway)
-    and the distributed fit below runs unchanged.  The driver fit
-    replays the exact integer-grid arithmetic (see `_fit_driver`), so
-    the centroids — and therefore the returned assignment, which is
-    computed by the SAME distributed literal-centroid scan either way
-    — are bit-identical; `test_kmeans_driver_gate_matches_distributed`
-    pins this.  Set `driver_max_vectors=0` to force the distributed
-    fit."""
-    if k > _MAX_K:
-        raise ValueError(f"k={k} exceeds the literal-centroid ceiling "
-                         f"{_MAX_K}; use the IVF Arrow path for wide k")
-    from .dedup import _cache  # shared registry, clear_dedup_caches()
-
-    vq = _cache(_quantized(vecs, vec_col, id_col))
-    if driver_max_vectors and vq.count() <= driver_max_vectors:
-        rows = vq.collect()
-        if not rows:
-            return vq.select(F.col("id").alias(id_col),
-                             F.lit(None).cast("int").alias("cell"),
-                             F.lit(None).cast("bigint").alias("dist_q"))
-        cents = _fit_driver(rows, k, iters)
-        return (
-            _assign(vq, cents)
-            .select(F.col("id").alias(id_col),
-                    F.col("cell").cast("int").alias("cell"), "dist_q")
-        )
+def _fit_distributed(vq: DataFrame, k: int,
+                     iters: int) -> list[tuple[int, list[int]]]:
+    """Seeding + Lloyd as Spark jobs over the cached quantized
+    projection — the large-corpus half of `kmeans_assign`; [] for an
+    empty corpus."""
     # farthest-first seeding (Gonzalez 1985): seed 0 is the min-id
     # vector; each next seed maximizes its exact integer distance to
     # the chosen set (ties to the smaller id).  Deterministic, covers
@@ -191,9 +149,7 @@ def kmeans_assign(vecs: DataFrame, k: int = 8, iters: int = 3,
     # TakeOrdered(1) over the cached quantized projection.
     first = vq.orderBy("id").select("xq").limit(1).collect()
     if not first:
-        return vq.select(F.col("id").alias(id_col),
-                         F.lit(None).cast("int").alias("cell"),
-                         F.lit(None).cast("bigint").alias("dist_q"))
+        return []
     cents = [(0, [int(x) for x in first[0]["xq"]])]
     for s in range(1, k):
         dmin = (
@@ -218,6 +174,52 @@ def kmeans_assign(vecs: DataFrame, k: int = 8, iters: int = 3,
         rows = assigned.groupBy("cell").agg(*mean_cols).collect()
         cents = sorted((int(r["cell"]), [int(r[f"c{d}"]) for d in range(dim)])
                        for r in rows)
+    return cents
+
+
+def kmeans_assign(vecs: DataFrame, k: int = 8, iters: int = 3,
+                  vec_col: str = "embedding",
+                  id_col: str = "vec_id",
+                  driver_max_vectors: int = 200_000) -> DataFrame:
+    """Fit k-means with `iters` Lloyd updates and return the final
+    assignment (id_col, cell, dist_q) — dist_q is the exact integer
+    squared distance on the 1e-6 grid (grid units squared).
+
+    Empty cells drop out of later iterations (standard Lloyd empty-
+    cluster handling), so fewer than k cells may appear.  Ragged
+    corpora: vectors shorter than a centroid zip to the shorter
+    length; callers with mixed dims should pre-filter (the testdata
+    corpus is fixed-dim).
+
+    `driver_max_vectors`: corpora at or under this row count fit the
+    centroids driver-side in numpy instead of running k - 1 seeding
+    scans plus one collect per Lloyd round — the same explicit-gate
+    pattern as `pagerank` / `connected_components`.  The fit loop is
+    otherwise ~2k + iters sequential tiny Spark jobs whose scheduling
+    floor dwarfs the arithmetic on a small corpus (measured: 18 jobs
+    summing 0.9 s of job time inside a 2.9 s sf0.1 query), while the
+    gate bound keeps the collect ≤ ~100 MB (200k rows × dim 64 int64).
+    At data scale the gate fails after one count on the cached
+    quantized projection (which the seeding scan materializes anyway)
+    and `_fit_distributed` runs unchanged.  The driver fit replays the exact integer-grid
+    arithmetic (see `_fit_driver`), so the centroids — and therefore
+    the returned assignment, which is computed by the SAME distributed
+    literal-centroid scan either way — are bit-identical;
+    `test_kmeans_driver_gate_matches_distributed` pins this.  Set
+    `driver_max_vectors=0` to force the distributed fit."""
+    if k > _MAX_K:
+        raise ValueError(f"k={k} exceeds the literal-centroid ceiling "
+                         f"{_MAX_K}; use the IVF Arrow path for wide k")
+    vq = cache(_quantized(vecs, vec_col, id_col))
+    rows = collect_if_small(vq, driver_max_vectors, count_first=True)
+    if rows is None:
+        cents = _fit_distributed(vq, k, iters)
+    else:
+        cents = _fit_driver(rows, k, iters) if rows else []
+    if not cents:  # empty corpus: no vector can seed a cell
+        return vq.select(F.col("id").alias(id_col),
+                         F.lit(None).cast("int").alias("cell"),
+                         F.lit(None).cast("bigint").alias("dist_q"))
     return (
         _assign(vq, cents)
         .select(F.col("id").alias(id_col),
@@ -240,8 +242,7 @@ def cluster_balanced_sample(vecs: DataFrame, k: int = 8, iters: int = 3,
     cell-grain window — per-cell top-n, never a global sort."""
     assigned = kmeans_assign(vecs, k=k, iters=iters, vec_col=vec_col,
                              id_col=id_col)
-    key = (f"CAST(conv(substring(md5(concat('{seed}:', "
-           f"CAST({id_col} AS STRING))), 1, 15), 16, 10) AS BIGINT)")
+    key = portable_hash(f"concat('{seed}:', CAST({id_col} AS STRING))")
     w = Window.partitionBy("cell").orderBy(F.expr(key), F.col(id_col))
     return (
         assigned.withColumn("rn", F.row_number().over(w))

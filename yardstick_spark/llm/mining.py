@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .similarity import _as_double
+from ..sparkutil import as_double, cache, collect_if_small
 
 
 def hard_negatives(corpus: DataFrame, anchors: DataFrame, k: int = 5,
@@ -52,12 +52,12 @@ def hard_negatives(corpus: DataFrame, anchors: DataFrame, k: int = 5,
     a = anchors.select(
         F.col(id_col).alias("anchor_id"),
         F.col(label_col).alias("anchor_label"),
-        F.expr(_as_double(vec_col)).alias("av"),
+        F.expr(as_double(vec_col)).alias("av"),
     ).withColumn("an", F.expr(nrm.format(v="av")))
     c = corpus.select(
         F.col(id_col).alias("negative_id"),
         F.col(label_col).alias("negative_label"),
-        F.expr(_as_double(vec_col)).alias("cv"),
+        F.expr(as_double(vec_col)).alias("cv"),
     ).withColumn("cn", F.expr(nrm.format(v="cv")))
     dot = "aggregate(zip_with(av, cv, (x, y) -> x * y), 0D, (s, v) -> s + v)"
     sim = F.expr(f"({dot} / nullif(an * cn, 0D))")
@@ -97,7 +97,7 @@ def label_prototypes(vecs: DataFrame, id_col: str = "vec_id",
     partitionings up to summation order at the 1e-6 level."""
     parts = (
         vecs.select(F.col(label_col).alias("label"),
-                    F.posexplode(F.expr(_as_double(vec_col)))
+                    F.posexplode(F.expr(as_double(vec_col)))
                     .alias("pos", "val"))
         .groupBy("label", "pos")
         .agg(F.avg("val").alias("mean_val"), F.count("*").alias("n"))
@@ -131,7 +131,7 @@ def label_medoids(vecs: DataFrame, id_col: str = "vec_id",
     v = vecs.select(
         F.col(id_col).alias("medoid_id"),
         F.col(label_col).alias("label"),
-        F.expr(_as_double(vec_col)).alias("vv"),
+        F.expr(as_double(vec_col)).alias("vv"),
     ).withColumn("vn", F.expr(nrm.format(v="vv")))
     c = cents.select("label", F.col("centroid").alias("cv")).withColumn(
         "cn", F.expr(nrm.format(v="cv")))
@@ -186,7 +186,7 @@ def embedding_outliers(vecs: DataFrame, id_col: str = "vec_id",
     scored = (
         vecs.select(F.col(id_col).alias("id"),
                     F.col(label_col).alias("label"),
-                    F.expr(_as_double(vec_col)).alias("v"))
+                    F.expr(as_double(vec_col)).alias("v"))
         .join(F.broadcast(protos), "label")
         .select("id", "label", dist.alias("dist"))
     )
@@ -199,25 +199,26 @@ def embedding_outliers(vecs: DataFrame, id_col: str = "vec_id",
         (F.round(z, round_to) + F.lit(0.0)).alias("z"))
 
 
-def _mmr_driver(cand: DataFrame, pair: DataFrame, k: int, lam: float,
-                onemlam: float) -> DataFrame:
-    """Greedy MMR rounds over gate-checked collected pool tables —
-    the small-pool half of `mmr_rerank` (the pagerank/kmeans/LPA gate
-    pattern).  Replays the distributed rounds exactly: the same two
-    double literals score `lam*sim - onemlam*coalesce(pen, 0)`, the
-    same (score desc NULLS LAST, neighbor_id asc) pick, pen = MAX of
-    the non-NULL pairwise sims against the selected set.  Pinned by
+def _mmr_driver(cand: DataFrame, k: int, lam: float, onemlam: float,
+                cand_rows: list, pair_rows: list) -> DataFrame:
+    """Greedy MMR rounds over the gate-fetched rows of the candidate
+    pool and its pairwise table — the small-pool half of `mmr_rerank`
+    (the pagerank/kmeans/LPA gate pattern).  Replays the distributed
+    rounds exactly: the same two double literals score
+    `lam*sim - onemlam*coalesce(pen, 0)`, the same (score desc NULLS
+    LAST, neighbor_id asc) pick, pen = MAX of the non-NULL pairwise
+    sims against the selected set.  Pinned by
     `test_mmr_driver_gate_matches_distributed`."""
     from pyspark.sql.types import (DoubleType, IntegerType, StructField,
                                    StructType)
 
     spark = cand.sparkSession
     by_q: dict = {}
-    for r in cand.collect():
+    for r in cand_rows:
         by_q.setdefault(r["query_id"], []).append(
             (r["neighbor_id"], r["sim"]))
     ps: dict = {}
-    for r in pair.collect():
+    for r in pair_rows:
         if r["ps"] is not None:
             ps[(r["query_id"], r["a"], r["b"])] = r["ps"]
     out = []
@@ -280,18 +281,17 @@ def mmr_rerank(corpus: DataFrame, queries: DataFrame, k: int = 5,
     score arithmetic uses the same two double literals on both
     engines, ties break to the lower id — `mmr_sql` unrolls the
     identical rounds for the DuckDB oracle."""
-    from .dedup import _cache
     from .similarity import brute_force_knn
 
     onemlam = 1.0 - lam
-    cand = _cache(
+    cand = cache(
         brute_force_knn(corpus, queries, k=pool, id_col=id_col,
                         vec_col=vec_col, round_to=4)
         .select("query_id", "neighbor_id", "sim"))
     nrm = "sqrt(aggregate(v, 0D, (s, x) -> s + x * x))"
     vecs = corpus.select(
         F.col(id_col).alias("neighbor_id"),
-        F.expr(_as_double(vec_col)).alias("v"),
+        F.expr(as_double(vec_col)).alias("v"),
     ).withColumn("nn", F.expr(nrm))
     cv = cand.select("query_id", "neighbor_id").join(vecs, "neighbor_id")
     a = cv.selectExpr("query_id", "neighbor_id AS a", "v AS va",
@@ -300,7 +300,7 @@ def mmr_rerank(corpus: DataFrame, queries: DataFrame, k: int = 5,
                       "nn AS nb")
     dot = ("aggregate(zip_with(va, vb, (x, y) -> x * y), 0D, "
            "(s, t) -> s + t)")
-    pair = _cache(
+    pair = cache(
         a.join(b, "query_id")
         .where(F.col("a") != F.col("b"))
         .select("query_id", "a", "b",
@@ -312,21 +312,19 @@ def mmr_rerank(corpus: DataFrame, queries: DataFrame, k: int = 5,
     # re-rank (measured 42 jobs inside a 3.7 s sf0.1 query).  The gate
     # count runs on the cached candidate pool the loop needs
     # materialized anyway; above the bound the loop runs unchanged.
-    # _mmr_driver collects BOTH cand and pair, and pair is cand ×
-    # (pool - 1) rows — so the gate bounds the pair collect too (a
-    # caller-supplied pool of 500 would otherwise push 50M rows
-    # through one collect() behind a gate that reported "small").  That
-    # estimate assumes unique corpus ids — a duplicated id fans the
-    # pair join out past it — so once it passes, the collect is bounded
-    # by the cached pair table's real count (materialized here for the
-    # collect anyway).
-    if driver_max_pool_rows:
-        cand_n = cand.count()
-        pair_max = 20 * driver_max_pool_rows
-        if (cand_n <= driver_max_pool_rows
-                and cand_n * max(pool - 1, 0) <= pair_max
-                and pair.count() <= pair_max):
-            return _mmr_driver(cand, pair, k, lam, onemlam)
+    # pair is cand × (pool - 1) rows, so that estimate bounds the pair
+    # fetch too (a pool of 500 would otherwise push 50M rows to the
+    # driver); it assumes unique corpus ids — a duplicated id fans the
+    # pair join out past it — so the pair fetch counts against its own
+    # bound.
+    cand_rows = collect_if_small(cand, driver_max_pool_rows,
+                                 count_first=True)
+    pair_max = 20 * driver_max_pool_rows
+    if (cand_rows is not None
+            and len(cand_rows) * max(pool - 1, 0) <= pair_max):
+        pair_rows = collect_if_small(pair, pair_max, count_first=True)
+        if pair_rows is not None:
+            return _mmr_driver(cand, k, lam, onemlam, cand_rows, pair_rows)
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("neighbor_id"))
     selected = (

@@ -27,6 +27,7 @@ from struct import error as struct_error
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..sparkutil import cache
 from .dedup import _spread_by_bytes
 from pyspark.sql.types import (
     ArrayType,
@@ -1431,9 +1432,7 @@ def phash_pairs(media: DataFrame, max_hamming: int = 3,
     if max_hamming > 3:
         raise ValueError("banded candidates are exact only for "
                          "small hamming budgets (pigeonhole)")
-    from .dedup import _cache
-
-    sigs = _cache(
+    sigs = cache(
         phash64(media, hash_size).where(F.col("phash").isNotNull())
     )
     # max_hamming+1 disjoint bands covering all 64 bits: h flipped bits

@@ -43,7 +43,8 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (DecimalType, DoubleType, IntegerType,
                                LongType, StructField, StructType)
 
-from .similarity import _as_double, _length_groups, _md5_signs
+from ..sparkutil import as_double
+from .similarity import _length_groups, _md5_signs
 
 # driver-side eigh gate: d=512 -> 131k covariance cells, a 2 MB
 # collect and a <1 s LAPACK call; past that, dense driver eigh is the
@@ -170,7 +171,7 @@ def covariance_matrix(vecs: DataFrame, vec_col: str = "embedding",
     empty vectors are skipped (same policy as `_length_groups`)."""
 
     parts = (
-        vecs.select(F.expr(_as_double(vec_col)).alias("v"))
+        vecs.select(F.expr(as_double(vec_col)).alias("v"))
         .filter(F.col("v").isNotNull() & (F.size("v") > 0))
         .mapInPandas(_cov_partial_fn(), schema=_COV_PARTIAL_SCHEMA)
     )
@@ -354,7 +355,7 @@ def _project(vecs: DataFrame, mat, scale: float, k: int,
 
     return (
         vecs.select(F.col(id_col).cast("long").alias("id"),
-                    F.expr(_as_double(vec_col)).alias("v"))
+                    F.expr(as_double(vec_col)).alias("v"))
         # a NULL (or un-castable) id would round-trip through pandas
         # as NaN and astype to INT64_MIN — refuse it at the plan level
         .filter(F.col("id").isNotNull())

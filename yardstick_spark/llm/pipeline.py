@@ -14,6 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..sparkutil import cache
+
 from .dedup import exact_dedup
 from .text import gopher_filter, sample_mixture
 
@@ -34,9 +36,7 @@ def curate_corpus(docs: DataFrame, rates: dict[str, float],
     # localCheckpoint) so clear_dedup_caches() releases it — a
     # localCheckpoint here leaked one persisted RDD per pipeline run
     # until JVM GC got around to it.
-    from .dedup import _cache as _reg_cache
-
-    keep_q = _reg_cache(
+    keep_q = cache(
         gopher_filter(docs, text_col, id_col, min_stop_hits=min_stop_hits)
         .filter("keep").select(id_col)
     )
@@ -92,7 +92,6 @@ def curate_corpus_full(docs: DataFrame, rates: dict[str, float],
     is a map-side WindowGroupLimit), so the composed chain keeps the
     base pipeline's scale profile; each stage is optional (None skips
     it) and the whole chain stays SQL-expressible for the oracle."""
-    from .dedup import _cache
     from .text import repetition_stats, source_quota, split_corpus
 
     kept = curate_corpus(docs, rates, text_col, id_col, source_col,
@@ -100,7 +99,7 @@ def curate_corpus_full(docs: DataFrame, rates: dict[str, float],
     if max_dup_word_frac is not None or per_source is not None:
         # the added stages self-join `kept`; without a barrier each
         # reference re-evaluates the whole curation chain (measured 4x)
-        kept = _cache(kept)
+        kept = cache(kept)
     if max_dup_word_frac is not None:
         ok = (
             repetition_stats(kept, text_col, id_col)
@@ -136,7 +135,6 @@ def prepare_embedding_corpus(vecs: DataFrame, id_col: str = "vec_id",
     scan-side; SemDeDup shuffles each vector once to its cell; the
     quantizer adds one dim-cardinality aggregation and a scan-side
     transform.  The whole chain is SQL-expressible for the oracle."""
-    from .dedup import _cache
     from .quantize import quantization_params, quantize_embeddings
     from .similarity import semantic_dedup_pairs
 
@@ -152,8 +150,8 @@ def prepare_embedding_corpus(vecs: DataFrame, id_col: str = "vec_id",
     # norm-filter -> SemDeDup -> anti-join chain, re-executing the
     # dedup subtree once for the params and again for the result
     # (same discipline as curate_corpus_full's barrier above)
-    kept = _cache(ok.join(drops, F.col(id_col) == F.col("__drop_id"),
-                          "left_anti"))
+    kept = cache(ok.join(drops, F.col(id_col) == F.col("__drop_id"),
+                         "left_anti"))
     params = quantization_params(kept, vec_col=vec_col)
     keep_cols = ("__norm",) + ((label_col,) if label_col else ())
     qv = quantize_embeddings(kept, id_col=id_col, vec_col=vec_col,

@@ -41,7 +41,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .similarity import _as_double
+from ..sparkutil import as_double, cache, portable_hash
 
 # literal-tree gate: m * ks * sub_dim doubles are inlined into the
 # encode expression; 64 codes x 16 sub_dim = 1024 literals per sub is
@@ -54,10 +54,8 @@ def _hash_cell(sub_col: str, id_col: str, ks: int) -> str:
     ivf.seed_centroids, so DuckDB reproduces it verbatim.  `sub_col`
     is a COLUMN reference (the subspace explode below), not a literal,
     so all m subspaces hash in one scan."""
-    return (
-        f"pmod(CAST(conv(substring(md5(concat(CAST({sub_col} AS STRING), "
-        f"':', CAST({id_col} AS STRING))), 1, 15), 16, 10) AS BIGINT), {ks})"
-    )
+    key = f"concat(CAST({sub_col} AS STRING), ':', CAST({id_col} AS STRING))"
+    return f"pmod({portable_hash(key)}, {ks})"
 
 
 def pq_codebook(corpus: DataFrame, m: int = 8, ks: int = 16,
@@ -93,7 +91,7 @@ def pq_codebook(corpus: DataFrame, m: int = 8, ks: int = 16,
         # _codebook_rows re-validates consistency at collect time
         & (F.size(vec_col) % m == 0)
     ).select(F.col(id_col).alias("id"),
-             F.expr(_as_double(vec_col)).alias("arr"))
+             F.expr(as_double(vec_col)).alias("arr"))
     # ONE explode + ONE map-side-combined groupBy for all m subspaces
     # (not m separate jobs), and the slice width comes from size(arr)
     # — no driver round-trip before the shuffle
@@ -109,11 +107,9 @@ def pq_codebook(corpus: DataFrame, m: int = 8, ks: int = 16,
     # the m*ks cell table BROADCASTS against one corpus scan for the
     # donor fetch, and the (tiny) result is cached: encode and every
     # ADC search collect it, and without the barrier each collect
-    # would re-run the scan + groupBy (registered in dedup._CACHED so
+    # would re-run the scan + groupBy (registered so
     # clear_dedup_caches() releases it like every other barrier)
-    from .dedup import _cache
-
-    seeded = _cache(
+    seeded = cache(
         clean.join(F.broadcast(cells), "id")
         .select(
             "sub", "code",
@@ -142,10 +138,8 @@ def _pq_train(clean: DataFrame, seeded: DataFrame, m: int,
     result rows.  Assumes a fixed-dimension corpus like the seeded
     path (`_codebook_rows` raises on mixed widths when the book is
     consumed)."""
-    from .dedup import _cache
-
     sd = f"CAST(size(arr) / {m} AS INT)"
-    vq = _cache(
+    vq = cache(
         clean.select(
             "id", F.explode(F.expr(f"sequence(0, {m - 1})")).alias("sub"),
             "arr")
@@ -187,7 +181,7 @@ def _pq_train(clean: DataFrame, seeded: DataFrame, m: int,
     # cache barrier like the seeded book: encode AND every ADC search
     # collect the codebook (_codebook_rows); without it each collect
     # would re-run the whole training lineage
-    return _cache(cents.select(
+    return cache(cents.select(
         "sub", "code",
         F.expr(f"transform(cq, x -> x / CAST({_PQ_Q} AS DOUBLE))")
         .alias("centroid")))
@@ -239,7 +233,7 @@ def pq_encode(corpus: DataFrame, codebook: DataFrame,
         raise ValueError(
             f"pq_encode: ks={n_codes} > {_MAX_LITERAL_CODES} literal gate "
             "(use method='arrow' for wider books)")
-    v = _as_double(vec_col)
+    v = as_double(vec_col)
     sub_exprs = []
     for s in range(m):
         # one literal array of (dist-struct producing) centroid rows;
@@ -318,7 +312,7 @@ def _pq_encode_arrow(corpus: DataFrame, codebook: DataFrame,
     ])
     return (
         corpus.select(F.col(id_col).cast("long").alias("id"),
-                      F.expr(_as_double(vec_col)).alias("v"))
+                      F.expr(as_double(vec_col)).alias("v"))
         .mapInPandas(enc, schema=schema)
         .withColumnRenamed("id", id_col)
     )
@@ -341,7 +335,7 @@ def pq_knn(codes: DataFrame, codebook: DataFrame, queries: DataFrame,
     m, sub_dim, _ = _codebook_rows(codebook)
     q = queries.select(
         F.col(id_col).alias("query_id"),
-        F.expr(_as_double(vec_col)).alias("qv"),
+        F.expr(as_double(vec_col)).alias("qv"),
     )
     lut = (
         q.crossJoin(F.broadcast(codebook))

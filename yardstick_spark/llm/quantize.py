@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .similarity import _as_double
+from ..sparkutil import as_double
 
 
 def quantization_params(vecs: DataFrame, vec_col: str = "embedding",
@@ -37,7 +37,7 @@ def quantization_params(vecs: DataFrame, vec_col: str = "embedding",
     """Per-dimension (pos, mn, mx) over the corpus — dim rows.  One
     scan; the groupBy key cardinality is the vector dimension."""
     return (
-        vecs.select(F.posexplode(F.expr(_as_double(vec_col)))
+        vecs.select(F.posexplode(F.expr(as_double(vec_col)))
                     .alias("pos", "val"))
         .groupBy("pos")
         .agg(F.min("val").alias("mn"), F.max("val").alias("mx"))
@@ -62,7 +62,7 @@ def quantize_expr(vec_col: str, mns: str, rngs: str) -> str:
     floor(v + 0.5) is midpoint-up rounding on the non-negative scaled
     value — identical in Spark and DuckDB (whose round() differ in
     half-even vs half-up corners)."""
-    v = _as_double(vec_col)
+    v = as_double(vec_col)
     return (
         f"transform({v}, (x, i) -> CAST(IF(element_at({rngs}, i + 1) = 0D, 0, "
         f"greatest(-128, least(127, "

@@ -31,6 +31,8 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..sparkutil import cache
+
 # same normalization every text operator here uses (llm/text.py _NORM)
 _NORM = "regexp_replace(lower(trim({c})), '\\\\s+', ' ')"
 
@@ -106,8 +108,6 @@ def bm25_scores(docs: DataFrame, query: str, text_col: str = "text",
     per-query regex+split chain entirely; scores are bit-identical by
     construction.  The caller owns the contract that the stored tokens
     match the normalization (lower, whitespace-collapse, no empties)."""
-    from .dedup import _cache
-
     terms = _query_terms(query)
     if not terms:
         raise ValueError("query has no terms after normalization")
@@ -119,7 +119,7 @@ def bm25_scores(docs: DataFrame, query: str, text_col: str = "text",
     # than duplicate a non-cheap alias — inlining `toks` into every
     # column re-ran the regex+split per column (measured 5.5 s vs
     # 1.5 s for the 10x projection)
-    per_doc = _cache(docs.select(
+    per_doc = cache(docs.select(
         F.col(id_col).alias("id"), tk_src.alias("tk")
     ).select(
         "id",
@@ -215,9 +215,7 @@ def _bm25_batch_parts(docs: DataFrame, text_col: str, id_col: str,
     tk_src = (F.col(tokens_col) if tokens_col is not None
               else F.expr(toks))
     base = docs.select(F.col(id_col).alias("id"), tk_src.alias("tk"))
-    from .dedup import _cache
-
-    tf = _cache(
+    tf = cache(
         base.select("id", F.expr("size(tk)").alias("dl"),
                     F.explode("tk").alias("term"))
         .groupBy("id", "term")

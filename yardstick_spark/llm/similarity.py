@@ -22,6 +22,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..sparkutil import as_double, local_input, parquet_rows
+
 
 def _cosine(a: str, b: str) -> str:
     """Cosine similarity of two array<double> columns as a SQL expr —
@@ -30,10 +32,6 @@ def _cosine(a: str, b: str) -> str:
     na = f"sqrt(aggregate({a}, 0D, (s, v) -> s + v * v))"
     nb = f"sqrt(aggregate({b}, 0D, (s, v) -> s + v * v))"
     return f"({dot} / ({na} * {nb}))"
-
-
-def _as_double(col: str) -> str:
-    return f"transform({col}, x -> CAST(x AS DOUBLE))"
 
 
 def _length_groups(*arrays):
@@ -154,11 +152,11 @@ def brute_force_knn(corpus: DataFrame, queries: DataFrame, k: int = 10,
     nrm = "sqrt(aggregate({v}, 0D, (s, v) -> s + v * v))"
     q = queries.select(
         F.col(id_col).alias("query_id"),
-        F.expr(_as_double(vec_col)).alias("qv"),
+        F.expr(as_double(vec_col)).alias("qv"),
     ).withColumn("qn", F.expr(nrm.format(v="qv")))
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
-        F.expr(_as_double(vec_col)).alias("cv"),
+        F.expr(as_double(vec_col)).alias("cv"),
     ).withColumn("cn", F.expr(nrm.format(v="cv")))
     dot = "aggregate(zip_with(qv, cv, (x, y) -> x * y), 0D, (s, v) -> s + v)"
     sim = F.expr(f"({dot} / nullif(qn * cn, 0D))")
@@ -379,7 +377,7 @@ def _collect_query_matrix(queries: DataFrame, id_col: str, vec_col: str,
 
     rows = queries.select(
         F.col(id_col).alias("__qid"),
-        F.expr(_as_double(vec_col)).alias("__qv"),
+        F.expr(as_double(vec_col)).alias("__qv"),
     ).collect()
     return _query_matrix_from_rows(
         [(r["__qid"], r["__qv"]) for r in rows], keep_null_vecs)
@@ -440,17 +438,15 @@ def _fan_out_for_queries(df: DataFrame, nq: int) -> DataFrame:
     precedent), so the target is exactly work // per-task-floor: a
     fold that cannot keep every fanned task busy stays on its few
     tasks instead of paying 32 handshakes to split a 2-second job."""
-    from .dedup import _local_input, _parquet_rows
-
     cores = df.sparkSession.sparkContext.defaultParallelism
     cur = df.rdd.getNumPartitions()
     if cur >= cores:
         return df
-    local = _local_input(df)
+    local = local_input(df)
     if local is None or local[1] <= 0:
         return df
     paths, total = local
-    rows = _parquet_rows(paths)
+    rows = parquet_rows(paths)
     if rows:
         target = min(cores,
                      1 + rows * max(nq, 1) // _FOLD_CELLS_PER_PART)
@@ -565,7 +561,7 @@ def _folded_knn(corpus: DataFrame, queries: DataFrame, k: int,
     cand = _fan_out_for_queries(
         corpus.select(
             F.col(id_col).alias("__nid"),
-            F.expr(_as_double(vec_col)).alias("__cv"),
+            F.expr(as_double(vec_col)).alias("__cv"),
         ).filter(F.col("__nid").isNotNull()), len(qids)
     ).mapInPandas(
         score,
@@ -689,7 +685,7 @@ def embedding_dedup_pairs(corpus: DataFrame, id_col: str = "vec_id",
     b = _cap_buckets(
         _spread(corpus).select(
             F.col(id_col).alias("id"),
-            F.expr(_as_double(vec_col)).alias("v"),
+            F.expr(as_double(vec_col)).alias("v"),
             F.posexplode(buckets).alias("band", "bucket"),
         ),
         ["band", "bucket"], max_bucket_size,
@@ -900,7 +896,7 @@ def lsh_bucketed_knn(corpus: DataFrame, queries: DataFrame, k: int = 10,
     nrm = "sqrt(aggregate({v}, 0D, (s, v) -> s + v * v))"
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
-        F.expr(_as_double(vec_col)).alias("cv"),
+        F.expr(as_double(vec_col)).alias("cv"),
         dots(F.col(vec_col)).alias("__ds"),
     ).select(
         "neighbor_id", "cv",
@@ -910,7 +906,7 @@ def lsh_bucketed_knn(corpus: DataFrame, queries: DataFrame, k: int = 10,
     q = (
         queries.select(
             F.col(id_col).alias("query_id"),
-            F.expr(_as_double(vec_col)).alias("qv"),
+            F.expr(as_double(vec_col)).alias("qv"),
             dots(F.col(vec_col)).alias("__ds"),
         )
         .select(
@@ -959,7 +955,7 @@ def save_lsh_index(corpus: DataFrame, path: str, id_col: str = "vec_id",
     nrm = "sqrt(aggregate({v}, 0D, (s, v) -> s + v * v))"
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
-        F.expr(_as_double(vec_col)).alias("cv"),
+        F.expr(as_double(vec_col)).alias("cv"),
         dots(F.col(vec_col)).alias("__ds"),
     ).select(
         "neighbor_id", "cv",
@@ -996,7 +992,7 @@ def knn_lsh_from_index(spark, path: str, queries: DataFrame,
     q = (
         queries.select(
             F.col(id_col).alias("query_id"),
-            F.expr(_as_double(vec_col)).alias("qv"),
+            F.expr(as_double(vec_col)).alias("qv"),
             dots(F.col(vec_col)).alias("__ds"),
         )
         .select(
@@ -1079,7 +1075,7 @@ def semantic_decontaminate(corpus: DataFrame, benchmark: DataFrame,
     qdim = Qs.shape[1]
 
     slim = corpus.select(F.col(id_col).alias("__nid"),
-                         F.expr(_as_double(vec_col)).alias("__cv"))
+                         F.expr(as_double(vec_col)).alias("__cv"))
 
     def score(it):
         for pdf in it:

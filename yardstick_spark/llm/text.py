@@ -12,6 +12,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..sparkutil import cache, portable_hash
+
 _NORM = "regexp_replace(lower(trim({c})), '\\\\s+', ' ')"
 
 
@@ -286,10 +288,8 @@ def sample_mixture(docs: DataFrame, rates: dict[str, float],
     runs, engines, and partitionings (no RNG state), and exactly
     rate-proportional in expectation.  Scan-only filter; the md5-based
     uniform hash matches the DuckDB oracle bit-for-bit."""
-    u = (
-        f"CAST(conv(substring(md5(concat('{seed}:', CAST({id_col} AS STRING))), "
-        f"1, 15), 16, 10) AS BIGINT) % 1000000"
-    )
+    u = (portable_hash(f"concat('{seed}:', CAST({id_col} AS STRING))")
+         + " % 1000000")
     if rates:
         rate = "CASE " + " ".join(
             f"WHEN {source_col} = '{s}' THEN {r!r}" for s, r in rates.items()
@@ -393,9 +393,8 @@ def sample_weighted(docs: DataFrame, k: int, weight_col: str,
     Spark executes as per-partition TakeOrdered(k) forwarding only k
     rows per task to the single merge — no full sort, no shuffle of
     the corpus."""
-    u = (f"((CAST(conv(substring(md5(concat('{seed}:', "
-         f"CAST({id_col} AS STRING))), 1, 15), 16, 10) AS BIGINT) "
-         f"% 1000000) + 1) / 1000000.0")
+    h = portable_hash(f"concat('{seed}:', CAST({id_col} AS STRING))")
+    u = f"(({h} % 1000000) + 1) / 1000000.0"
     return (
         docs.filter(F.col(weight_col).isNotNull()
                     & (F.col(weight_col) > 0))
@@ -489,11 +488,11 @@ def doc_fingerprint(docs: DataFrame, text_col: str = "text",
     (fingerprint_overlap_pairs) went quadratic-in-expression-depth
     (measured 88 s → 0.9 s at sf0.01).  The cached intermediates are
     one short array row per document."""
-    from .dedup import _cache, _spread
+    from .dedup import _spread
 
     norm = _NORM.format(c=text_col)
     words = f"filter(split(__ys_norm, ' '), t -> t <> '')"
-    hashed = _cache(
+    hashed = cache(
         _spread(docs.select(F.col(id_col), F.col(text_col).alias("__t")))
         .select(
             F.col(id_col),
@@ -506,7 +505,7 @@ def doc_fingerprint(docs: DataFrame, text_col: str = "text",
                 f"transform(transform(sequence(1, greatest(1, "
                 f"size({words}) - 3)), "
                 f"i -> concat_ws(' ', slice({words}, i, 4))), g -> "
-                f"CAST(conv(substring(md5(g), 1, 15), 16, 10) AS BIGINT))"
+                f"{portable_hash('g')})"
             ).alias("__ys_gh"),
         )
     )
@@ -629,8 +628,6 @@ def tfidf_terms(docs: DataFrame, text_col: str = "text",
     count N rides a 1-row broadcast cross join, not a collect."""
     from pyspark.sql import Window
 
-    from .dedup import _cache
-
     norm = _NORM.format(c=text_col)
     words = f"filter(split({norm}, ' '), t -> t <> '')"
     # cache barrier: tf feeds BOTH the df aggregation and the final
@@ -645,7 +642,7 @@ def tfidf_terms(docs: DataFrame, text_col: str = "text",
     # enough splits and this is a no-op
     spread_words = (f"filter(split({_NORM.format(c='__t')}, ' '), "
                     "t -> t <> '')")
-    tf = _cache(
+    tf = cache(
         _spread(docs.select(F.col(id_col).alias("id"),
                             F.col(text_col).alias("__t")))
         .select("id", F.explode(F.expr(spread_words)).alias("term"))
@@ -711,8 +708,8 @@ def _split_case_expr(id_col: str, weights: dict[str, float],
                 f"split_corpus: split name/seed {s!r} may not contain "
                 "quotes, backslashes, or control characters"
             )
-    u = (f"(CAST(conv(substring(md5(concat(CAST({id_col} AS STRING), "
-         f"'{seed}')), 1, 15), 16, 10) AS BIGINT) % 1000000) / 1000000.0")
+    h = portable_hash(f"concat(CAST({id_col} AS STRING), '{seed}')")
+    u = f"({h} % 1000000) / 1000000.0"
     expr = "CASE"
     acc = 0.0
     names = list(weights)
@@ -800,7 +797,7 @@ def decontaminate_bloom(docs: DataFrame, benchmark: DataFrame, n: int = 8,
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    from .dedup import _portable_hash, _spread
+    from .dedup import _spread
 
     bench_grams = _word_ngrams(bench_text_col or text_col, n)
 
@@ -809,7 +806,7 @@ def decontaminate_bloom(docs: DataFrame, benchmark: DataFrame, n: int = 8,
 
     pos_exprs = [
         F.expr(
-            f"pmod({_portable_hash(f_concat(i))}, {m_bits})"
+            f"pmod({portable_hash(f_concat(i))}, {m_bits})"
         ).alias(f"p{i}")
         for i in range(k_hashes)
     ]
@@ -887,8 +884,6 @@ def token_budget_select(docs: DataFrame, budget: int,
     reads)."""
     from pyspark.sql import Window
 
-    from .dedup import _cache
-
     norm = _NORM.format(c=text_col)
     n_tok = f"size(filter(split({norm}, ' '), t -> t <> ''))"
     score = (F.col(score_col) if score_col is not None
@@ -904,7 +899,7 @@ def token_budget_select(docs: DataFrame, budget: int,
     w = Window.partitionBy("pid").orderBy(
         F.col("score").desc(), F.col(id_col)
     ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    local = _cache(base.withColumn("lcum", F.sum("n").over(w)))
+    local = cache(base.withColumn("lcum", F.sum("n").over(w)))
     part_totals = (
         local.groupBy("pid").agg(F.max("lcum").alias("ptotal")).collect()
     )
@@ -951,10 +946,8 @@ def pack_sequences(docs: DataFrame, max_tokens: int,
     were computed from, silently corrupting every downstream offset.
     The cache pins the partitioning the collect saw; the final join
     reads those same materialized partitions (registered with
-    dedup._CACHED so clear_dedup_caches() releases it)."""
+    the sparkutil registry so clear_dedup_caches() releases it)."""
     from pyspark.sql import Window
-
-    from .dedup import _cache
 
     norm = _NORM.format(c=text_col)
     n_tok = f"size(filter(split({norm}, ' '), t -> t <> ''))"
@@ -968,7 +961,7 @@ def pack_sequences(docs: DataFrame, max_tokens: int,
     w = Window.partitionBy("pid").orderBy("id").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    local = _cache(toks.withColumn("lcum", F.sum("n").over(w)))
+    local = cache(toks.withColumn("lcum", F.sum("n").over(w)))
     part_totals = (
         local.groupBy("pid").agg(F.max("lcum").alias("ptotal"))
         .collect()
@@ -1187,10 +1180,10 @@ def duplicated_spans(docs: DataFrame, n: int = 8, min_count: int = 2,
     gram set, and island-merging is a per-document window over just
     the duplicated positions.  Unlike `fingerprint_overlap_pairs`
     nothing self-joins, so no degenerate-print cap is needed."""
-    from .dedup import _cache, _spread
+    from .dedup import _spread
 
     words = "filter(split(__ys_norm, ' '), t -> t <> '')"
-    hashed = _cache(
+    hashed = cache(
         _spread(docs.select(F.col(id_col), F.col(text_col).alias("__t")))
         .select(F.col(id_col),
                 F.expr(_NORM.format(c="__t")).alias("__ys_norm"))
@@ -1201,7 +1194,7 @@ def duplicated_spans(docs: DataFrame, n: int = 8, min_count: int = 2,
                 f"transform(transform(sequence(1, greatest(1, "
                 f"size({words}) - {n - 1})), "
                 f"i -> concat_ws(' ', slice({words}, i, {n}))), g -> "
-                f"CAST(conv(substring(md5(g), 1, 15), 16, 10) AS BIGINT))"
+                f"{portable_hash('g')})"
             ).alias("__ys_gh"),
         )
     )
@@ -1311,8 +1304,7 @@ def stratified_sample(docs: DataFrame, strata_cols: list[str],
     map-side partial WindowGroupLimit (each task forwards at most n
     rows per stratum it sees), so the shuffle carries
     O(strata x n x tasks) rows, never the corpus."""
-    u = (f"CAST(conv(substring(md5(concat('{seed}:', "
-         f"CAST({id_col} AS STRING))), 1, 15), 16, 10) AS BIGINT)")
+    u = portable_hash(f"concat('{seed}:', CAST({id_col} AS STRING))")
     w = (Window.partitionBy(*strata_cols)
          .orderBy(F.expr(u), F.col(id_col)))
     return (docs.withColumn("__ys_rk", F.row_number().over(w))
@@ -1336,13 +1328,13 @@ def bigram_logprob(docs: DataFrame, text_col: str = "text",
     uniform-key aggregate: per-doc bigram tf, corpus bigram counts,
     and two broadcast-friendly unigram joins — no windows, no driver
     state, token-scale everywhere."""
-    from .dedup import _cache, _spread
+    from .dedup import _spread
 
     # stage the words array behind a cache barrier (the
     # `doc_fingerprint` rule): interpreted HOF lambdas get no CSE, so
     # referencing the split(...) expression inside element_at would
     # re-split the document once PER BIGRAM POSITION — O(n^2) per doc
-    wl = _cache(
+    wl = cache(
         _spread(docs.select(F.col(id_col).alias("id"),
                             F.col(text_col).alias("__t")))
         .select("id", F.expr(
@@ -2077,9 +2069,8 @@ def dsir_sample(docs: DataFrame, target_cond: str, k: int,
     w = dsir_weights(docs, target_cond, n_buckets=n_buckets,
                      alpha=alpha, text_col=text_col, id_col=id_col,
                      hash_impl=hash_impl)
-    u = (f"((CAST(conv(substring(md5(concat('{seed}:', "
-         f"CAST({id_col} AS STRING))), 1, 15), 16, 10) AS BIGINT) "
-         f"% 999999) + 1) / 1000000.0D")
+    h = portable_hash(f"concat('{seed}:', CAST({id_col} AS STRING))")
+    u = f"(({h} % 999999) + 1) / 1000000.0D"
     return (
         w.select(
             F.col(id_col), "logw",
@@ -2119,8 +2110,6 @@ def shard_assign(docs: DataFrame, shard_tokens: int,
     the join-back share one scan."""
     from pyspark.sql import Window
 
-    from .dedup import _cache
-
     norm = _NORM.format(c=text_col)
     n_tok = f"coalesce(size(filter(split({norm}, ' '), t -> t <> '')), 0)"
     key = (f"md5(concat('{seed}:', CAST({id_col} AS STRING)))")
@@ -2136,7 +2125,7 @@ def shard_assign(docs: DataFrame, shard_tokens: int,
     w = Window.partitionBy("pid").orderBy("skey", "id").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    local = _cache(toks.withColumn("lcum", F.sum("n").over(w)))
+    local = cache(toks.withColumn("lcum", F.sum("n").over(w)))
     part_totals = (
         local.groupBy("pid").agg(F.max("lcum").alias("ptotal"))
         .collect()

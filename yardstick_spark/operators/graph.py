@@ -41,6 +41,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..sparkutil import cache, collect_if_small, register
+
 
 def pagerank(
     edges: DataFrame,
@@ -97,9 +99,6 @@ def pagerank(
     and both paths compute the identical per-iteration expressions, so
     results agree to float-sum reassociation (~1e-15; callers round
     to 6 dp).  Set `driver_max_edges=0` to force the distributed loop."""
-    from ..llm.dedup import _cache, _register  # shared cache registry —
-    # released by llm.clear_dedup_caches() like every other barrier
-
     if weight is None and "w" in edges.columns:
         weight = "w"
     w = F.col(weight).cast("double") if weight else F.lit(1.0)
@@ -136,16 +135,17 @@ def pagerank(
     # because the state is one row per distinct edge and a lost-stage
     # rerun restarts the operator; a fault-tolerant cluster deployment
     # would set a checkpoint dir and use reliable .checkpoint() instead.
-    e = _register(e.groupBy("src", "dst").agg(F.sum("w").alias("w"))
-                  .localCheckpoint(eager=True))
+    e = register(e.groupBy("src", "dst").agg(F.sum("w").alias("w"))
+                 .localCheckpoint(eager=True))
     # gated small-graph fast path — one cheap count on the checkpoint
-    if driver_max_edges and e.count() <= driver_max_edges:
-        return _pagerank_driver(e, iterations, damping)
+    rows = collect_if_small(e, driver_max_edges, count_first=True)
+    if rows is not None:
+        return _pagerank_driver(e, iterations, damping, rows)
     outw = e.groupBy("src").agg(F.sum("w").alias("outw"))
     e = e.join(outw, "src").withColumn("p", F.col("w") / F.col("outw"))
-    e = _cache(e.select("src", "dst", "p").repartition("src"))
+    e = cache(e.select("src", "dst", "p").repartition("src"))
 
-    nodes = _cache(
+    nodes = cache(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
@@ -197,11 +197,12 @@ def pagerank(
     return ranks
 
 
-def _pagerank_driver(e: DataFrame, iterations: int,
-                     damping: float) -> DataFrame:
+def _pagerank_driver(e: DataFrame, iterations: int, damping: float,
+                     rows: list) -> DataFrame:
     """numpy power iteration over a gate-checked small edge table —
     the small-graph half of `pagerank` (see its docstring for the
-    gate rationale).  `e` is the collapsed (src, dst, w) relation.
+    gate rationale).  `e` is the collapsed (src, dst, w) relation and
+    `rows` its rows, fetched by the gate.
 
     Exactly the textbook update the distributed loop evaluates:
       rank' = (1-d)/n + d * (contrib + dangling_mass / n)
@@ -211,6 +212,7 @@ def _pagerank_driver(e: DataFrame, iterations: int,
     distributed path stays ~1e-15, absorbed by callers' 6-dp rounds
     and pinned by test_pagerank_driver_gate_matches_distributed)."""
     import numpy as np
+    import pandas as pd
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     spark = e.sparkSession
@@ -218,9 +220,9 @@ def _pagerank_driver(e: DataFrame, iterations: int,
         StructField("node", e.schema["src"].dataType),
         StructField("rank", DoubleType()),
     ])
-    pdf = e.toPandas()
-    if len(pdf) == 0:
+    if not rows:
         return spark.createDataFrame([], out_schema)
+    pdf = pd.DataFrame.from_records(rows, columns=e.columns)
     nodes = sorted(set(pdf["src"]) | set(pdf["dst"]))
     idx = {v: i for i, v in enumerate(nodes)}
     n = len(nodes)
@@ -298,24 +300,21 @@ def pagerank_sql(
     return "\n".join(sql)
 
 
-def _lpa_driver(e: DataFrame, iterations: int) -> DataFrame:
+def _lpa_driver(e: DataFrame, iterations: int, rows: list) -> DataFrame:
     """Synchronous LPA over a gate-checked small edge table — the
     small-graph half of `label_propagation` (same gate pattern as
     `pagerank`'s `_pagerank_driver`).  `e` is the distinct symmetrized
-    (src, dst) relation; the update replays the distributed rounds
-    exactly: count neighbor labels per dst, adopt the most frequent,
-    ties to the SMALLEST label — all integer/dict arithmetic, so the
-    result is identical by construction (pinned by
-    test_lpa_driver_gate_matches_distributed)."""
+    (src, dst) relation and `rows` its rows, fetched by the gate; the
+    update replays the distributed rounds exactly: count neighbor
+    labels per dst, adopt the most frequent, ties to the SMALLEST
+    label — all integer/dict arithmetic, so the result is identical by
+    construction (pinned by test_lpa_driver_gate_matches_distributed)."""
     from pyspark.sql.types import StructField, StructType
 
     spark = e.sparkSession
-    pdf = e.toPandas()
     adj: dict = {}
-    # .tolist() materializes Python scalars (np.int64 rows would trip
-    # createDataFrame's type inference below)
-    for s, d in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
-        adj.setdefault(d, []).append(s)
+    for r in rows:
+        adj.setdefault(r["dst"], []).append(r["src"])
     labels = {n: n for n in adj}
     for _ in range(iterations):
         nxt = {}
@@ -364,9 +363,7 @@ def label_propagation(edges: DataFrame, iterations: int = 4,
     # cache registry for clear_dedup_caches() release, and eager at
     # CONSTRUCTION time — same lifecycle notes as pagerank's edge
     # barrier above.
-    from ..llm.dedup import _register
-
-    e = _register(
+    e = register(
         e.select(
             F.explode(F.array(
                 F.struct(F.col("src"), F.col("dst")),
@@ -388,8 +385,9 @@ def label_propagation(edges: DataFrame, iterations: int = 4,
     # milliseconds.  At data scale the gate fails after the one count
     # and the loop runs unchanged.  driver_max_edges=0 forces the
     # distributed loop.
-    if driver_max_edges and e.count() <= driver_max_edges:
-        return _lpa_driver(e, iterations)
+    rows = collect_if_small(e, driver_max_edges, count_first=True)
+    if rows is not None:
+        return _lpa_driver(e, iterations, rows)
     labels = e.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label"))
     from pyspark.sql import Window

@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..sparkutil import MH_P, portable_hash
+
 
 def dedup_ingest_stream(new_docs: DataFrame, spark, store_path: str,
                         text_col: str = "text", id_col: str = "doc_id",
@@ -37,13 +39,11 @@ def dedup_ingest_stream(new_docs: DataFrame, spark, store_path: str,
     rows.  Carrying the ~32-int signature through the (band, bhash)
     exchange costs bands×|signature| bytes per doc — bounded by the
     micro-batch, the correct trade for statelessness."""
-    from ..llm.dedup import _portable_hash, _MH_P
-
-    base = f"transform(shs, s -> pmod({_portable_hash('s')}, {_MH_P}))"
+    base = f"transform(shs, s -> pmod({portable_hash('s')}, {MH_P}))"
     sig = (
         f"transform(sequence(0, {num_hashes - 1}), i -> "
         f"array_min(transform(__ys_sh_h, "
-        f"h -> pmod((2 * i + 1) * h + i * 40503 + 1, {_MH_P}))))"
+        f"h -> pmod((2 * i + 1) * h + i * 40503 + 1, {MH_P}))))"
     )
     norm = f"regexp_replace(lower(trim({text_col})), '\\\\s+', ' ')"
     shingle = (

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..llm.pca import (_COV_PARTIAL_SCHEMA, _cov_partial_fn,
                        covariance_from_moments, merge_moment_tables)
-from ..llm.similarity import _as_double
+from ..sparkutil import as_double
 
 __all__ = ["covariance_from_moments", "merge_moment_tables",
            "latest_moments", "start_covariance_stream"]
@@ -77,7 +77,7 @@ def _batch_moments(batch_df: DataFrame, vec_col: str) -> DataFrame:
     — streamed and batch statistics are bit-identical by
     construction."""
     parts = (
-        batch_df.select(F.expr(_as_double(vec_col)).alias("v"))
+        batch_df.select(F.expr(as_double(vec_col)).alias("v"))
         .filter(F.col("v").isNotNull() & (F.size("v") > 0))
         .mapInPandas(_cov_partial_fn(), schema=_COV_PARTIAL_SCHEMA)
     )

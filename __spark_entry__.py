@@ -2234,7 +2234,7 @@ def _q_emb_jl_project(spark, sf_dir):
 
 def _q_emb_pq(spark, sf_dir):
     # product-quantization codes under the SEEDED md5 codebook (m=8
-    # subspaces x 16 codes): scan-only literal argmin encode; the
+    # subspaces x 16 codes): scan-only Arrow argmin encode; the
     # oracle re-derives codebook and codes from the same md5 calls
     from pyspark.sql import functions as F
 

@@ -132,12 +132,10 @@ def test_knn_topk_prunes_map_side(spark):
     for fn in (brute_force_knn, lsh_bucketed_knn, ivf_knn_seeded):
         df = fn(emb, q, k=10)
         assert has_partial_topk(df), f"{fn.__name__}: top-k not pruned map-side"
-        # default strategy is the folded single-scan shape: ONE
-        # mapInPandas (bucket/cell assign + score + partition top-k),
-        # no candidate join anywhere in the plan
+        # the folded single-scan shape: ONE mapInPandas (bucket/cell
+        # assign + score + partition top-k), no candidate join
+        # anywhere in the plan
         assert is_folded_scan(df), f"{fn.__name__}: not a folded scan"
-        dj = fn(emb, q, k=10, strategy="join")
-        assert has_partial_topk(dj), f"{fn.__name__}: join path lost top-k"
 
 
 def test_dedup_verification_join_broadcast_policy(spark, monkeypatch):

@@ -300,20 +300,6 @@ def test_pq_trained_degenerate_inputs(spark):
     clear_dedup_caches()
 
 
-def test_pq_encode_literal_equals_arrow(spark, corpus):
-    """The pure-JVM literal argmin and the Arrow closure path produce
-    identical codes (same rounding grid, same tie rule)."""
-    from yardstick_spark.llm import pq_codebook, pq_encode
-
-    df = _vecs(spark, corpus)
-    cb = pq_codebook(df, m=4, ks=8)
-    a = {r.vec_id: list(r.codes)
-         for r in pq_encode(df, cb, method="arrow").collect()}
-    l = {r.vec_id: list(r.codes)
-         for r in pq_encode(df, cb, method="literal").collect()}
-    assert a == l
-
-
 # ---------------------------------------------------------------------------
 # MMR re-ranking
 # ---------------------------------------------------------------------------

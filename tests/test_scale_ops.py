@@ -547,29 +547,6 @@ def test_graph_checkpoints_release_via_shared_registry(spark):
     assert not _CACHED
 
 
-def test_ivf_seeded_udf_path_matches_literal(spark, monkeypatch):
-    # the default Arrow-UDF centroid closure and the SQL-literal
-    # centroid tree (the engine-portable spec the oracles transcribe)
-    # must select the same cells/probes and therefore the same
-    # neighbor set — this parity is what licenses shipping the faster
-    # Arrow path as the default at every size
-    import yardstick_spark.llm.ivf as ivf
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.limit(5)
-    monkeypatch.setattr(ivf, "_LITERAL_CENTROID_LIMIT", 10**9)
-    lit = sorted(
-        map(tuple, ivf.ivf_knn_seeded(emb, q, k=5, n_lists=8, n_probe=3)
-            .select("query_id", "neighbor_id", "sim", "rank").collect())
-    )
-    monkeypatch.setattr(ivf, "_LITERAL_CENTROID_LIMIT", 0)
-    udf = sorted(
-        map(tuple, ivf.ivf_knn_seeded(emb, q, k=5, n_lists=8, n_probe=3)
-            .select("query_id", "neighbor_id", "sim", "rank").collect())
-    )
-    assert lit == udf
-
-
 def test_dedup_signature_store_roundtrip(spark, tmp_path):
     # persisted-store probe must find exactly the pairs the direct
     # incremental path finds, without re-reading the corpus text
@@ -956,29 +933,37 @@ def test_skew_report_values_and_null_handling(spark):
     assert rep["c1"][2] == 1
 
 
-def test_folded_knn_matches_join_path(spark):
-    # the folded single-scan kNN (queries/centroids/signs in the Arrow
-    # closure, per-partition top-k) must be BIT-IDENTICAL to the
-    # join-based reference path for every variant — same md5-parity
-    # signs, same sequential per-dimension float fold, same tie rules
-    from yardstick_spark.llm import (
-        brute_force_knn, ivf_knn_seeded, lsh_bucketed_knn,
-    )
+def test_folded_knn_matches_duckdb_oracle(spark):
+    """Every folded kNN variant (brute force, LSH, multi-probe LSH,
+    seeded IVF) returns exactly the rows of its DuckDB oracle SQL in
+    `__spark_entry__.oracle_sql()`, which shares no code with the
+    library: md5-parity signs and seeded centroids re-derived in SQL,
+    the oracle's own list_sum cosine, ROUND(sim, 4), and the
+    (sim DESC, neighbor_id) rank order.  The brute-force top-10 lists
+    hold tied sims, so a changed tie order or rounding fails it."""
+    import duckdb
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    import __spark_entry__ as entry
+    from oracle_diff import normalize
+    from yardstick_spark.llm import brute_force_knn
+
+    sf = "/root/testdata/sf0.001"
+    con = duckdb.connect()
+    con.execute("CREATE VIEW embeddings AS SELECT * FROM "
+                f"'{sf}/embeddings.parquet'")
+    qs, oracles = entry.queries(), entry.oracle_sql()
+    for key in ("sim_knn_bruteforce", "sim_knn_lsh",
+                "sim_knn_lsh_multiprobe", "sim_knn_ivf"):
+        sdf = qs[key](spark, sf)
+        rows = sdf.collect()
+        res = con.sql(oracles[key])
+        want = normalize(res.fetchall(), res.columns)
+        assert rows and normalize(rows, sdf.columns) == want, key
+        if key == "sim_knn_bruteforce":
+            sims = [(r["query_id"], r["sim"]) for r in rows]
+            assert len(set(sims)) < len(sims), "no tied sims to order"
+    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
     q = emb.filter("vec_id < 5")
-    cases = [
-        (brute_force_knn, {}),
-        (lsh_bucketed_knn, {}),
-        (lsh_bucketed_knn, {"n_probes": 3}),
-        (ivf_knn_seeded, {"n_lists": 8, "n_probe": 3}),
-    ]
-    for fn, kw in cases:
-        fold = sorted(map(tuple,
-                          fn(emb, q, k=10, strategy="fold", **kw).collect()))
-        join = sorted(map(tuple,
-                          fn(emb, q, k=10, strategy="join", **kw).collect()))
-        assert fold == join, f"{fn.__name__}{kw}: fold != join"
     # partition-stability: the per-partition top-k compaction must not
     # change the global result under any input layout
     for n in (1, 3, 32):
@@ -1054,27 +1039,34 @@ def test_folded_knn_edge_cases(spark):
     assert ivf_knn_seeded(emb, nullq, k=3).count() == 0
 
 
-def test_folded_knn_null_ids_match_join(spark):
-    # NULL corpus ids are dropped by the join path's three-valued
-    # `!=`; the folded path must agree
-    from pyspark.sql import functions as F
-
+def test_folded_knn_edge_semantics(spark):
+    """brute_force_knn on a hand-built corpus: a zero vector and a
+    shorter vector get a NULL sim and rank after every scored
+    neighbor (then by neighbor id), a NULL corpus id never appears
+    (its vector would score 1.0), a query never pairs with itself,
+    and a zero query vector gets all-NULL sims."""
     from yardstick_spark.llm import brute_force_knn
 
-    emb = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet").select(
-        "vec_id", "embedding").limit(50)
-    dirty = emb.unionByName(
-        emb.limit(1).select(F.lit(None).cast("long").alias("vec_id"),
-                            "embedding"))
-    q = emb.filter("vec_id < 3")
-    fold = sorted(map(tuple,
-                      brute_force_knn(dirty, q, k=5).collect()))
-    join = sorted(map(tuple,
-                      brute_force_knn(dirty, q, k=5,
-                                      strategy="join").collect()))
-    assert fold == join
-    assert all(r[1] is not None for r in fold)
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0]), (2, [1.0, 1.0, 0.0]),
+         (3, [0.0, 0.0, 0.0]), (4, [1.0, 0.0]),
+         (None, [1.0, 0.0, 0.0]), (5, [0.0, 1.0, 0.0])],
+        "vec_id long, embedding array<float>").coalesce(1)
+    q = corpus.filter("vec_id IN (1, 3)")
+
+    # one partition, so at k=2 the per-partition top-k prunes before
+    # the final rank window and must keep exactly the right rows
+    def knn(k):
+        return sorted(map(tuple, brute_force_knn(corpus, q, k=k)
+                          .collect()), key=lambda r: (r[0], r[3]))
+
+    assert knn(10) == [
+        (1, 2, 0.7071, 1), (1, 5, 0.0, 2), (1, 3, None, 3),
+        (1, 4, None, 4),
+        (3, 1, None, 1), (3, 2, None, 2), (3, 4, None, 3),
+        (3, 5, None, 4)]
+    assert knn(2) == [(1, 2, 0.7071, 1), (1, 5, 0.0, 2),
+                      (3, 1, None, 1), (3, 2, None, 2)]
 
 
 def test_dsir_matches_independent_references(spark):

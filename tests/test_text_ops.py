@@ -527,7 +527,7 @@ def test_semantic_dedup_within_cell_complete(spark):
     asg = assign_cells(
         emb.select(F.col("vec_id").alias("id"),
                    F.expr(_as_vec("embedding")).alias("arr")),
-        cents, 4)
+        cents)
     cos = ("round(aggregate(zip_with(a.arr, b.arr, (x, y) -> x * y), 0D, "
            "(s, v) -> s + v) / (sqrt(aggregate(a.arr, 0D, (s, v) -> "
            "s + v * v)) * sqrt(aggregate(b.arr, 0D, (s, v) -> "
@@ -610,15 +610,11 @@ def test_semantic_dedup_boundary_probe_recovers_split_pair(spark):
     assert z == w
 
 
-def test_assign_cells_boundary_literal_equals_arrow(spark, monkeypatch):
-    """The SQL-literal and Arrow paths of assign_cells_boundary agree
-    cell-for-cell (same (d2, cell) tie rule, same relative margin) —
-    the literal path is currently dormant (_LITERAL_CENTROID_LIMIT=0,
-    the Arrow-everywhere decision) but must stay correct for any
-    future re-raise of the limit.  Includes a NULL vector and an
-    exact-tie (margin 0) vector."""
-    from pyspark.sql import functions as F
-
+def test_assign_cells_boundary_cells(spark):
+    """assign_cells_boundary keeps the nearest cell, adds the runner-up
+    when the vector is within the relative margin (an exact tie, margin
+    0, probes both; ties order by the lower cell id), keeps an interior
+    vector single, and gives a NULL vector a NULL cell array."""
     import yardstick_spark.llm.ivf as ivf
 
     cents = spark.createDataFrame(
@@ -628,20 +624,13 @@ def test_assign_cells_boundary_literal_equals_arrow(spark, monkeypatch):
         [(1, [9.0, 1.0]), (2, [5.05, 4.95]), (3, [5.0, 5.0]),
          (4, None), (5, [0.0, 0.0])],
         "id long, arr array<double>")
-    arrow = {r.id: r.cells and list(r.cells) for r in
-             ivf.assign_cells_boundary(vecs, cents, 3, 0.05).collect()}
-    monkeypatch.setattr(ivf, "_LITERAL_CENTROID_LIMIT", 64)
-    lit = {r.id: r.cells and [c for c in r.cells if c is not None]
-           for r in ivf.assign_cells_boundary(vecs, cents, 3,
-                                              0.05).collect()}
-    # normalize the two NULL conventions (Arrow: NULL array; literal:
-    # array with one NULL element) to "no placeable cells"
-    norm = lambda v: v or []  # noqa: E731
-    assert {k: norm(v) for k, v in arrow.items()} \
-        == {k: norm(v) for k, v in lit.items()}
-    assert arrow[3] == [0, 1]  # exact tie: margin 0 probes both
-    assert arrow[2] == [0, 1]  # boundary vector probes runner-up
-    assert arrow[1] == [0]     # interior vector stays single
+    got = {r.id: r.cells and list(r.cells) for r in
+           ivf.assign_cells_boundary(vecs, cents, 0.05).collect()}
+    assert got[3] == [0, 1]  # exact tie: margin 0 probes both
+    assert got[2] == [0, 1]  # boundary vector probes runner-up
+    assert got[1] == [0]     # interior vector stays single
+    assert got[4] is None    # NULL vector: no placeable cell
+    assert got[5] == [0, 1]  # equidistant from all three: lowest two
 
 
 def test_semantic_dedup_verdicts_min_id_priority(spark):

@@ -94,11 +94,9 @@ from .retrieval import (  # noqa: F401
 from .similarity import (  # noqa: F401
     brute_force_knn,
     embedding_dedup_pairs,
-    lsh_bucket_expr,
     knn_lsh_from_index,
     lsh_bucketed_knn,
     save_lsh_index,
-    lsh_plane_dots_expr,
     lsh_probe_buckets_expr,
     margin_pairs,
     semantic_decontaminate,

@@ -97,21 +97,6 @@ def seed_centroids(corpus: DataFrame, id_col: str = "vec_id",
     )
 
 
-# centroid-count threshold below which assignment/probing uses the
-# SQL-literal centroid tree instead of the Arrow-UDF matmul closure.
-# Default 0: the Arrow path wins at EVERY measured size (sf0.1 ivf
-# query 1.50 s -> 1.08 s, 10x corpus 3.7 s -> 1.8 s — Spark's
-# higher-order-function lambdas evaluate interpreted per element, so
-# the literal d2 fold costs corpus x n_lists x dim interpreter steps),
-# is bit-identical to the literal path (same sequential fold; parity
-# pinned by test_ivf_seeded_udf_path_matches_literal), and above ~256
-# lists the literal tree additionally costs the driver O(n_lists*dim)
-# analysis/codegen per query.  The literal branch is kept as the
-# engine-portable spec (the DuckDB oracles transcribe it) and as the
-# no-Python-workers fallback: raise this bound to prefer it.
-_LITERAL_CENTROID_LIMIT = 0
-
-
 def _centroid_matrix(centroids: DataFrame):
     """(cells_sorted, matrix) with row i = centroid of cells_sorted[i];
     collects the (bounded, n_lists-row) centroid table and delegates to
@@ -154,8 +139,8 @@ def _sq_dists(A, mat, mat_sq):
     dims ≈ 160 GB) OOMs the executor.  ||a||^2 is dropped: constant
     per row, so argmin/ordering over cells is unchanged and we never
     compare distances across rows.  Tiny negative values from
-    cancellation don't matter for ordering ties beyond float noise,
-    matching the literal path within 1e-9."""
+    cancellation don't matter for ordering ties beyond float noise
+    (within 1e-9 of the oracles' sequential fold)."""
     import numpy as np
 
     return mat_sq[None, :] - 2.0 * (A @ mat.T)
@@ -171,10 +156,10 @@ def _assign_cell_udf(cells, mat):
     """Scan-side nearest-centroid assignment via Arrow batches; the
     centroid matrix lives in the closure, not the expression tree.
     Ties break to the lower cell id (rows are cell-sorted and argmin
-    returns the first minimum), matching the literal path's
-    struct-min rule.  NULL / empty / centroid-dim-mismatched vectors
-    get a NULL cell (dropped by the downstream equi-join on cell) —
-    never a vstack crash."""
+    returns the first minimum), the oracles' ORDER BY d2, cell rule.
+    NULL / empty / centroid-dim-mismatched vectors get a NULL cell
+    (dropped by the downstream equi-join on cell) — never a vstack
+    crash."""
     from pyspark.sql.functions import pandas_udf
 
     from .similarity import _length_groups
@@ -205,9 +190,9 @@ def _assign_cell_udf(cells, mat):
 
 def _probe_cells_udf(cells, mat, n_probe: int):
     """Scan-side probe selection: the n_probe nearest cells per query
-    vector, ordered by (d2, cell) — lexsort mirrors the literal path's
-    array_sort over (d, cell) structs.  NULL / empty / dim-mismatched
-    query vectors probe a NULL cell list (explode drops them)."""
+    vector, ordered by (d2, cell) — the oracles' ORDER BY d2, cell
+    rule.  NULL / empty / dim-mismatched query vectors probe a NULL
+    cell list (explode drops them)."""
     from pyspark.sql.functions import pandas_udf
 
     from .similarity import _length_groups
@@ -238,48 +223,22 @@ def _probe_cells_udf(cells, mat, n_probe: int):
     return probe
 
 
-_D2 = ("aggregate(zip_with({v}, s.c, (a, b) -> (a - b) * (a - b)), "
-       "0D, (acc, x) -> acc + x)")
-
-
-def _centroid_literals(cent_df: DataFrame) -> str:
-    """Comma-joined named_struct('cell', i, 'c', array(...)) literals
-    for the SQL-expression centroid path (≤ _LITERAL_CENTROID_LIMIT)."""
-    cents = sorted(
-        (int(r["cell"]), [float(x) for x in r["centroid"]])
-        for r in cent_df.collect()
-    )
-    return ", ".join(
-        f"named_struct('cell', {cell}, 'c', array("
-        + ", ".join(f"{x!r}D" for x in vec) + "))"
-        for cell, vec in cents
-    )
-
-
-def assign_cells(vectors: DataFrame, cent_df: DataFrame, n_lists: int,
+def assign_cells(vectors: DataFrame, cent_df: DataFrame,
                  vec_col: str = "arr") -> DataFrame:
     """`vectors` plus a `cell` column: nearest centroid by squared
     euclidean distance, ties to the lower cell id.  Scan-side with zero
-    extra shuffle either way: the SQL-literal expression up to
-    `_LITERAL_CENTROID_LIMIT` cells (engine-portable — the DuckDB
-    oracles reproduce it bit-exactly), the Arrow-UDF matmul path above
-    (closure-carried centroid matrix, O(1) driver-side plan cost).
-    Shared by `ivf_knn_seeded` and `semantic_dedup_pairs`."""
-    if n_lists > _LITERAL_CENTROID_LIMIT:
-        cells, mat = _centroid_matrix(cent_df)
-        return vectors.withColumn(
-            "cell", _assign_cell_udf(cells, mat)(F.col(vec_col))
-        )
-    cent_lits = _centroid_literals(cent_df)
-    # nearest cell: lexicographic struct min over (d2, cell) — ties
-    # to the lower cell id, same rule the SQL oracle applies.
-    assign = (f"array_min(transform(array({cent_lits}), s -> "
-              f"struct({_D2.format(v=vec_col)} AS d, s.cell AS cell))).cell")
-    return vectors.withColumn("cell", F.expr(assign))
+    extra shuffle: an Arrow UDF whose closure carries the centroid
+    matrix (`_assign_cell_udf`), so driver-side plan cost is O(1) in
+    the centroid count.  Assignments equal the `asg` CTE of the
+    `sim_knn_ivf` / `dedup_semantic` DuckDB oracles.  Used by
+    `semantic_dedup_pairs`."""
+    cells, mat = _centroid_matrix(cent_df)
+    return vectors.withColumn(
+        "cell", _assign_cell_udf(cells, mat)(F.col(vec_col)))
 
 
 def assign_cells_boundary(vectors: DataFrame, cent_df: DataFrame,
-                          n_lists: int, boundary_eps: float,
+                          boundary_eps: float,
                           vec_col: str = "arr") -> DataFrame:
     """`vectors` plus a `cells` ARRAY column: the nearest centroid's
     cell, PLUS the second-nearest when the vector sits within the
@@ -292,39 +251,21 @@ def assign_cells_boundary(vectors: DataFrame, cent_df: DataFrame,
     <= (1 + boundary_fraction) membership blow-up — still one scan,
     no extra shuffle beyond the slightly larger group-by.
 
-    Ordering is (d, cell) lexicographic on both paths (ties to the
-    lower cell id), the same rule as `assign_cells`; NULL/empty
-    vectors yield a NULL-only array (dropped by callers' NotNull
-    filter after the explode)."""
-    if n_lists > _LITERAL_CENTROID_LIMIT:
-        cells, mat = _centroid_matrix(cent_df)
-        return vectors.withColumn(
-            "cells",
-            _assign_cells_boundary_udf(cells, mat, boundary_eps)(
-                F.col(vec_col)))
-    cent_lits = _centroid_literals(cent_df)
-    srt = (f"array_sort(transform(array({cent_lits}), s -> "
-           f"struct({_D2.format(v=vec_col)} AS d, s.cell AS cell)))")
-    pick = (f"IF(size(__srt) >= 2 AND __srt[1].d - __srt[0].d <= "
-            f"{boundary_eps}D * (__srt[0].d + __srt[1].d), "
-            "array(__srt[0].cell, __srt[1].cell), "
-            "array(__srt[0].cell))")
-    return (
-        vectors.withColumn(
-            "__srt",
-            F.expr(f"IF({vec_col} IS NULL OR size({vec_col}) = 0, "
-                   f"NULL, {srt})"))
-        .withColumn(
-            "cells",
-            F.expr(f"IF(__srt IS NULL, array(CAST(NULL AS INT)), "
-                   f"{pick})"))
-        .drop("__srt")
-    )
+    Ordering is (d, cell) lexicographic (ties to the lower cell id),
+    the same rule as `assign_cells`; NULL / empty / dim-mismatched
+    vectors yield a NULL array (dropped by callers' NotNull filter
+    after the explode).  Expected cells are pinned in
+    tests/test_text_ops.py::test_assign_cells_boundary_cells."""
+    cells, mat = _centroid_matrix(cent_df)
+    return vectors.withColumn(
+        "cells",
+        _assign_cells_boundary_udf(cells, mat, boundary_eps)(
+            F.col(vec_col)))
 
 
 def _assign_cells_boundary_udf(cells, mat, eps: float):
-    """Arrow twin of the literal boundary-probe expression (closure-
-    carried centroid matrix, same (d2, cell) lexsort tie rule)."""
+    """Arrow boundary-probe assignment for `assign_cells_boundary`
+    (closure-carried centroid matrix, (d2, cell) lexsort tie rule)."""
     from pyspark.sql.functions import pandas_udf
 
     from .similarity import _length_groups
@@ -403,104 +344,63 @@ def _ivf_probe_map(Q, cells, mat, n_probe: int):
 
 def ivf_knn_seeded(corpus: DataFrame, queries: DataFrame, k: int = 10,
                    id_col: str = "vec_id", vec_col: str = "embedding",
-                   n_lists: int = 16, n_probe: int = 4,
-                   strategy: str = "fold") -> DataFrame:
+                   n_lists: int = 16, n_probe: int = 4) -> DataFrame:
     """Approximate top-k cosine neighbors over a deterministically
     seeded IVF index (see `seed_centroids`).
 
     The centroid table is bounded by n_lists, so cell assignment and
     probe selection run scan-side with zero extra shuffle (exactly how
-    a deployed IVF index ships its centroids to every executor).  Up to
-    `_LITERAL_CENTROID_LIMIT` cells the centroids are embedded as a
-    SQL literal (whole-stage codegen, engine-portable — the DuckDB
-    oracle reproduces it bit-exactly); above that, the same assignment
-    runs as an Arrow pandas_udf whose closure carries the centroid
-    matrix, so driver-side plan analysis stays O(1) in n_lists — the
-    production path for 4k-64k-list indexes.  The final top-k is a
-    rank window that Spark executes with a map-side partial
-    WindowGroupLimit — each scan task forwards at most k rows per
-    query, so no reducer sees corpus-proportional input.
-
-    strategy="fold" (default): cell assignment, probe lookup, scoring
-    and the per-partition top-k all run inside ONE mapInPandas over
-    the corpus (`similarity._folded_knn`) with the centroid matrix and
-    query matrix in the closure — no candidate join, no separate
-    assignment stage; identical assignments (same `_sq_dists` +
-    first-argmin rule) and bit-identical sims.  strategy="join": the
-    assign + probe-join reference path.
+    a deployed IVF index ships its centroids to every executor): cell
+    assignment, probe lookup, scoring and the per-partition top-k all
+    run inside ONE mapInPandas over the corpus
+    (`similarity._folded_knn`) with the centroid matrix and query
+    matrix in the closure, so driver-side plan analysis stays O(1) in
+    n_lists — the production path for 4k-64k-list indexes.  No
+    candidate join, no separate assignment stage; the final top-k
+    rank window sees <= n_partitions * k rows per query.  Output
+    equals the `sim_knn_ivf` DuckDB oracle (same `_sq_dists` +
+    first-argmin assignment, same sequential cosine fold).
     """
-    cent_df = seed_centroids(corpus, id_col, vec_col, n_lists)
-    if strategy == "fold":
-        from .similarity import _folded_knn, _query_matrix_from_rows
+    from .similarity import _folded_knn, _query_matrix_from_rows
 
-        # ONE combined driver action for both closure inputs: the
-        # n_lists-row centroid aggregate and the (small by contract)
-        # query rows ride the same tagged union, so the fold path pays
-        # exactly two Spark jobs total — this collect and the scan —
-        # instead of three (separate centroid + query collects each
-        # paid a full job-launch floor; measured on the 10x corpus the
-        # merge removes ~0.2 s of pure scheduling).  Both legs keep
-        # their original shaping expressions, so the parsed rows are
-        # identical to the two-collect formulation (parity pinned by
-        # test_ivf_seeded_udf_path_matches_literal and
-        # test_folded_knn_matches_join_path).
-        qid_t = queries.schema[id_col].dataType
-        cent_leg = cent_df.select(
-            F.lit(0).alias("__tag"),
-            F.col("cell").cast("int").alias("cell"),
-            F.col("centroid").alias("centroid"),
-            F.lit(None).cast(qid_t).alias("__qid"),
-            F.lit(None).cast("array<double>").alias("__qv"),
-        )
-        q_leg = queries.select(
-            F.lit(1).alias("__tag"),
-            F.lit(None).cast("int").alias("cell"),
-            F.lit(None).cast("array<double>").alias("centroid"),
-            F.col(id_col).alias("__qid"),
-            F.expr(_as_vec(vec_col)).alias("__qv"),
-        )
-        rows = cent_leg.unionByName(q_leg).collect()
-        cells, mat = _centroid_matrix_from_rows(
-            (int(r["cell"]), [float(x) for x in r["centroid"]])
-            for r in rows
-            if r["__tag"] == 0 and r["centroid"] is not None
-            and len(r["centroid"]) > 0)
-        qids, Q, qn = _query_matrix_from_rows(
-            [(r["__qid"], r["__qv"]) for r in rows if r["__tag"] == 1],
-            keep_null_vecs=False)
-        qmap = _ivf_probe_map(Q, cells, mat, n_probe) if qids else {}
-        return _folded_knn(corpus, queries, k, id_col, vec_col, 4,
-                           _ivf_key_closure(cells, mat), qmap,
-                           qids, Q, qn)
-    corpus_sel = corpus.select(
-        F.col(id_col).alias("id"),
-        F.expr(_as_vec(vec_col)).alias("arr"),
+    cent_df = seed_centroids(corpus, id_col, vec_col, n_lists)
+    # ONE combined driver action for both closure inputs: the
+    # n_lists-row centroid aggregate and the (small by contract)
+    # query rows ride the same tagged union, so the fold path pays
+    # exactly two Spark jobs total — this collect and the scan —
+    # instead of three (separate centroid + query collects each
+    # paid a full job-launch floor; measured on the 10x corpus the
+    # merge removes ~0.2 s of pure scheduling).  Both legs keep
+    # their original shaping expressions, so the parsed rows are
+    # identical to the two-collect formulation.
+    qid_t = queries.schema[id_col].dataType
+    cent_leg = cent_df.select(
+        F.lit(0).alias("__tag"),
+        F.col("cell").cast("int").alias("cell"),
+        F.col("centroid").alias("centroid"),
+        F.lit(None).cast(qid_t).alias("__qid"),
+        F.lit(None).cast("array<double>").alias("__qv"),
     )
-    query_sel = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.expr(_as_vec(vec_col)).alias("qv"),
+    q_leg = queries.select(
+        F.lit(1).alias("__tag"),
+        F.lit(None).cast("int").alias("cell"),
+        F.lit(None).cast("array<double>").alias("centroid"),
+        F.col(id_col).alias("__qid"),
+        F.expr(_as_vec(vec_col)).alias("__qv"),
     )
-    assigned = assign_cells(corpus_sel, cent_df, n_lists, "arr")
-    if n_lists > _LITERAL_CENTROID_LIMIT:
-        cells, mat = _centroid_matrix(cent_df)
-        probes = query_sel.withColumn(
-            "cell",
-            F.explode(_probe_cells_udf(cells, mat, n_probe)(F.col("qv"))),
-        )
-    else:
-        cent_lits = _centroid_literals(cent_df)
-        probe = (f"transform(slice(array_sort(transform(array({cent_lits}), "
-                 f"s -> struct({_D2.format(v='qv')} AS d, s.cell AS cell))), "
-                 f"1, {n_probe}), p -> p.cell)")
-        probes = query_sel.withColumn("cell", F.explode(F.expr(probe)))
-    scored = _score_probed(assigned, probes, "arr")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    rows = cent_leg.unionByName(q_leg).collect()
+    cells, mat = _centroid_matrix_from_rows(
+        (int(r["cell"]), [float(x) for x in r["centroid"]])
+        for r in rows
+        if r["__tag"] == 0 and r["centroid"] is not None
+        and len(r["centroid"]) > 0)
+    qids, Q, qn = _query_matrix_from_rows(
+        [(r["__qid"], r["__qv"]) for r in rows if r["__tag"] == 1],
+        keep_null_vecs=False)
+    qmap = _ivf_probe_map(Q, cells, mat, n_probe) if qids else {}
+    return _folded_knn(corpus, queries, k, id_col, vec_col, 4,
+                       _ivf_key_closure(cells, mat), qmap,
+                       qids, Q, qn)
 
 
 def _score_probed(assigned: DataFrame, probes: DataFrame,
@@ -509,8 +409,8 @@ def _score_probed(assigned: DataFrame, probes: DataFrame,
     Norms are folded once per vector SCAN-SIDE on each input, so the
     per-candidate expression is the dot product alone — the norm folds
     are interpreted HOF lambdas, and folding them per candidate tripled
-    the inner-loop interpreter steps (same measurement as
-    brute_force_knn).  The probe side broadcasts; same left-to-right FP
+    the inner-loop interpreter steps (measured 1.61 s -> 1.02 s on
+    10^5 pairs).  The probe side broadcasts; same left-to-right FP
     fold, bit-identical results."""
     nrm = "sqrt(aggregate({v}, 0D, (s, v) -> s + v * v))"
     a = assigned.withColumn("cn", F.expr(nrm.format(v=vec_name)))

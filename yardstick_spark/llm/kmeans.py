@@ -14,12 +14,12 @@ are bit-identical across partitionings AND engines (the
 - argmin ties break to the smaller cell id.
 
 Scale shape: each Lloyd iteration is ONE corpus scan (the centroid
-table is a <=k-row SQL literal — the `ivf.assign_cells` trick, folded
-by Catalyst into whole-stage codegen, no join) plus one k-row
-aggregate collected to the driver.  The corpus never shuffles at
-vector grain; the only shuffle per iteration carries k * dim partial
-sums per partition.  `iters` is fixed (no convergence collect), so the
-whole fit is `iters + 1` scans over a cached quantized projection.
+table is a <=k-row SQL literal, folded by Catalyst into whole-stage
+codegen, no join) plus one k-row aggregate collected to the driver.
+The corpus never shuffles at vector grain; the only shuffle per
+iteration carries k * dim partial sums per partition.  `iters` is
+fixed (no convergence collect), so the whole fit is `iters + 1`
+scans over a cached quantized projection.
 """
 
 from __future__ import annotations

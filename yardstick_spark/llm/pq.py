@@ -22,11 +22,11 @@ property-gated in tests, not assumed.
 100 TB design:
 - `pq_codebook` is one groupBy-min over ids per subspace (map-side
   combined, m * ks result rows) plus a join back for the donor rows.
-- `pq_encode` is SCAN-ONLY: the m * ks * (d/m) codebook floats become
-  SQL literals in an argmin expression per subspace (1k literals at
-  m=8, ks=16, d=64 — far below the 16k-literal Janino blowup the IVF
-  centroid path hit, which is why ks is gated at 64 here).  No
-  shuffle, no Python; codes travel as array<int>.
+- `pq_encode` is SCAN-ONLY: the m * ks * (d/m)-float codebook rides
+  the closure of one mapInPandas (one numpy argmin pass per Arrow
+  batch) — no shuffle, no codebook-sized expression for the driver
+  to analyze; codes travel as array<int> and equal the `emb_pq`
+  DuckDB oracle's.
 - `pq_knn` broadcasts the query-side LUT (q * m * ks rows) against ONE
   scan of the (id, sub, code) explosion; the per-pair work is a hash
   probe + sum, and the top-k is the same map-side WindowGroupLimit as
@@ -42,12 +42,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..sparkutil import as_double, cache, portable_hash
-
-# literal-tree gate: m * ks * sub_dim doubles are inlined into the
-# encode expression; 64 codes x 16 sub_dim = 1024 literals per sub is
-# fine, but a 4k-code book would re-create ivf.py's codegen blowup
-_MAX_LITERAL_CODES = 64
-
 
 def _hash_cell(sub_col: str, id_col: str, ks: int) -> str:
     """Portable md5 bucket of f"{sub}:{id}" — same derivation family as
@@ -205,66 +199,19 @@ def _codebook_rows(codebook: DataFrame) -> tuple[int, int, dict]:
 
 
 def pq_encode(corpus: DataFrame, codebook: DataFrame,
-              id_col: str = "vec_id", vec_col: str = "embedding",
-              method: str = "arrow") -> DataFrame:
+              id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """(id_col, codes array<int> length m): per subspace, the code of
     the nearest centroid by squared L2 on the subspace slice, distance
     rounded to 6 dp BEFORE the argmin, ties to the lower code — the
-    rounding grid is what makes the Arrow, literal-SQL, and DuckDB
-    paths agree on every code despite different summation orders.
+    rounding grid is what makes these codes equal the `emb_pq` DuckDB
+    oracle's despite different summation orders.
 
-    method='arrow' (default): the m*ks*(d/m)-float book rides the UDF
-    closure; one numpy pass per batch.  Scan-only, no shuffle, and —
-    unlike the literal path — no giant expression for the driver to
-    analyze and Janino to compile (measured: the 1k-literal argmin
-    tree costs ~1 s of driver time per query at ANY data size, which
-    dominates small-batch encodes and is pure waste at large ones).
-
-    method='literal': the book is inlined as SQL literals into a pure
-    codegen argmin (gated at 64 codes) — zero Python on the hot path,
-    for pipelines that must stay JVM-only."""
-    if method == "arrow":
-        return _pq_encode_arrow(corpus, codebook, id_col, vec_col)
-    if method != "literal":
-        raise ValueError(f"pq_encode: unknown method {method!r}")
-    m, sub_dim, book = _codebook_rows(codebook)
-    n_codes = max(c for _, c in book) + 1
-    if n_codes > _MAX_LITERAL_CODES:
-        raise ValueError(
-            f"pq_encode: ks={n_codes} > {_MAX_LITERAL_CODES} literal gate "
-            "(use method='arrow' for wider books)")
-    v = as_double(vec_col)
-    sub_exprs = []
-    for s in range(m):
-        # one literal array of (dist-struct producing) centroid rows;
-        # the struct array_min orders by (d, c) — ties to lower code —
-        # and references the literal matrix exactly once
-        cells = []
-        for c in range(n_codes):
-            cent = book.get((s, c))
-            if cent is None:
-                continue  # empty cell: unreachable code
-            arr = "array(" + ", ".join(repr(x) + "D" for x in cent) + ")"
-            cells.append(f"named_struct('c', {c}, 'v', {arr})")
-        cb_s = "array(" + ", ".join(cells) + ")"
-        sq = (
-            f"aggregate(zip_with(slice({v}, {s * sub_dim} + 1, {sub_dim}), "
-            "e.v, (x, y) -> (x - y) * (x - y)), 0D, (acc, t) -> acc + t)"
-        )
-        sub_exprs.append(
-            f"array_min(transform({cb_s}, "
-            f"e -> named_struct('d', round({sq}, 6), 'c', e.c))).c"
-        )
-    codes = "array(" + ", ".join(sub_exprs) + ")"
-    return corpus.select(
-        F.col(id_col), F.expr(codes).alias("codes"))
-
-
-_ENC_SCHEMA = "id long, codes array<int>"
-
-
-def _pq_encode_arrow(corpus: DataFrame, codebook: DataFrame,
-                     id_col: str, vec_col: str) -> DataFrame:
+    The m*ks*(d/m)-float book rides the mapInPandas closure; one numpy
+    pass per batch.  Scan-only, no shuffle, and no giant expression
+    for the driver to analyze and Janino to compile (measured: a
+    1k-literal argmin tree cost ~1 s of driver time per query at ANY
+    data size).  Vectors whose length is not m * sub_dim are
+    skipped."""
     from pyspark.sql.types import (ArrayType, IntegerType, LongType,
                                    StructField, StructType)
 

@@ -32,9 +32,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, functions as F
 
 from ..sparkutil import cache
-
-# same normalization every text operator here uses (llm/text.py _NORM)
-_NORM = "regexp_replace(lower(trim({c})), '\\\\s+', ' ')"
+from .text import _NORM
 
 
 def _query_terms(query: str) -> list[str]:
@@ -561,9 +559,9 @@ def hybrid_search(docs: DataFrame, embeddings: DataFrame, query: str,
     returned as (id_col, rrf, n_lists, rank).
 
     The lexical leg is `bm25_scores` (scan-side tf, no shuffle); the
-    dense leg is the folded single-scan kNN (`brute_force_knn`,
-    strategy='fold': the query vector rides the Arrow closure, only
-    n_partitions * k candidate rows ever shuffle).  Fusion sees two
+    dense leg is the folded single-scan kNN (`brute_force_knn`: the
+    query vector rides the Arrow closure, only n_partitions * k
+    candidate rows ever shuffle).  Fusion sees two
     <= fetch_k row lists.  `embeddings` ids must share the document id
     space (vec_id == doc_id in the test corpus)."""
     from .similarity import brute_force_knn

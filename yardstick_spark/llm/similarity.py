@@ -1,19 +1,18 @@
 """Approximate-nearest-neighbor search over an embedding column
 (`array<float>`).
 
-Baseline: brute-force cosine top-k — a broadcast join of the (small)
-query set against the corpus, dot products computed JVM-side with
-`zip_with`/`aggregate` (no Python in the hot path), then a per-query
-top-k window.  Scale path: LSH bucketing by random-hyperplane signs so
-each query only scans its bucket (+ optional multi-probe neighbors).
+Brute-force cosine top-k, LSH (random-hyperplane buckets, optional
+multi-probe) and seeded IVF (`ivf.ivf_knn_seeded`) share one
+operator: a single mapInPandas over the corpus (`_folded_knn`) that
+buckets or cell-assigns each Arrow batch, scores it against the
+closure-carried query matrix, and keeps a per-partition top-k.
 
-At 100 TB: the corpus side stays partitioned and queries broadcast, so
-scoring never shuffles corpus rows.  The final `row_number() <= k`
-filter is executed by Spark as a map-side partial WindowGroupLimit
-(InferWindowGroupLimit): each scan task locally sorts and forwards at
-most k rows per query, so the top-k shuffle moves <= n_tasks * k rows
-per query — no reducer sees corpus-proportional input (asserted in
-tests/test_plans.py).
+At 100 TB: the corpus side stays partitioned and queries ride the
+closure, so scoring never shuffles corpus rows.  The final
+`row_number() <= k` filter is executed by Spark as a map-side partial
+WindowGroupLimit (InferWindowGroupLimit) over the <= n_tasks * k rows
+per query the fold forwards — no reducer sees corpus-proportional
+input (asserted in tests/test_plans.py).
 """
 
 from __future__ import annotations
@@ -25,22 +24,13 @@ from pyspark.sql import DataFrame, Window, functions as F
 from ..sparkutil import as_double, local_input, parquet_rows
 
 
-def _cosine(a: str, b: str) -> str:
-    """Cosine similarity of two array<double> columns as a SQL expr —
-    single left-to-right fold, deterministic FP order."""
-    dot = f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (s, v) -> s + v)"
-    na = f"sqrt(aggregate({a}, 0D, (s, v) -> s + v * v))"
-    nb = f"sqrt(aggregate({b}, 0D, (s, v) -> s + v * v))"
-    return f"({dot} / ({na} * {nb}))"
-
-
 def _length_groups(*arrays):
     """Group batch rows by (shared) vector length: yields (dim, sel)
     index groups for rows where every array has the same non-zero
     length; rows with a NULL, empty, or length-mismatched vector are
     simply not yielded (callers leave their output slot as None).
-    Shared by the three Arrow UDFs below so NULL handling and ragged
-    grouping have exactly one implementation."""
+    Shared by every Arrow UDF and fold in this package so NULL
+    handling and ragged grouping have exactly one implementation."""
     import numpy as np
 
     def l(row):
@@ -76,138 +66,34 @@ def _md5_signs(dim: int, n_planes: int, band_seeds: tuple) -> "object":
     return S
 
 
-def _cosine_udf():
-    """Arrow-vectorized cosine with the SAME sequential per-dimension
-    fold as `_cosine` (dot and norms accumulated left-to-right in
-    float64), so results are bit-identical to the SQL expression and
-    the DuckDB oracles.  Exists because the HOF lambdas in `_cosine`
-    are interpreted per element — at 10^5+ candidate pairs the
-    verification fold dominates wall clock; this is one numpy pass.
-    NULL / length-mismatched pairs yield NULL (dropped by any threshold
-    predicate, matching the zip_with SQL path — NaN would PASS a >=
-    filter under Spark's NaN-is-largest ordering)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        import numpy as np
-
-        n = len(a)
-        out = np.empty(n, dtype=object)
-        out[:] = None
-        if n == 0:
-            return pd.Series(out)
-        aa, bb = a.to_numpy(), b.to_numpy()
-        for dim, sel in _length_groups(aa, bb):
-            A = np.vstack(aa[sel]).astype(np.float64)
-            B = np.vstack(bb[sel]).astype(np.float64)
-            dot = np.zeros(sel.size)
-            na = np.zeros(sel.size)
-            nb = np.zeros(sel.size)
-            for i in range(dim):
-                dot += A[:, i] * B[:, i]
-                na += A[:, i] * A[:, i]
-                nb += B[:, i] * B[:, i]
-            denom = np.sqrt(na) * np.sqrt(nb)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                vals = dot / denom
-            # zero-norm vectors: 0/0 -> NaN, which would PASS a
-            # `sim >= t` filter under Spark's NaN-is-largest ordering;
-            # mask to NULL like the length-mismatch rows
-            for j, v, d in zip(sel, vals, denom):
-                out[j] = float(v) if d > 0 else None
-        return pd.Series(out)
-
-    return cos
-
-
 def brute_force_knn(corpus: DataFrame, queries: DataFrame, k: int = 10,
                     id_col: str = "vec_id", vec_col: str = "embedding",
-                    round_to: int | None = 4,
-                    strategy: str = "fold") -> DataFrame:
+                    round_to: int | None = 4) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
     Returns (query_id, neighbor_id, sim, rank).  `queries` is expected
-    small (it is broadcast / closure-carried); self-matches excluded.
+    small (it is closure-carried); self-matches excluded.
 
-    strategy="fold" (default): ONE mapInPandas over the corpus scores
-    every Arrow batch against the closure-carried query matrix and
-    keeps a per-partition top-k, so the only shuffle moves
-    <= n_partitions * k rows per query (see `_folded_knn`; sims are
-    bit-identical to the join path).  strategy="join": the broadcast
-    join + per-pair SQL fold + rank window — kept as the pure-SQL
-    reference both paths are asserted equal against.
+    ONE mapInPandas over the corpus scores every Arrow batch against
+    the closure-carried query matrix and keeps a per-partition top-k,
+    so the only shuffle moves <= n_partitions * k rows per query (see
+    `_folded_knn`; sims equal the `sim_knn_bruteforce` DuckDB oracle).
     """
-    if strategy == "fold":
-        qids, Q, qn = _collect_query_matrix(
-            queries, id_col, vec_col, keep_null_vecs=True)
-        return _folded_knn(corpus, queries, k, id_col, vec_col,
-                           round_to, None, None, qids, Q, qn)
-    # norms are precomputed SCAN-SIDE on each input (once per vector),
-    # so the per-pair expression is the dot product alone — Spark's
-    # HOF lambdas evaluate interpreted per element, and folding both
-    # norms per pair tripled the interpreter steps of the |corpus| ×
-    # |queries| inner loop (measured 1.61 s -> 1.02 s on 10^5 pairs).
-    # Same left-to-right FP fold, so results are bit-identical.
-    nrm = "sqrt(aggregate({v}, 0D, (s, v) -> s + v * v))"
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.expr(as_double(vec_col)).alias("qv"),
-    ).withColumn("qn", F.expr(nrm.format(v="qv")))
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.expr(as_double(vec_col)).alias("cv"),
-    ).withColumn("cn", F.expr(nrm.format(v="cv")))
-    dot = "aggregate(zip_with(qv, cv, (x, y) -> x * y), 0D, (s, v) -> s + v)"
-    sim = F.expr(f"({dot} / nullif(qn * cn, 0D))")
-    if round_to is not None:
-        sim = F.round(sim, round_to)
-    scored = (
-        c.join(F.broadcast(q))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def lsh_plane_dots_expr(vec_col: str, dim: int, n_planes: int = 8,
-                        seed: int = 42) -> str:
-    """array<double> of the vector's dot products against `n_planes`
-    {-1,+1} hyperplanes derived deterministically from
-    md5(seed, plane, dim) — reproducible across runs and engines (the
-    DuckDB oracles embed the same literals).  Precomputed driver-side:
-    the weights are constants, and inlining md5 calls into the scan
-    would re-hash n_planes*dim times per row."""
-    import hashlib
-
-    def w(p: int, i: int) -> str:
-        h = hashlib.md5(f"{seed}:{p}:{i}".encode()).hexdigest()
-        return "1D" if int(h[:15], 16) & 1 else "-1D"
-
-    plane_arrays = ", ".join(
-        "array(" + ", ".join(w(p, i) for i in range(dim)) + ")"
-        for p in range(n_planes)
-    )
-    return (
-        f"transform(array({plane_arrays}), ws -> "
-        f"aggregate(zip_with(transform({vec_col}, x -> CAST(x AS DOUBLE)), "
-        f"ws, (x, wt) -> x * wt), 0D, (s, v) -> s + v))"
-    )
+    qids, Q, qn = _collect_query_matrix(
+        queries, id_col, vec_col, keep_null_vecs=True)
+    return _folded_knn(corpus, queries, k, id_col, vec_col,
+                       round_to, None, None, qids, Q, qn)
 
 
 def _plane_dots_udf(n_planes: int, seed: int):
     """Arrow-vectorized plane-dots: array<double> of the vector's dot
-    products against the same md5-parity hyperplanes as
-    `lsh_plane_dots_expr`, with the same sequential per-dimension fold
-    (bit-identical sign bits for near-zero dots).  Replaces the
-    n_planes x dim literal expression tree, whose driver-side analysis
-    cost (~1-2 s at dim 64) dominated the kNN queries' wall clock."""
+    products against `n_planes` {-1,+1} hyperplanes derived from
+    md5(seed, plane, dim) (`_md5_signs`, the planes the DuckDB oracles
+    embed as literals), folded sequentially per dimension so
+    near-zero dots keep the oracle's sign bit.  A closure-carried sign
+    matrix instead of an n_planes x dim literal expression tree, whose
+    driver-side analysis cost (~1-2 s at dim 64) dominated the kNN
+    queries' wall clock."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<double>")
@@ -234,9 +120,9 @@ def _plane_dots_udf(n_planes: int, seed: int):
 
 def _band_buckets_udf(n_planes: int, bands: int, seed: int):
     """Arrow-vectorized UDF computing all `bands` LSH bucket ids per
-    vector in one numpy pass — bit-identical to stacking
-    `lsh_bucket_expr` per band (same md5-parity signs, same sequential
-    left-fold summation order, same `dot > 0` bit rule).
+    vector in one numpy pass — bit-identical to the DuckDB oracle's
+    per-band bucket (same md5-parity signs, same sequential left-fold
+    summation order, same `dot > 0` bit rule).
 
     Dense sign-matrix products are the one place numpy beats the SQL
     expression route here: the literal-planes form costs seconds of
@@ -252,9 +138,9 @@ def _band_buckets_udf(n_planes: int, bands: int, seed: int):
         import numpy as np
 
         # NULL / zero-length vectors get a NULL bucket array (posexplode
-        # drops them — same silently-excluded semantics as the SQL
-        # expression path); ragged lengths are grouped and hashed with
-        # their own dim-sized sign matrix instead of crashing vstack
+        # drops them, so they join no bucket); ragged lengths are
+        # grouped and hashed with their own dim-sized sign matrix
+        # instead of crashing vstack
         arr = vs.to_numpy()
         out = np.empty(len(arr), dtype=object)
         out[:] = None
@@ -288,19 +174,10 @@ def _dots_to_bucket(dots: str, n_planes: int) -> str:
     )
 
 
-def lsh_bucket_expr(vec_col: str, dim: int, n_planes: int = 8,
-                    seed: int = 42) -> str:
-    """Random-hyperplane LSH bucket id as a SQL expression: sign bits of
-    the plane dots (see `lsh_plane_dots_expr`)."""
-    return _dots_to_bucket(
-        lsh_plane_dots_expr(vec_col, dim, n_planes, seed), n_planes
-    )
-
-
 def lsh_probe_buckets_expr(dots_col: str, n_planes: int = 8,
                            n_probes: int = 1) -> str:
     """array<bigint> of `n_probes` bucket ids to search, given a column
-    holding the plane-dots array (`lsh_plane_dots_expr`): the vector's
+    holding the plane-dots array (`_plane_dots_udf`): the vector's
     own bucket first, then the buckets reached by flipping the sign bit
     of the LEAST-CONFIDENT planes (smallest |dot| — the planes the
     vector sits closest to, where its true neighbors most likely landed
@@ -319,31 +196,30 @@ def lsh_probe_buckets_expr(dots_col: str, n_planes: int = 8,
 
 
 # ---------------------------------------------------------------------------
-# Folded single-scan kNN (round 6)
+# Folded single-scan kNN
 #
-# The join-based kNN paths (broadcast query side, per-pair SQL dot
-# product, top-k window) are correct and scale-shaped, but at the
-# measured 10x point they spend their wall clock in per-pair
-# interpreted HOF lambdas plus two extra stages (bucket/cell compute,
-# candidate join).  The folded path collapses the whole read side into
-# ONE mapInPandas over the corpus: each Arrow batch is (optionally)
-# bucketed/cell-assigned with the SAME md5-parity signs / centroid
+# Every kNN operator here (brute force, LSH, seeded IVF) is ONE
+# mapInPandas over the corpus: each Arrow batch is (optionally)
+# bucketed/cell-assigned with the md5-parity signs / centroid
 # distances, scored against the closure-carried query matrix with the
-# SAME sequential per-dimension float fold (bit-identical sims), and
-# compacted to a per-partition top-k — so the only shuffle moves
+# sequential per-dimension float fold of the DuckDB oracles' list_sum,
+# and compacted to a per-partition top-k — so the only shuffle moves
 # <= n_partitions * k rows per query into the final rank window.
 # This is exactly the 100 TB shape: queries ride the closure (they are
 # small by contract), corpus rows never shuffle, and Python cost is
-# one Arrow pass.  Measured at 10x (20k x dim-64, 5 queries):
-# brute 1.33 s -> ~0.5 s, on par with single-node DuckDB.
+# one Arrow pass.  A broadcast-join formulation (per-pair interpreted
+# HOF lambdas, a bucket/cell stage, a candidate join) ran 1.6-1.9x
+# slower at 10x (20k x dim-64, 5 queries; SCALING.md "Folded
+# single-scan kNN").  Correctness reference: the `sim_knn_*` DuckDB
+# oracle SQL in `__spark_entry__.oracle_sql()`.
 # ---------------------------------------------------------------------------
 
 
 def _np_seq_dot(C, QT):
     """(n, d) x (d, q) dot products accumulated dimension-by-dimension
     (left fold) — the same float additions, in the same order, as the
-    SQL `aggregate(zip_with(...))` expression, so sims are
-    bit-identical to the join path and the DuckDB oracles."""
+    SQL `aggregate(zip_with(...))` expression and the DuckDB oracles'
+    `list_sum`, so sims are bit-identical to the oracles."""
     import numpy as np
 
     acc = np.zeros((C.shape[0], QT.shape[1]))
@@ -366,13 +242,12 @@ def _np_seq_norm(C):
 def _collect_query_matrix(queries: DataFrame, id_col: str, vec_col: str,
                           keep_null_vecs: bool):
     """Driver-side (qids, Q, qn) for the folded kNN paths.  The query
-    side is small by contract (it broadcasts in the join paths); here
-    it rides the Arrow closure instead.  NULL / empty query vectors:
-    the brute-force SQL path still emits top-k rows for them with NULL
-    sims (every candidate sim is NULL), which a zero row reproduces
-    (denominator 0 -> sim NULL); the LSH/IVF paths drop them (their
-    probe explode yields no rows), so callers pass keep_null_vecs
-    accordingly."""
+    side is small by contract and rides the Arrow closure.  NULL /
+    empty query vectors: brute force emits top-k rows for them with
+    NULL sims (every candidate sim is NULL, as in the oracle's
+    cross join), which a zero row reproduces (denominator 0 -> sim
+    NULL); LSH/IVF drop them (they have no bucket or cell to probe),
+    so callers pass keep_null_vecs accordingly."""
     import numpy as np
 
     rows = queries.select(
@@ -483,9 +358,11 @@ def _folded_knn(corpus: DataFrame, queries: DataFrame, k: int,
     `key_closure(dim, C) -> int64[n]` assigns each batch row a bucket /
     cell (None = score every row against every query); `qsel_by_key`
     maps key -> np.array of query indices probing it (None for brute).
-    Sims use the same sequential per-dimension fold as the SQL join
-    path — outputs are bit-identical (asserted in
-    tests/test_scale_ops.py::test_folded_knn_matches_join_path)."""
+    Sims use the same sequential per-dimension fold as the DuckDB
+    oracles — outputs equal them row for row (asserted in
+    tests/test_scale_ops.py::test_folded_knn_matches_duckdb_oracle;
+    the NULL-sim, zero-norm and NULL-id edges in
+    test_folded_knn_edge_semantics)."""
     import numpy as np
 
     schema = _knn_result_schema(corpus, queries, id_col)
@@ -523,14 +400,14 @@ def _folded_knn(corpus: DataFrame, queries: DataFrame, k: int,
                         with np.errstate(divide="ignore",
                                          invalid="ignore"):
                             sim = S / denom
-                        sim[denom <= 0] = np.nan  # SQL x/0 -> NULL
+                        sim[denom <= 0] = np.nan  # x/0 -> NULL sim
                         if round_to is not None:
                             sim = np.round(sim, round_to)
                     else:
-                        # dim-mismatched (query, corpus) pairs: the SQL
-                        # zip_with pads with NULLs -> sim NULL; keep
+                        # dim-mismatched (query, corpus) pairs: sim
+                        # NULL (SQL zip_with pads with NULLs); keep
                         # the candidates so queries with < k same-dim
-                        # matches rank them exactly like the join path
+                        # matches rank them last, after every scored one
                         sim = np.full((rsel.size, qsel.size), np.nan)
                     f = pd.DataFrame({
                         "query_id": np.repeat(qids_arr[qsel], rsel.size),
@@ -551,13 +428,12 @@ def _folded_knn(corpus: DataFrame, queries: DataFrame, k: int,
                     .groupby("query_id", sort=False).head(k))
         if best is not None:
             # nullable Float64 so NaN (NULL-sim candidates) arrives as
-            # SQL NULL, matching the join path's division semantics
+            # SQL NULL, not as a NaN that would rank first
             best["sim"] = best["sim"].astype("Float64")
             yield best
 
-    # NULL corpus ids: the join path's `query_id != neighbor_id` is
-    # three-valued SQL (NULL -> dropped); pandas `!=` would keep them,
-    # so filter here to stay bit-identical on dirty data
+    # NULL corpus ids: SQL's three-valued `query_id <> neighbor_id`
+    # drops them; pandas `!=` would keep them, so filter here
     cand = _fan_out_for_queries(
         corpus.select(
             F.col(id_col).alias("__nid"),
@@ -585,9 +461,10 @@ def _allpairs_verifier(threshold: float, group_col: str | None = None):
     fold, emitting only pairs whose RAW sim could still round up to
     `threshold` (margin 5e-5; the exact ROUND(.,4)-then-compare happens
     SQL-side so HALF_UP semantics match the DuckDB oracles).  The fold
-    is the same sequential per-dimension accumulation as `_cosine_udf`,
-    so results are bit-identical to the per-pair SQL path.  Row-chunked
-    (1024), so one task's memory is O(chunk × group), not O(group²).
+    is the same sequential per-dimension accumulation as `_np_seq_dot`,
+    so results are bit-identical to the oracles' per-pair cosine.
+    Row-chunked (1024), so one task's memory is O(chunk × group), not
+    O(group²).
     `group_col` (if given) is passed through as a constant output
     column — used by `semantic_dedup_pairs` to keep the cell id."""
     import numpy as np
@@ -607,7 +484,7 @@ def _allpairs_verifier(threshold: float, group_col: str | None = None):
             if n < 2:
                 continue
             # sequential per-dimension fold — the same float additions,
-            # in the same order, as _cosine_udf / the SQL aggregate()
+            # in the same order, as _np_seq_dot / the SQL aggregate()
             nrm = np.zeros(n)
             for d in range(dm):
                 nrm += A[:, d] * A[:, d]
@@ -734,9 +611,9 @@ def semantic_dedup_pairs(corpus: DataFrame, id_col: str = "vec_id",
     cell id.  The default 0.0 is exact single assignment (the
     bit-oracled `dedup_semantic` contract).
 
-    100 TB shape: centroid assignment is scan-side (SQL literal or
-    Arrow-UDF closure — `ivf.assign_cells`), the only shuffle is the
-    cell group-by carrying each vector once, and verification is the
+    100 TB shape: centroid assignment is scan-side (Arrow-UDF closure
+    — `ivf.assign_cells`), the only shuffle is the cell group-by
+    carrying each vector once, and verification is the
     shared chunked matrix fold (`_allpairs_verifier`) so sub-threshold
     pairs never enter an exchange.  Degenerate cells are bounded by
     n_lists sizing (cells ≈ corpus / n_lists; raise n_lists to shrink
@@ -756,14 +633,13 @@ def semantic_dedup_pairs(corpus: DataFrame, id_col: str = "vec_id",
         from .ivf import assign_cells_boundary
 
         assigned = (
-            assign_cells_boundary(vectors, cent_df, n_lists,
-                                  boundary_eps)
+            assign_cells_boundary(vectors, cent_df, boundary_eps)
             .select(F.explode("cells").alias("cell"), "id",
                     F.col("arr").alias("v"))
             .filter(F.col("cell").isNotNull())
         )
     else:
-        assigned = assign_cells(vectors, cent_df, n_lists).filter(
+        assigned = assign_cells(vectors, cent_df).filter(
             F.col("cell").isNotNull()
         ).select("cell", "id", F.col("arr").alias("v"))
     pairs = assigned.groupBy("cell").applyInPandas(
@@ -813,7 +689,7 @@ def _lsh_key_closure(n_planes: int, seed: int):
     """Worker-side bucket assignment for the folded LSH path: the same
     md5-parity signs and sequential dimension fold as
     `_plane_dots_udf` + `_dots_to_bucket`, so bucket ids are
-    bit-identical to the SQL/UDF path."""
+    bit-identical to `save_lsh_index` and the DuckDB oracles."""
     def key(dim, C):
         import numpy as np
 
@@ -856,8 +732,7 @@ def _lsh_probe_map(Q, n_planes: int, seed: int, n_probes: int):
 def lsh_bucketed_knn(corpus: DataFrame, queries: DataFrame, k: int = 10,
                      id_col: str = "vec_id", vec_col: str = "embedding",
                      n_planes: int = 8, seed: int = 42,
-                     n_probes: int = 1,
-                     strategy: str = "fold") -> DataFrame:
+                     n_probes: int = 1) -> DataFrame:
     """ANN via random-hyperplane LSH: corpus and queries are bucketed by
     the sign pattern of `n_planes` pseudo-random hyperplanes (derived
     deterministically from md5(seed, plane, dim) so the bucketing is
@@ -867,73 +742,24 @@ def lsh_bucketed_knn(corpus: DataFrame, queries: DataFrame, k: int = 10,
     the buckets reached by flipping its least-confident sign bits
     (see `lsh_probe_buckets_expr`) — recall rises with n_probes at
     n_probes x candidate cost, corpus-side layout unchanged (the probe
-    explode happens on the small broadcast query side only).
+    set is computed on the small closure-carried query side only).
 
-    Recall < 1.0 by design; at scale the bucket join replaces the full
-    cross product with ~n_probes*n/2^n_planes candidates per query.
+    Recall < 1.0 by design; each query scores only the
+    ~n_probes*n/2^n_planes corpus rows in its probed buckets.
 
-    strategy="fold" (default): bucket assignment, probe lookup, scoring
-    and the per-partition top-k all run inside ONE mapInPandas over the
-    corpus (`_folded_knn`) — no candidate join, no separate bucket
-    stage; bit-identical output.  strategy="join": the bucket-join
-    reference path.
+    Bucket assignment, probe lookup, scoring and the per-partition
+    top-k all run inside ONE mapInPandas over the corpus
+    (`_folded_knn`) — no candidate join, no separate bucket stage.
+    Output equals the `sim_knn_lsh` / `sim_knn_lsh_multiprobe` DuckDB
+    oracles.
     """
-    if strategy == "fold":
-        qids, Q, qn = _collect_query_matrix(
-            queries, id_col, vec_col, keep_null_vecs=False)
-        qmap = (_lsh_probe_map(Q, n_planes, seed, n_probes)
-                if qids else {})
-        return _folded_knn(corpus, queries, k, id_col, vec_col, 4,
-                           _lsh_key_closure(n_planes, seed), qmap,
-                           qids, Q, qn)
-    # plane dots via one Arrow UDF (dim derived per batch, signs cached
-    # per worker); bucketing and probe-bit flips stay as cheap SQL over
-    # the n_planes-element dots array — no dim-sized literal tree, no
-    # dim-probe job
-    # norms precomputed scan-side (see brute_force_knn): the per-pair
-    # expression in the bucket join is the dot product alone
-    dots = _plane_dots_udf(n_planes, seed)
-    nrm = "sqrt(aggregate({v}, 0D, (s, v) -> s + v * v))"
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.expr(as_double(vec_col)).alias("cv"),
-        dots(F.col(vec_col)).alias("__ds"),
-    ).select(
-        "neighbor_id", "cv",
-        F.expr(nrm.format(v="cv")).alias("cn"),
-        F.expr(_dots_to_bucket("__ds", n_planes)).alias("bucket"),
-    )
-    q = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.expr(as_double(vec_col)).alias("qv"),
-            dots(F.col(vec_col)).alias("__ds"),
-        )
-        .select(
-            "query_id", "qv",
-            F.expr(nrm.format(v="qv")).alias("qn"),
-            F.explode(F.expr(
-                lsh_probe_buckets_expr("__ds", n_planes, n_probes)
-            )).alias("bucket"),
-        )
-    )
-    dot = ("aggregate(zip_with(qv, cv, (x, y) -> x * y), 0D, "
-           "(s, v) -> s + v)")
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id", "neighbor_id",
-            F.round(F.expr(f"({dot} / (qn * cn))"), 4).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    qids, Q, qn = _collect_query_matrix(
+        queries, id_col, vec_col, keep_null_vecs=False)
+    qmap = (_lsh_probe_map(Q, n_planes, seed, n_probes)
+            if qids else {})
+    return _folded_knn(corpus, queries, k, id_col, vec_col, 4,
+                       _lsh_key_closure(n_planes, seed), qmap,
+                       qids, Q, qn)
 
 
 def save_lsh_index(corpus: DataFrame, path: str, id_col: str = "vec_id",
